@@ -13,8 +13,12 @@ driver state.
 
 Job structure (SURVEY.md §3/§4.3):
 
-1. profile        — raw frame: types (plans/profile.py, HLL distincts —
-                    the type rules never need exact counts) + total rows
+1. profile        — raw frame, or its deterministic 1/k hash sample
+                    (``profile_sample_mod``): types only (plans/profile.py,
+                    HLL distincts — the type rules never need exact
+                    counts). A sample that comes back empty or with a
+                    parse ratio near the 0.7 type threshold is re-profiled
+                    over the full frame.
 2. fused stats    — ONE action over the cleaned base serving both former
                     jobs 2 and 3: the stacked category/speculative-mode
                     groupBy is the collected plan (full value counts for
@@ -28,9 +32,11 @@ Job structure (SURVEY.md §3/§4.3):
                     pre-stats aggregates (per-column null counts, text
                     mean lengths driving the conditional whitespace
                     collapse, numeric medians — exact interpolating,
-                    pandas parity) ride the same scan as an ``observe``.
-                    A rare dedicated mode job covers columns whose
-                    cardinality exceeded the speculation bound.
+                    pandas parity) and the exact row count ride the same
+                    scan as an ``observe``. This action also materializes
+                    the persisted cleaned base. A rare dedicated mode job
+                    covers columns whose cardinality exceeded the
+                    speculation bound.
 3. outlier stats  — imputed numerics: mean, stddev_samp (= pandas ddof=1),
                     exact percentiles 0.05/0.95. Outlier COUNTS ride an
                     ``observe`` on the pre-dedup node (filled by the first
@@ -47,15 +53,19 @@ caller's terminal action. At 100 TB additionally switch ``exact_stats``
 off — medians/percentiles go approximate (partial-aggregable, no exact
 sort-based percentile state) — and the data plane is unchanged.
 
-The persisted cleaned-base projection is tracked class-level: a new
-``transform()`` releases the previous pipeline's cache, and ``release()``
-frees it explicitly, so repeated runs never accumulate cached plans.
+Once the types are known, the cleaned base — one narrow column per input
+column, the parse work done once — is persisted (MEMORY_AND_DISK, so it
+degrades to spill rather than OOM) and every stats job reads it. It is
+tracked class-level: a new ``transform()`` releases the previous
+pipeline's cache, and ``release()`` frees it explicitly, so repeated runs
+never accumulate cached plans.
 """
 
 from __future__ import annotations
 
 from typing import Any
 
+from pyspark import StorageLevel
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -68,8 +78,11 @@ from mini_etl_project_spark.functions.cleaning import (
 from mini_etl_project_spark.plans.profile import (
     CATEGORICAL,
     DATE,
+    NC_PREFIX,
     NUMERIC,
+    PD_PREFIX,
     ColumnProfile,
+    prepare_parse_frame,
     profile_frame_and_count,
 )
 
@@ -107,10 +120,8 @@ class AutoETLPipeline:
         outlier_z: float = 3.0,
         exact_stats: bool = True,
         eager_summary: bool = True,
-        cache_intermediate: bool = True,
         assume_partitioned: bool = False,
         profile_sample_mod: int | None = None,
-        dedup_digest: bool = False,
     ) -> None:
         self.compat = compat
         self.missing_threshold = missing_threshold
@@ -118,19 +129,17 @@ class AutoETLPipeline:
         self.exact_stats = exact_stats
         self.eager_summary = eager_summary
         # SURVEY §4.3 approx-profile switch, OFF by default (None/<=1 =
-        # exact full-scan profile, reference-parity). k >= 2: R7 type
+        # profile every row, reference-parity). k >= 2: R7 type
         # detection runs over the deterministic row sample
         # pmod(xxhash64(all columns), k) == 0 (~1/k of rows —
-        # content-keyed, partitioning-independent), and the parse layer
-        # is then built ONLY for the columns whose detected type will
-        # read it. Every DATA decision downstream stays exact: fill
-        # values (median/mode), outlier scalars, null-ratio drops, and
-        # the rare-category threshold all read full-scan jobs; only the
-        # type decisions and the two profile-count report lines
-        # ("invalid values: N", speculation bound) become
-        # sample-extrapolated estimates. The 100x sweep measured the
-        # full-scan regex profile at 136-213 s — this is the switch that
-        # cuts it.
+        # content-keyed, partitioning-independent). Every DATA decision
+        # downstream stays exact: fill values (median/mode), outlier
+        # scalars, null-ratio drops, and the rare-category threshold all
+        # read full-scan jobs; only the type decisions and the two
+        # profile-count report lines ("invalid values: N", speculation
+        # bound) become sample-extrapolated estimates. The 100x sweep
+        # measured the full-scan regex profile at 136-213 s — this is the
+        # switch that cuts it.
         self.profile_sample_mod = profile_sample_mod
         # The degenerate-partitioning probe (ensure_parallelism) physically
         # plans the input frame (~0.8 s of driver time on expression-heavy
@@ -138,24 +147,6 @@ class AutoETLPipeline:
         # session.load_table — which widens degenerate scans itself — can
         # declare that and skip the re-probe.
         self.assume_partitioned = assume_partitioned
-        # R17 dedup key strategy (VERDICT r10 ask #3). False (default):
-        # plain dropDuplicates() — the exchange and both hash-agg levels
-        # key on the full wide row. True: key on a 16-byte md5 digest of
-        # the row instead, so partial/final agg hashing and equality
-        # compare 16 bytes rather than every column. Survivor-set parity
-        # is exact: to_json keeps field names (null patterns cannot
-        # collide across columns) and numeric -0.0 is normalized to 0.0
-        # before hashing to mirror dropDuplicates' float normalization.
-        # Collision risk: md5 is 128-bit — P(any collision) at n rows is
-        # ~n²/2^129; at 10^12 rows (beyond 100 TB of this data) that is
-        # ~10^-15, far below any hardware-error floor. Measurement:
-        # SCALE_VALIDATION.md round-11 "digest-dedup experiment".
-        self.dedup_digest = dedup_digest
-        # The stats jobs (2–5) all re-evaluate the raw scan + cleaning
-        # expressions; persisting the input across them trades memory/disk
-        # for repeated parse work. MEMORY_AND_DISK, so it degrades to
-        # spill (not OOM) at scale; switch off for one-pass-budget runs.
-        self.cache_intermediate = cache_intermediate
         self.column_types: dict[str, str] = {}
         self.cleaning_report: dict[str, list[str]] = {"global": []}
         self.data_summary: dict[str, Any] = {}
@@ -164,7 +155,7 @@ class AutoETLPipeline:
         self._obs_filled = False
 
     #: Sampled parse ratios within this distance of the 0.7 type
-    #: threshold force the exact full-scan profile (see transform).
+    #: threshold force a full-frame re-profile (see transform).
     _TYPE_RATIO_BAND = 0.05
 
     @classmethod
@@ -186,8 +177,10 @@ class AutoETLPipeline:
 
     # Cached cleaned-base projections live here so sequential pipelines
     # (bench loops, notebook re-runs) never accumulate cached plans: each
-    # transform() releases every earlier pipeline's cache. Concurrent
-    # pipelines on one session should set cache_intermediate=False.
+    # transform() releases every earlier pipeline's cache. Two pipelines
+    # running concurrently on one session therefore evict each other's
+    # cache — a lost cache only recomputes the cleaning pass, so this
+    # costs speed, never correctness.
     _LIVE_CACHES: list[DataFrame] = []
 
     def release(self) -> None:
@@ -237,108 +230,55 @@ class AutoETLPipeline:
             self.cleaning_report[c] = []
         self.data_summary = {}
 
-        # Single-scan layout (round 5): the profile's expensive parse
-        # expressions ARE the cleaners' values, so both read one persisted
-        # wide projection — raw columns plus per-string-column parse
-        # layers (__pd__ date chain / __pn__ numeric mirror / __nc__ full
-        # numeric cleaner, the last speculative). The profile aggregation
-        # doubles as the cache materializer; the cleaned base re-selects
-        # parsed columns from cache. Net at scale: ONE scan of the source
-        # instead of two, and the 16-format date chain runs once.
-        from mini_etl_project_spark.plans.profile import (
-            NC_PREFIX,
-            PD_PREFIX,
-            prepare_parse_frame,
-            profile_frame_and_count,
-            profile_prepared_and_count,
-        )
-
-        k = self.profile_sample_mod or 0
-        sampled_profile = k > 1
-        sample_rows = 0
-        if sampled_profile:
-            # Approx mode, job 1: profile a deterministic ~1/k row sample
-            # of the RAW frame (content-keyed hash — independent of
-            # partitioning, stable across runs). Type rules are ratio
-            # thresholds, which the sample estimates without bias;
-            # distinct counts only feed coarse bounds (<50 categorical,
-            # speculation cap) and never overcount under sampling.
+        # Job 1 profiles the raw frame — or, with k >= 2, a deterministic
+        # ~1/k row sample of it (content-keyed hash: independent of
+        # partitioning, stable across runs). Type rules are ratio
+        # thresholds, which the sample estimates without bias; distinct
+        # counts only feed coarse bounds (<50 categorical, speculation
+        # cap) and never overcount under sampling. Its row count covers
+        # only the profiled rows; the exact n_rows arrives with the fused
+        # stats job below.
+        k = max(1, self.profile_sample_mod or 1)
+        sample = df
+        if k > 1:
             sample = df.filter(
                 F.pmod(F.xxhash64(*[F.col(c) for c in df.columns]), F.lit(k))
                 == 0
             )
-            profiles, sample_rows = profile_frame_and_count(
-                sample, exact_distinct=False
-            )
-            if sample_rows == 0:
-                # degenerate tiny input: fall back to the exact profile
-                sampled_profile = False
-            elif self._sample_ratio_near_threshold(profiles):
-                # Safety band (ADVICE r12): the R7 type rules compare
-                # parse ratios against a strict 0.7 threshold. When a
-                # sampled ratio lands inside ±0.05 of it, the sample
-                # can no longer guarantee the same side as the full
-                # scan — fall back to the exact profile so the type
-                # decision (and thus the output schema) is
-                # sample-independent by construction. Real data sits at
-                # ~0.0/~1.0; the band only trips on adversarial mixes.
-                sampled_profile = False
-        if sampled_profile:
-            types = {c: profiles[c].logical_type for c in df.columns}
-            wide, parsed = prepare_parse_frame(
-                df,
-                compat=self.compat,
-                date_cols={c for c, t in types.items() if t == DATE},
-                numeric_cols={c for c, t in types.items() if t == NUMERIC},
-            )
-        else:
-            wide, parsed = prepare_parse_frame(df, compat=self.compat)
-        if self.cache_intermediate:
-            from pyspark import StorageLevel
-
-            # blocking=True: a lazily-evicted predecessor cache competes
-            # for executor memory with THIS run's jobs — measured 5-15 s
-            # run-to-run jitter at sf0.1 from the resulting GC churn;
-            # blocking eviction holds a steady ~5 s. The wait itself is
-            # block-drop bookkeeping, not I/O.
-            for cached in AutoETLPipeline._LIVE_CACHES:
-                cached.unpersist(blocking=True)
-            AutoETLPipeline._LIVE_CACHES.clear()
-            # Under a sampled profile the types are already known, so
-            # nothing downstream ever reads the wide frame directly — the
-            # cleaned base (one narrow column per input column) is the
-            # only consumer. Persist THAT below instead of the wide
-            # raw+parse-layer projection (guide §5: cache only what the
-            # downstream jobs actually read — r13; the wide persist
-            # carried every raw string twice and re-evaluated the text
-            # cleaners on every downstream job). The exact-profile path
-            # keeps the wide persist: the profile job must materialize
-            # the parse layers before any type is known.
-            if not sampled_profile:
-                wide = wide.persist(StorageLevel.MEMORY_AND_DISK)
-                AutoETLPipeline._LIVE_CACHES.append(wide)
-                self._cached_base = wide
-
-        if not sampled_profile:
-            # Job 1: profile → logical types (+ total rows, same job); the
-            # action also materializes the persisted wide frame.
-            profiles, n_rows = profile_prepared_and_count(
-                wide, df.columns, parsed
-            )
-        else:
-            # exact row count arrives with the fused stats job below (the
-            # sampled profile's count covers only ~1/k of the rows)
-            n_rows = -1
+        profiles, sample_rows = profile_frame_and_count(sample)
+        if k > 1 and (
+            sample_rows == 0 or self._sample_ratio_near_threshold(profiles)
+        ):
+            # An empty sample (degenerate tiny input) cannot type
+            # anything. Safety band (ADVICE r12): the R7 type rules
+            # compare parse ratios against a strict 0.7 threshold; when a
+            # sampled ratio lands inside ±0.05 of it, the sample can no
+            # longer guarantee the same side as the full scan. Either
+            # way, re-profile every row so the type decision (and thus
+            # the output schema) is sample-independent by construction.
+            # Real data sits at ~0.0/~1.0; the band only trips on
+            # adversarial mixes.
+            k = 1
+            profiles, sample_rows = profile_frame_and_count(df)
         self.column_types = {c: profiles[c].logical_type for c in df.columns}
         for c in df.columns:
             self.cleaning_report[c].append(
                 f"detected column type: {self.column_types[c]}"
             )
 
-        # Cleaned-base expressions over the wide frame: date/numeric
-        # columns read their precomputed parse layer; text/categorical
-        # cleaners are cheap char scans (btrim/nullif/initcap) evaluated
-        # per downstream read of the cache.
+        # Cleaned base: the parse layer is built ONLY for the columns
+        # whose detected type reads it (date chain for date-typed
+        # strings, numeric cleaner for numeric-typed strings) — the 100 TB
+        # lever: the regex parses never run over columns that won't use
+        # them. Text/categorical cleaners are cheap char scans.
+        wide, parsed = prepare_parse_frame(
+            df,
+            compat=self.compat,
+            date_cols={c for c, t in self.column_types.items() if t == DATE},
+            numeric_cols={
+                c for c, t in self.column_types.items() if t == NUMERIC
+            },
+        )
         pset = set(parsed)
         base_exprs: dict[str, Column] = {}
         for c in df.columns:
@@ -358,12 +298,22 @@ class AutoETLPipeline:
             else:  # text and unknown both take the text cleaner (:255-256)
                 base_exprs[c] = clean_text(c, collapse_whitespace=False)
         base_df = wide.select(*[expr.alias(c) for c, expr in base_exprs.items()])
-        if self.cache_intermediate and sampled_profile:
-            from pyspark import StorageLevel
 
-            base_df = base_df.persist(StorageLevel.MEMORY_AND_DISK)
-            AutoETLPipeline._LIVE_CACHES.append(base_df)
-            self._cached_base = base_df
+        # Persist the narrow cleaned base — the only frame every stats job
+        # reads (guide §5: cache only what the downstream jobs actually
+        # read), materialized by the fused stats job below.
+        # blocking=True: a lazily-evicted predecessor cache competes for
+        # executor memory with THIS run's jobs — measured 5-15 s
+        # run-to-run jitter at sf0.1 from the resulting GC churn;
+        # blocking eviction holds a steady ~5 s. The wait itself is
+        # block-drop bookkeeping, not I/O.
+        for cached in AutoETLPipeline._LIVE_CACHES:
+            cached.unpersist(blocking=True)
+        AutoETLPipeline._LIVE_CACHES.clear()
+        base_df = base_df.persist(StorageLevel.MEMORY_AND_DISK)
+        AutoETLPipeline._LIVE_CACHES.append(base_df)
+        self._cached_base = base_df
+
         base: dict[str, Column] = {c: F.col(c) for c in df.columns}
 
         # Jobs 2+3 FUSED into one action: the stacked category/mode groupBy
@@ -387,16 +337,12 @@ class AutoETLPipeline:
         # Under a 1/k sampled profile, a high-cardinality column's sampled
         # distinct count is ~distinct/k (near-unique values mostly appear
         # once), so the speculation cap scales down with it.
-        spec_bound = (
-            max(1, self._SPECULATE_MAX_DISTINCT // k)
-            if sampled_profile
-            else self._SPECULATE_MAX_DISTINCT
-        )
-        # Sampled-profile gating (r12, guide §1.2 "don't compute things you
+        spec_bound = max(1, self._SPECULATE_MAX_DISTINCT // k)
+        # Profile-count gating (r12, guide §1.2 "don't compute things you
         # throw away"): a column's median/mode is READ only when the
-        # cleaned column has nulls. Under a sampled profile the sample's
-        # parse counts estimate that for numeric/date columns (cleaned
-        # null ⇔ parse failure ∨ raw null): when every sampled row parsed,
+        # cleaned column has nulls. The profiled rows' parse counts
+        # estimate that for numeric/date columns (cleaned null ⇔ parse
+        # failure ∨ raw null): when every profiled row parsed,
         # skip the speculative median (an exact-percentile/approx-sketch
         # agg per numeric column — the single most expensive term of the
         # fused observe) and the date column's speculative mode rows. The
@@ -405,7 +351,7 @@ class AutoETLPipeline:
         # job covers dates and the dedicated median job below covers
         # numerics — same exact values, one extra (rare) job.
         est_clean_full: set[str] = set()
-        if sampled_profile and sample_rows:
+        if sample_rows:
             for c in df.columns:
                 t = self.column_types[c]
                 ok = (
@@ -447,8 +393,7 @@ class AutoETLPipeline:
             skip_median=est_clean_full,
             spec_outlier=spec_outlier,
         )
-        if sampled_profile:
-            n_rows = rows_total  # exact, from the full-scan fused job
+        n_rows = rows_total  # exact, from the full-scan fused job
 
         # Finalize cleaning expressions (on top of the cleaned base:
         # whitespace collapse after trim/nullify ≡ the reference's order).
@@ -482,9 +427,9 @@ class AutoETLPipeline:
                 else:
                     mode_needed.append(c)
         if med_missing:
-            # The sample estimated zero cleaned-nulls but the full scan
+            # The profile estimated zero cleaned-nulls but the full scan
             # found some: compute the skipped medians exactly, one
-            # dedicated agg (rare — only on a sample/full disagreement).
+            # dedicated agg (rare — only on a profile/full disagreement).
             row = base_df.agg(
                 *[
                     (
@@ -515,10 +460,9 @@ class AutoETLPipeline:
             else:
                 leftover.append(c)
         if leftover:
-            _, extra = self._category_and_mode_stats(
-                base_df, {}, {c: cleaned[c] for c in leftover}
+            top1.update(
+                self._mode_stats(base_df, {c: cleaned[c] for c in leftover})
             )
-            top1.update(extra)
 
         # Rare-value merge (:114-124) over the collected counts.
         threshold = max(2, 0.01 * n_rows)  # :117
@@ -545,15 +489,12 @@ class AutoETLPipeline:
         for c in df.columns:
             t = self.column_types[c]
             if t == NUMERIC:
-                if sampled_profile:
-                    # raw-null count extrapolated from the 1/k sample —
-                    # the one report number the approx profile estimates
-                    orig_na = min(
-                        null_count[c],
-                        (sample_rows - profiles[c].non_null) * k,
-                    )
-                else:
-                    orig_na = n_rows - profiles[c].non_null
+                # raw-null count extrapolated from the 1/k sample — the
+                # one report number a sampled profile estimates (exactly
+                # n_rows - non_null when k = 1)
+                orig_na = min(
+                    null_count[c], (sample_rows - profiles[c].non_null) * k
+                )
                 self.cleaning_report[c].append(
                     f"cleaned numeric column, invalid values: {null_count[c] - orig_na}"
                 )
@@ -667,27 +608,7 @@ class AutoETLPipeline:
         self._obs_filled = False
         observed = base_df.observe(self._observation, *obs_metrics)
         projected = observed.select(*[imputed[c].alias(c) for c in kept])
-        self._pre_dedup = projected
-        if self.dedup_digest:
-            # Dedup on a 16-byte row digest instead of the wide row (see
-            # __init__). -0.0 → 0.0 on numerics mirrors dropDuplicates'
-            # float normalization; NaN renders stably as "NaN" in
-            # to_json, and null fields are dropped WITH their names, so
-            # the encoding stays injective per schema.
-            fields = []
-            for c in kept:
-                col = F.col(c)
-                if self.column_types[c] == NUMERIC:
-                    col = F.when(col == 0.0, F.lit(0.0)).otherwise(col)
-                fields.append(col.alias(c))
-            digest = F.unhex(F.md5(F.to_json(F.struct(*fields))))
-            result = (
-                projected.withColumn("__row_digest", digest)
-                .dropDuplicates(["__row_digest"])
-                .drop("__row_digest")
-            )
-        else:
-            result = projected.dropDuplicates()
+        result = projected.dropDuplicates()
 
         if self.eager_summary:
             self.create_data_summary(result)  # job 6; also fills the observation
@@ -715,15 +636,6 @@ class AutoETLPipeline:
 
     # -- helpers (one job each) --------------------------------------------
 
-    def _profile_with_count(
-        self, df: DataFrame
-    ) -> tuple[dict[str, ColumnProfile], int]:
-        # HLL distincts always: the type rules compare the distinct count
-        # against coarse thresholds (50 / 30 % ratio), where HLL's ~2 %
-        # error is immaterial — and the exact path costs a whole extra
-        # expression-free job (multi-column COUNT(DISTINCT) → Expand).
-        return profile_frame_and_count(df, exact_distinct=False)
-
     def _pre_stats_aggs(
         self,
         base: dict[str, Column],
@@ -731,8 +643,8 @@ class AutoETLPipeline:
         skip_median: set[str] | None = None,
         spec_outlier: set[str] | None = None,
     ) -> list[Column]:
-        # exact row count rides for free; it replaces the profile job's
-        # count when the profile ran on a sample
+        # the exact row count rides for free (a sampled profile's count
+        # covers only ~1/k of the rows)
         aggs: list[Column] = [F.count(F.lit(1)).alias("__rows_total")]
         for c, expr in base.items():
             aggs.append(F.sum(expr.isNull().cast("long")).alias(f"{c}__null"))
@@ -749,7 +661,7 @@ class AutoETLPipeline:
             if c in (spec_outlier or ()):
                 # Speculative outlier-stat ride (r13, guide §1.2 "don't
                 # run a whole job for what an existing scan can carry"):
-                # when the sampled profile estimates a numeric column
+                # when the profile estimates a numeric column
                 # fully clean, its imputed expression IS the cleaned base
                 # column (no median fill), so the outlier scalars can
                 # ride this same traversal. The full-scan null count
@@ -881,72 +793,35 @@ class AutoETLPipeline:
             out_stats(obs.get),
         )
 
-    def _category_and_mode_stats(
-        self,
-        df: DataFrame,
-        cat_base: dict[str, Column],
-        mode_cols: dict[str, Column],
-    ) -> tuple[dict[str, list[tuple[str, int]]], dict[str, str]]:
-        """One stacked groupBy job serving the rare-value merge AND the
-        mode fills: every (value, count) row for categorical columns
-        (bounded — the profiler types a column categorical only under ~50
-        distincts), top-1-by-(count desc, value asc) rows for the rest
-        (high-cardinality text/date columns never ship their full counts
-        to the driver). Returns ({cat_col: [(value, count), ...]},
-        {mode_col: top_value})."""
-        if not cat_base and not mode_cols:
-            return {}, {}
-        stacked_cols = {**cat_base, **mode_cols}
-        counted = (
-            _stacked(df, stacked_cols)
+    def _mode_stats(
+        self, df: DataFrame, mode_cols: dict[str, Column]
+    ) -> dict[str, str]:
+        """The dedicated mode job for columns whose cardinality dodged
+        speculation (by construction HIGH-distinct columns): one stacked
+        groupBy, then top-1-by-(count desc, value asc) per column as an
+        AGGREGATE, ``min(struct(-count, value))``, which compares fields
+        lexicographically and so selects exactly a window's rn=1 row. A
+        window form would sort every (value, count) row of a label inside
+        ONE partition (partitionBy label — a 400k-row single-task sort for
+        a 600k-row text column at sf0.1, measured ~1.9 s); the agg form is
+        partial-aggregable map-side and never materializes a per-label
+        sort (guide §2.3 "aggregate before you shuffle"). Returns
+        {mode_col: top_value}."""
+        rows = (
+            _stacked(df, mode_cols)
             .filter(F.col(_V).isNotNull())
             .groupBy(_C, _V)
             .count()
-        )
-        if not cat_base:
-            # Mode-only call (the dedicated fallback job for columns whose
-            # cardinality dodged speculation — by construction HIGH-distinct
-            # columns): top-1-by-(count desc, value asc) as an AGGREGATE,
-            # `min(struct(-count, value))`, which compares fields
-            # lexicographically and so selects exactly the window's rn=1
-            # row. The window form sorted every (value, count) row of a
-            # label inside ONE partition (partitionBy label — a 400k-row
-            # single-task sort for a 600k-row text column at sf0.1,
-            # measured ~1.9 s); the agg form is partial-aggregable
-            # map-side and never materializes a per-label sort (guide
-            # §2.3 "aggregate before you shuffle").
-            rows = (
-                counted.groupBy(_C)
-                .agg(
-                    F.min(
-                        F.struct(
-                            (-F.col("count")).alias("nc"), F.col(_V).alias("v")
-                        )
-                    ).alias("b")
-                )
-                .select(
-                    _C,
-                    F.col("b.v").alias(_V),
-                    (-F.col("b.nc")).alias("count"),
-                    F.lit(1).alias("__rn"),
-                )
-                .collect()
+            .groupBy(_C)
+            .agg(
+                F.min(
+                    F.struct((-F.col("count")).alias("nc"), F.col(_V).alias("v"))
+                ).alias("b")
             )
-        else:
-            w = Window.partitionBy(_C).orderBy(F.desc("count"), F.asc(_V))
-            grouped = counted.withColumn("__rn", F.row_number().over(w))
-            keep = F.col("__rn") == 1
-            if cat_base:
-                keep = keep | F.col(_C).isin(list(cat_base))
-            rows = grouped.filter(keep).collect()
-        by_col: dict[str, list[tuple[str, int]]] = {c: [] for c in cat_base}
-        top1: dict[str, str] = {}
-        for r in rows:
-            if r[_C] in by_col:
-                by_col[r[_C]].append((r[_V], r["count"]))
-            if r["__rn"] == 1 and r[_C] in mode_cols:
-                top1[r[_C]] = r[_V]
-        return by_col, top1
+            .select(_C, F.col("b.v").alias(_V))
+            .collect()
+        )
+        return {r[_C]: r[_V] for r in rows}
 
     def _outlier_stats(
         self, df: DataFrame, cols: dict[str, Column]

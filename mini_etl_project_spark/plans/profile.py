@@ -3,17 +3,20 @@ ETL_PROJECT.py:16-41).
 
 The reference scans every column ~4 times with per-row Python. Here the
 whole profile is ONE wide aggregation job — per column: non-null count,
-exact distinct count, mean stringified length, date-parse successes
-(16-format chain), numeric-parse successes — and the driver applies the
-reference's strict threshold rules to produce a logical type per column.
+HLL distinct count (``approx_count_distinct``), mean stringified length,
+date-parse successes (16-format chain), numeric-parse successes — and the
+driver applies the reference's strict threshold rules to produce a
+logical type per column.
 
 This two-phase profile→plan flow is the engine's core custom machinery
 (SURVEY.md §4.2): data-dependent typed plans, no custom Catalyst rules.
 
-Scale: one job, ~5 aggregates per column, all codegen'd. ``exact_distinct``
-can be switched off to use HLL (``approx_count_distinct``) at 100 TB —
-detection only needs the distinct count near the 50 / 30 %-ratio
-boundaries, where HLL's ~2 % error is acceptable.
+Scale: one job, ~5 aggregates per column, all codegen'd and partial-
+aggregable. Detection only compares the distinct count against coarse
+bounds (the 50 / 30 %-ratio categorical rule), where HLL's ~2 % error is
+immaterial — an exact multi-column COUNT(DISTINCT) would cost a whole
+extra job (it compiles to an Expand that replicates the stream per
+column).
 """
 
 from __future__ import annotations
@@ -67,28 +70,14 @@ class ColumnProfile:
 
 
 def profile_frame_and_count(
-    df: DataFrame, exact_distinct: bool = True
+    df: DataFrame,
 ) -> tuple[dict[str, ColumnProfile], int]:
-    """Profile every column; two jobs when ``exact_distinct``.
-
-    Multi-column COUNT(DISTINCT) compiles to an Expand (one replicated
-    stream per distinct column) that re-evaluates every other aggregate's
-    input expression per replica — with the parse-heavy profile exprs that
-    doubled the job's cost (measured). Exact distincts therefore run in
-    their own expression-free job; approx (HLL) distincts are partial-
-    aggregable and stay in the main job.
-    """
-    if exact_distinct:
-        drow = df.agg(
-            *[F.count_distinct(F.col(c)).alias(f"{c}__dc") for c in df.columns]
-        ).collect()[0]
+    """Profile every column in one aggregation job; also returns the
+    frame's row count."""
     aggs = [F.count(F.lit(1)).alias("__rows")]
     for c in df.columns:
         raw = F.col(c)
         s = raw.cast("string")
-        distinct = (
-            F.lit(None).cast("long") if exact_distinct else F.approx_count_distinct(raw)
-        )
         # Typed fast paths — semantically equal to the string-scan rules,
         # minus the work. float/double stringify with a fractional part
         # (".0" at minimum) so no date format can match → date_ok = 0 and
@@ -122,7 +111,7 @@ def profile_frame_and_count(
             num_ok = F.count(guarded_try_double(ws_trim(s)))
         aggs += [
             F.count(raw).alias(f"{c}__nn"),
-            distinct.alias(f"{c}__dc"),
+            F.approx_count_distinct(raw).alias(f"{c}__dc"),
             length_agg.alias(f"{c}__len"),
             date_ok.alias(f"{c}__date"),
             num_ok.alias(f"{c}__num"),
@@ -132,7 +121,7 @@ def profile_frame_and_count(
         c: ColumnProfile(
             name=c,
             non_null=row[f"{c}__nn"],
-            distinct=drow[f"{c}__dc"] if exact_distinct else row[f"{c}__dc"],
+            distinct=row[f"{c}__dc"],
             avg_len=row[f"{c}__len"],
             date_ok=row[f"{c}__date"],
             numeric_ok=row[f"{c}__num"],
@@ -142,128 +131,46 @@ def profile_frame_and_count(
     return profiles, row["__rows"]
 
 
-def profile_frame(df: DataFrame, exact_distinct: bool = True) -> dict[str, ColumnProfile]:
+def profile_frame(df: DataFrame) -> dict[str, ColumnProfile]:
     """Profile every column in one aggregation job."""
-    return profile_frame_and_count(df, exact_distinct)[0]
+    return profile_frame_and_count(df)[0]
 
 
-# -- single-scan profile: parse layer + regex-free aggregation -------------
+# -- parse layer for the cleaned base ------------------------------------
 #
-# The profile's expensive expressions (the 16-format date chain, the
-# guarded numeric parse) are EXACTLY the values the downstream cleaners
-# need — so computing them in the profile aggregation and again when the
-# cleaned base materializes reads the source twice and parses twice. The
-# prepared flow projects the parse results into a wide frame ONCE (the
-# caller persists it), aggregates counts over the parsed columns (no
-# regex in the agg), and lets the cleaned base re-select the same parsed
-# columns from cache. At 100 TB this halves source I/O — one scan of the
-# raw data total — and halves regex CPU on date-typed columns.
+# Once the profile has typed the columns, the cleaned base reads each
+# typed string column's parse result from a projected parse layer built
+# only where a cleaner reads it: the 16-format date chain for date-typed
+# strings, the full numeric cleaner for numeric-typed strings. At 100 TB
+# the regex date chain / numeric parse never run over columns that won't
+# use them.
 
 #: column-name prefixes for the parse layer of a prepared frame
-PD_PREFIX, PN_PREFIX, NC_PREFIX = "__pd__", "__pn__", "__nc__"
+PD_PREFIX, NC_PREFIX = "__pd__", "__nc__"
 
 
 def prepare_parse_frame(
     df: DataFrame,
+    date_cols: set[str],
+    numeric_cols: set[str],
     compat: bool = True,
-    date_cols: set[str] | None = None,
-    numeric_cols: set[str] | None = None,
 ) -> tuple[DataFrame, list[str]]:
-    """Project ``df`` plus per-string-column parse layers:
-    ``__pd__<c>`` (multi-format date parse — shared by the profile's
-    date_ok count and the date cleaner), ``__pn__<c>`` (pd.to_numeric
-    mirror — profile's numeric_ok), ``__nc__<c>`` (the full numeric
-    cleaner — speculative, used iff the column types numeric).
-    Returns (wide_frame, string_columns).
+    """Project ``df`` plus a parse layer per typed string column:
+    ``__pd__<c>`` (multi-format date parse) for ``c`` in ``date_cols``,
+    ``__nc__<c>`` (the full numeric cleaner) for ``c`` in
+    ``numeric_cols``; text/categorical strings and non-string columns get
+    none. Returns (wide_frame, parsed_columns)."""
+    from mini_etl_project_spark.functions.cleaning import clean_numeric
 
-    TRIMMED mode (either ``date_cols`` or ``numeric_cols`` given, i.e.
-    column types already known from a sampled profile): build ONLY the
-    layer each column's cleaner will read — ``__pd__`` for date-typed
-    strings, ``__nc__`` for numeric-typed strings, nothing for
-    text/categorical strings and no ``__pn__`` anywhere (the full-scan
-    profile is the only consumer of the numeric-parse mirror). This is
-    the 100 TB lever: the regex date chain / numeric parse never run
-    over columns that won't use them."""
-    from mini_etl_project_spark.functions.cleaning import (
-        clean_numeric,
-        guarded_try_double,
-        ws_trim,
-    )
-
-    trimmed = date_cols is not None or numeric_cols is not None
     exprs = [F.col(c) for c in df.columns]
     parsed: list[str] = []
     for c in df.columns:
         if df.schema[c].dataType.typeName() != "string":
             continue
-        s = F.col(c)
-        if not trimmed:
+        if c in date_cols:
             parsed.append(c)
-            exprs += [
-                parse_date_multi(s).alias(PD_PREFIX + c),
-                guarded_try_double(ws_trim(s)).alias(PN_PREFIX + c),
-                clean_numeric(c, compat=compat).alias(NC_PREFIX + c),
-            ]
-        elif c in (date_cols or ()):
-            parsed.append(c)
-            exprs.append(parse_date_multi(s).alias(PD_PREFIX + c))
-        elif c in (numeric_cols or ()):
+            exprs.append(parse_date_multi(F.col(c)).alias(PD_PREFIX + c))
+        elif c in numeric_cols:
             parsed.append(c)
             exprs.append(clean_numeric(c, compat=compat).alias(NC_PREFIX + c))
     return df.select(*exprs), parsed
-
-
-def profile_prepared_and_count(
-    wide: DataFrame, columns: list[str], parsed: list[str]
-) -> tuple[dict[str, ColumnProfile], int]:
-    """The profile aggregation over a prepared frame: all parse work reads
-    the ``__pd__``/``__pn__`` columns, so the agg is pure counts (plus HLL
-    distincts) and its action doubles as the cache materializer."""
-    aggs = [F.count(F.lit(1)).alias("__rows")]
-    pset = set(parsed)
-    for c in columns:
-        raw = F.col(c)
-        if c in pset:
-            date_ok = F.count(F.col(PD_PREFIX + c))
-            num_ok = F.count(F.col(PN_PREFIX + c))
-            length_agg = F.avg(F.length(raw))
-        else:
-            kind = wide.schema[c].dataType.typeName()
-            if kind in ("double", "float", "decimal"):
-                date_ok = F.lit(0).cast("long")
-                num_ok = F.count(raw)
-                length_agg = F.lit(None).cast("double")
-            elif kind in ("date", "timestamp", "timestamp_ntz"):
-                date_ok = F.count(raw)
-                num_ok = F.lit(0).cast("long")
-                length_agg = F.lit(None).cast("double")
-            else:  # integers keep the yyyyMMdd-shaped scan (R7 quirk)
-                from mini_etl_project_spark.functions.cleaning import (
-                    guarded_try_double,
-                    ws_trim,
-                )
-
-                s = raw.cast("string")
-                date_ok = F.count(parse_date_multi(s))
-                num_ok = F.count(guarded_try_double(ws_trim(s)))
-                length_agg = F.avg(F.length(s))
-        aggs += [
-            F.count(raw).alias(f"{c}__nn"),
-            F.approx_count_distinct(raw).alias(f"{c}__dc"),
-            length_agg.alias(f"{c}__len"),
-            date_ok.alias(f"{c}__date"),
-            num_ok.alias(f"{c}__num"),
-        ]
-    row = wide.agg(*aggs).collect()[0]
-    profiles = {
-        c: ColumnProfile(
-            name=c,
-            non_null=row[f"{c}__nn"],
-            distinct=row[f"{c}__dc"],
-            avg_len=row[f"{c}__len"],
-            date_ok=row[f"{c}__date"],
-            numeric_ok=row[f"{c}__num"],
-        )
-        for c in columns
-    }
-    return profiles, row["__rows"]

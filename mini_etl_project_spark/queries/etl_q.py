@@ -511,13 +511,11 @@ def q_etl_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         # throw away): R7 type detection needs parse RATIOS vs a 0.7
         # threshold, not a full scan; the deterministic 1/20 content-hash
         # sample decides the same types (ratios here are ~0.0/~1.0, far
-        # from the threshold), and the parse layer is then built ONLY for
-        # the columns whose type reads it (one date chain + one numeric
-        # cleaner instead of 4× date chain + 8 numeric paths). Every DATA
-        # decision (fill values, clamp scalars, rare merge, n_rows) still
-        # comes from full-scan jobs — the output frame is bit-identical
-        # (verified cell-for-cell vs the exact-profile path at all 3 SFs,
-        # OPTIMIZATION_r12.md).
+        # from the threshold). Every DATA decision (fill values, clamp
+        # scalars, rare merge, n_rows) still comes from full-scan jobs —
+        # the output frame is bit-identical to the full-row profile
+        # (verified cell-for-cell at all 3 SFs, OPTIMIZATION_r12.md;
+        # pinned by test_round2.py's sampled-vs-full-profile test).
         profile_sample_mod=20,
     )
     return pipe.transform(raw)

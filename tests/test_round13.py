@@ -11,8 +11,9 @@
 4. ``eager_checkpoint_sized`` returns the materialized frame unchanged
    and a positive stored-byte figure (the honest width signal for the
    ingest lane's pinned shuffles).
-5. The AutoETL sampled-profile path caches the NARROW cleaned base (one
-   storage column per input column), not the wide raw+parse projection.
+5. AutoETL caches the NARROW cleaned base (one storage column per input
+   column), not a wide raw+parse projection, whether or not the profile
+   ran on a sample.
 """
 
 from __future__ import annotations
@@ -96,15 +97,23 @@ def test_sampled_profile_threshold_safety_band(spark):
     assert not near({"c": mk(100, 0)})     # clean 1.0 — out of band
     assert not near({"c": mk(0, 0)})       # 0.0 — out of band
 
-    # end-to-end: ~70% numeric strings → pipeline must take the exact
-    # path (wide cache with parse layers), not the sampled one
+    # end-to-end: exactly 70 % numeric strings. The full scan types the
+    # column unknown (strict threshold), but its k=2 hash sample alone
+    # would type it numeric — the band must make the pipeline decide on
+    # the full scan.
+    from mini_etl_project_spark.plans.profile import profile_frame_and_count
+
     rows = [(str(i) if i % 10 < 7 else f"x{i}",) for i in range(1000)]
     df = spark.createDataFrame(rows, "a string")
+    full_type = profile_frame_and_count(df)[0]["a"].logical_type
+    sample = df.filter(F.pmod(F.xxhash64(F.col("a")), F.lit(2)) == 0)
+    sample_type = profile_frame_and_count(sample)[0]["a"].logical_type
+    assert sample_type != full_type
     pipe = AutoETLPipeline(
         eager_summary=False, assume_partitioned=True, profile_sample_mod=2
     )
     out = pipe.transform(df)
-    assert any(c.startswith("__") for c in pipe._cached_base.columns)
+    assert pipe.column_types == {"a": full_type}
     out.write.format("noop").mode("overwrite").save()
     pipe.release()
 
@@ -164,13 +173,17 @@ def test_sampled_profile_caches_narrow_base(spark):
 
     rows = [(str(i), f"{i % 7}.5", "2020-01-0" + str(1 + i % 9)) for i in range(400)]
     df = spark.createDataFrame(rows, "a string, b string, d string")
-    pipe = AutoETLPipeline(
-        eager_summary=False, assume_partitioned=True, profile_sample_mod=2
-    )
-    out = pipe.transform(df)
-    cached = pipe._cached_base
-    assert cached is not None
-    # narrow: exactly the logical columns, no __pd__/__nc__ parse layers
-    assert set(cached.columns) == {"a", "b", "d"}
-    out.write.format("noop").mode("overwrite").save()
-    pipe.release()
+    # sampled (k=2) and full-row (None) profiles share one persist path
+    for sample_mod in (2, None):
+        pipe = AutoETLPipeline(
+            eager_summary=False,
+            assume_partitioned=True,
+            profile_sample_mod=sample_mod,
+        )
+        out = pipe.transform(df)
+        cached = pipe._cached_base
+        assert cached is not None
+        # narrow: exactly the logical columns, no __pd__/__nc__ parse layers
+        assert set(cached.columns) == {"a", "b", "d"}, sample_mod
+        out.write.format("noop").mode("overwrite").save()
+        pipe.release()

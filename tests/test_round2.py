@@ -1,6 +1,7 @@
 """Round-2 operator tests: nearest as-of join (incl. the row-level NULL
 payload semantics), interval-overlap join, and the AutoETL per-SF row-count
-tripwires (VERDICT r1 items 7 and 8)."""
+tripwires (VERDICT r1 items 7 and 8), plus the sampled-vs-full-profile
+differential for `q_etl_pipeline`."""
 
 from __future__ import annotations
 
@@ -122,3 +123,27 @@ def test_pipeline_sf01_rowcount(spark):
 
     n = QUERIES["q_etl_pipeline"](spark, "/root/testdata/sf0.1").count()
     assert n == _PIPELINE_GOLDEN_COUNTS["0.1"]
+
+
+def test_pipeline_sampled_profile_matches_full_profile(
+    spark, sf_dir, monkeypatch
+):
+    """``q_etl_pipeline`` profiles a 1/20 hash sample; every data decision
+    reads full-scan jobs, so its output must be the same row multiset as
+    the identical pipeline configuration profiling every row."""
+    from collections import Counter
+
+    from mini_etl_project_spark.queries import QUERIES, etl_q
+
+    configs: list[dict] = []
+    real = etl_q.AutoETLPipeline
+
+    def full_profile(**kw):
+        configs.append(dict(kw))
+        return real(**{**kw, "profile_sample_mod": None})
+
+    sampled = Counter(QUERIES["q_etl_pipeline"](spark, sf_dir).collect())
+    monkeypatch.setattr(etl_q, "AutoETLPipeline", full_profile)
+    full = Counter(QUERIES["q_etl_pipeline"](spark, sf_dir).collect())
+    assert configs and (configs[0].get("profile_sample_mod") or 1) > 1
+    assert sampled == full

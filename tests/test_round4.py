@@ -133,7 +133,7 @@ def test_fused_stats_leftover_path_matches_speculation(spark):
         saved = AutoETLPipeline._SPECULATE_MAX_DISTINCT
         AutoETLPipeline._SPECULATE_MAX_DISTINCT = bound
         try:
-            p = AutoETLPipeline(eager_summary=False, cache_intermediate=False)
+            p = AutoETLPipeline(eager_summary=False)
             out = {tuple(r) for r in p.transform(df).collect()}
             return out, p.cleaning_report
         finally:

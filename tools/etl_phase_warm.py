@@ -44,7 +44,7 @@ def main() -> None:
         for m in (
             "_fused_stats",
             "_outlier_stats",
-            "_category_and_mode_stats",
+            "_mode_stats",
             "transform",
         )
     }
