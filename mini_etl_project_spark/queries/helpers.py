@@ -15,7 +15,6 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-from mini_etl_project_spark.functions.memo import jvm_memo
 
 DEC = "decimal(38,6)"
 
@@ -94,14 +93,18 @@ def sql_dec_to_double(expr: str) -> str:
 # differ in the last ulp on some inputs), which is why the text stack
 # (TF-IDF, PMI, Zipf) historically ranks by log-free monotone transforms.
 # pln removes that restriction: ln built ONLY from IEEE-exact-or-
-# correctly-rounded single ops (+, -, *, /), so identical expression
-# trees produce bit-identical doubles in any IEEE-754 engine.
+# correctly-rounded single ops (+, -, *, /, power-of-two scaling), so
+# identical expression trees produce bit-identical doubles in any
+# IEEE-754 engine; the one libm call (log2) only proposes the exponent,
+# which exact comparisons then settle (step 1).
 #
 #   1. Argument reduction by an EXACT power of two: pick k with
-#      r = x * 2^-k  in [0.75, 1.5).  Scaling a double by 2^±k is exact
-#      (exponent arithmetic, no rounding) and the branch boundaries
-#      0.75*2^k / 1.5*2^k are themselves exact doubles, so every engine
-#      picks the same branch.
+#      r = x * 2^-k  in [0.75, 1.5).  k0 = floor(log2(x/0.75)) may be
+#      off by one (log2 is libm), so it is corrected with two exact
+#      comparisons on r0 = x * 2^-k0: k = k0 + [r0 >= 1.5] - [r0 < 0.75].
+#      pow(2, integer) is exact in both engines and scaling a double by
+#      2^±k is exponent arithmetic (no rounding), so every engine lands
+#      on the same k and the same r.
 #   2. atanh series on the reduced argument: t = (r-1)/(r+1) lands in
 #      [-1/7, 1/5); ln r = 2*t*(1 + t^2/3 + ... ), 13 Horner terms over
 #      literal double coefficients.  Truncation error <= |t|^27/27
@@ -109,77 +112,44 @@ def sql_dec_to_double(expr: str) -> str:
 #   3. Reassembly: ln x = ln r + k*ln2, with ln2 a shared literal.
 #
 # Domain: [0.75*2^-60, 1.5*2^6); outside -> NULL in BOTH engines so a
-# domain escape shows up as a red row, never as silent drift.
+# domain escape shows up as a red row, never as silent drift.  The
+# domain guard wraps the log2, which DuckDB rejects on zero/negatives.
 #
 # The SQL side is STAGED (reduction columns in one CTE, series over
-# column refs in the next) because inlining the 67-branch CASE into the
-# Horner chain would blow the oracle string to ~450 KB; the Spark side
-# mirrors the same staging via withColumn so both expression trees match
-# op-for-op. Accuracy + Spark<->DuckDB bit-identity pinned in
-# tests/test_round9.py.
+# column refs in the next) because pln_finish references red ~50x:
+# inlining the reduction into the Horner chain would repeat it that
+# often; the Spark side mirrors the same staging via withColumn so both
+# expression trees match op-for-op. Accuracy + Spark<->DuckDB
+# bit-identity pinned in tests/test_round9.py and tests/test_round10.py.
 
 _PLN_TERMS = 13
 _PLN_COEFFS = [1.0 / (2 * k + 1) for k in range(_PLN_TERMS)]
 _PLN_LN2 = 0.6931471805599453  # repr(math.log(2.0)) — shared literal
 _PLN_KLO, _PLN_KHI = -60, 7
+_PLN_LO, _PLN_HI = 0.75 * 2.0**_PLN_KLO, 1.5 * 2.0 ** (_PLN_KHI - 1)
 
 
-# Construction cost note (r13): each staged-ln builder is a 67-branch
-# CASE chain / 13-term Horner fold — hundreds of py4j round trips
-# (~8 ms apiece) to CONSTRUCT, measured at ~4 s of pure driver time per
-# boxcox-shaped query invocation. Every Spark call site passes literal
-# column names, so the string-named forms are memoized per JVM (the
-# same r12 rule as functions/vectors.py: immutable expression shapes
-# only, never data).
+def pln_k(col: Column | str) -> Column:
+    """Stage 1 (Spark): the reduction exponent k as double, NULL outside
+    the domain."""
+    x = F.col(col) if isinstance(col, str) else col
+    ok = (x >= F.lit(_PLN_LO)) & (x < F.lit(_PLN_HI))
+    k0 = F.floor(F.log2(x / F.lit(0.75))).cast("double")
+    r0 = x * F.pow(F.lit(2.0), -k0)
+    up = (r0 >= F.lit(1.5)).cast("double")
+    down = (r0 < F.lit(0.75)).cast("double")
+    return F.when(ok, k0 + up - down)
 
 
 def pln_red(col: Column | str) -> Column:
     """Stage 1 (Spark): exactly power-of-two-reduced argument in
     [0.75, 1.5), NULL outside the domain."""
-    if isinstance(col, str):
-        return _pln_red_named(col)
-    red = None
-    for k in range(_PLN_KLO, _PLN_KHI):
-        lo, hi, scale = 0.75 * 2.0**k, 1.5 * 2.0**k, 2.0 ** (-k)
-        cond = (col >= F.lit(lo)) & (col < F.lit(hi))
-        red = (
-            F.when(cond, col * F.lit(scale))
-            if red is None
-            else red.when(cond, col * F.lit(scale))
-        )
-    return red
-
-
-@jvm_memo
-def _pln_red_named(name: str) -> Column:
-    return pln_red(F.col(name))
-
-
-def pln_k(col: Column | str) -> Column:
-    """Stage 1 (Spark): the reduction exponent k as double."""
-    if isinstance(col, str):
-        return _pln_k_named(col)
-    kk = None
-    for k in range(_PLN_KLO, _PLN_KHI):
-        lo, hi = 0.75 * 2.0**k, 1.5 * 2.0**k
-        cond = (col >= F.lit(lo)) & (col < F.lit(hi))
-        kk = (
-            F.when(cond, F.lit(float(k)))
-            if kk is None
-            else kk.when(cond, F.lit(float(k)))
-        )
-    return kk
-
-
-@jvm_memo
-def _pln_k_named(name: str) -> Column:
-    return pln_k(F.col(name))
+    x = F.col(col) if isinstance(col, str) else col
+    return x * F.pow(F.lit(2.0), -pln_k(x))
 
 
 def pln_finish(red: Column | str, kk: Column | str) -> Column:
     """Stage 2 (Spark): atanh series on the reduced argument + k*ln2."""
-    if isinstance(red, str) and isinstance(kk, str):
-        return _pln_finish_named(red, kk)
     red = F.col(red) if isinstance(red, str) else red
     kk = F.col(kk) if isinstance(kk, str) else kk
     t = (red - F.lit(1.0)) / (red + F.lit(1.0))
@@ -190,40 +160,29 @@ def pln_finish(red: Column | str, kk: Column | str) -> Column:
     return F.lit(2.0) * t * s + kk * F.lit(_PLN_LN2)
 
 
-@jvm_memo
-def _pln_finish_named(red: str, kk: str) -> Column:
-    return pln_finish(F.col(red), F.col(kk))
-
-
-def sql_pln_red(expr: str) -> str:
-    """Stage 1 (DuckDB): reduced argument — mirror of pln_red.
-
-    Every literal is CAST AS DOUBLE: DuckDB parses plain decimal
-    literals as DECIMAL and would otherwise run decimal arithmetic."""
-    x = f"({expr})"
-    b = []
-    for k in range(_PLN_KLO, _PLN_KHI):
-        lo, hi, scale = 0.75 * 2.0**k, 1.5 * 2.0**k, 2.0 ** (-k)
-        b.append(
-            f"WHEN {x} >= CAST('{lo!r}' AS DOUBLE)"
-            f" AND {x} < CAST('{hi!r}' AS DOUBLE)"
-            f" THEN {x} * CAST('{scale!r}' AS DOUBLE)"
-        )
-    return "CASE " + " ".join(b) + " ELSE NULL END"
+def _sql_d(v: float) -> str:
+    # DuckDB parses plain decimal literals as DECIMAL and would
+    # otherwise run decimal arithmetic
+    return f"CAST('{v!r}' AS DOUBLE)"
 
 
 def sql_pln_k(expr: str) -> str:
-    """Stage 1 (DuckDB): reduction exponent — mirror of pln_k."""
+    """Stage 1 (DuckDB): reduction exponent — mirror of pln_k.
+
+    Every literal is CAST AS DOUBLE (see _sql_d)."""
     x = f"({expr})"
-    b = []
-    for k in range(_PLN_KLO, _PLN_KHI):
-        lo, hi = 0.75 * 2.0**k, 1.5 * 2.0**k
-        b.append(
-            f"WHEN {x} >= CAST('{lo!r}' AS DOUBLE)"
-            f" AND {x} < CAST('{hi!r}' AS DOUBLE)"
-            f" THEN CAST('{float(k)!r}' AS DOUBLE)"
-        )
-    return "CASE " + " ".join(b) + " ELSE NULL END"
+    k0 = f"FLOOR(LOG2({x} / {_sql_d(0.75)}))"
+    r0 = f"({x} * POW({_sql_d(2.0)}, -{k0}))"
+    return (
+        f"CASE WHEN {x} >= {_sql_d(_PLN_LO)} AND {x} < {_sql_d(_PLN_HI)}"
+        f" THEN {k0} + CAST({r0} >= {_sql_d(1.5)} AS DOUBLE)"
+        f" - CAST({r0} < {_sql_d(0.75)} AS DOUBLE) END"
+    )
+
+
+def sql_pln_red(expr: str) -> str:
+    """Stage 1 (DuckDB): reduced argument — mirror of pln_red."""
+    return f"(({expr}) * POW({_sql_d(2.0)}, -({sql_pln_k(expr)})))"
 
 
 def sql_pln_finish(red: str, kk: str) -> str:

@@ -9908,18 +9908,14 @@ def q_ml_sign_test(spark: SparkSession, sf_dir: str) -> DataFrame:
 # boundary) and pln_finish consumes the column refs — Catalyst's
 # CollapseProject keeps non-cheap multi-referenced aliases staged, and
 # the SQL twin mirrors the same two-layer shape to keep the oracle
-# string compact (one sql_pln_red/sql_pln_k per query via the
-# unpivot-ln trick: stack every ln argument into rows, ln once, pivot
-# back).
+# string compact (one sql_ln_layer per query via the unpivot-ln trick:
+# stack every ln argument into rows, ln once, pivot back).
 # =============================================================================
 
 from mini_etl_project_spark.queries.helpers import (  # noqa: E402
     pln_finish as _pln_finish,
     pln_k as _pln_k,
     pln_red as _pln_red,
-    sql_pln_finish as _sql_pln_finish,
-    sql_pln_k as _sql_pln_k,
-    sql_pln_red as _sql_pln_red,
 )
 
 

@@ -2373,9 +2373,6 @@ from mini_etl_project_spark.queries.helpers import (  # noqa: E402
     pln_finish as _pln_finish,
     pln_k as _pln_k,
     pln_red as _pln_red,
-    sql_pln_finish as _sql_pln_finish,
-    sql_pln_k as _sql_pln_k,
-    sql_pln_red as _sql_pln_red,
 )
 
 

@@ -151,17 +151,27 @@ def test_pln_reduction_is_exact_at_seams(spark):
     (scaling by a power of two is exponent arithmetic): at each seam,
     red must equal 0.75 exactly, and one ulp below a seam must reduce
     to just under 1.5 — never 1.5 itself (which would mean the branch
-    predicate and the scaling disagreed)."""
-    seams = [0.75 * 2.0**k for k in range(_PLN_KLO, _PLN_KHI)]
-    df = spark.createDataFrame([(v,) for v in seams], "x double")
-    rows = df.select("x", pln_red(F.col("x")).alias("red")).collect()
-    for r in rows:
-        assert r["red"] == 0.75, (r["x"], r["red"])
-    belows = [
-        math.nextafter(0.75 * 2.0**k, 0.0)
-        for k in range(_PLN_KLO + 1, _PLN_KHI)
+    predicate and the scaling disagreed). The exponent comes from
+    floor(log2), so kk is pinned too: k at each seam, k-1 one ulp
+    below it."""
+    ks = range(_PLN_KLO, _PLN_KHI)
+    df = spark.createDataFrame(
+        [(k, 0.75 * 2.0**k) for k in ks], "k long, x double"
+    )
+    sel = [
+        "k",
+        "x",
+        pln_red(F.col("x")).alias("red"),
+        pln_k(F.col("x")).alias("kk"),
     ]
-    df2 = spark.createDataFrame([(v,) for v in belows], "x double")
-    for r in df2.select("x", pln_red(F.col("x")).alias("red")).collect():
+    for r in df.select(*sel).collect():
+        assert r["red"] == 0.75, (r["x"], r["red"])
+        assert r["kk"] == float(r["k"]), (r["x"], r["kk"])
+    df2 = spark.createDataFrame(
+        [(k, math.nextafter(0.75 * 2.0**k, 0.0)) for k in ks[1:]],
+        "k long, x double",
+    )
+    for r in df2.select(*sel).collect():
         assert 0.75 <= r["red"] < 1.5, (r["x"], r["red"])
         assert r["red"] > 1.49, (r["x"], r["red"])
+        assert r["kk"] == float(r["k"] - 1), (r["x"], r["kk"])

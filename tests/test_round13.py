@@ -164,8 +164,6 @@ def test_pln_named_forms_match_column_forms(spark):
         .select(pln_finish(F.col("red"), F.col("kk")).alias("lnv"))
     )
     assert [r.lnv for r in named.collect()] == [r.lnv for r in col.collect()]
-    # memoized: same tree object on repeat construction
-    assert pln_red("v") is pln_red("v")
 
 
 def test_sampled_profile_caches_narrow_base(spark):

@@ -276,7 +276,11 @@ def test_pln_bit_identity_and_accuracy(spark):
 
 def test_pln_out_of_domain_is_null(spark):
     """Outside [0.75*2^-60, 1.5*2^6) both engines must yield NULL — a
-    domain escape must become a visible red row, never silent drift."""
+    domain escape must become a visible red row, never silent drift.
+    The reduction calls log2/pow, so the guard must also hold on the
+    IEEE specials and the subnormal/just-below-domain edge."""
+    import math
+
     from pyspark.sql import functions as F
 
     from mini_etl_project_spark.queries.helpers import (
@@ -289,6 +293,8 @@ def test_pln_out_of_domain_is_null(spark):
     )
 
     bad = [0.0, -1.0, 1e-20, 100.0]
+    bad += [math.nan, math.inf, -math.inf, -0.0, 5e-324]
+    bad.append(math.nextafter(0.75 * 2**-60, 0))
     df = spark.createDataFrame([(v,) for v in bad], "x double")
     staged = df.withColumn("red", pln_red(F.col("x"))).withColumn(
         "kk", pln_k(F.col("x"))

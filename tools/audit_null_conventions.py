@@ -61,11 +61,14 @@ import os
 import sys
 import time
 
-import duckdb
-
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from tools.check_correctness import canon_rows, duck_run, spark_rows  # noqa: E402
+from tools.check_correctness import (  # noqa: E402
+    canon_rows,
+    duck_connect,
+    duck_run,
+    spark_rows,
+)
 
 from mini_etl_project_spark.queries import ORACLES, QUERIES  # noqa: E402
 from mini_etl_project_spark.session import TABLES, get_spark  # noqa: E402
@@ -91,7 +94,7 @@ def build_twin(src_dir: str, dst_dir: str, with_ts: bool = False) -> dict[str, i
     by_table: dict[str, list[tuple[str, str, int, int]]] = {}
     for table, pk, col, mod, res in injections:
         by_table.setdefault(table, []).append((pk, col, mod, res))
-    con = duckdb.connect()
+    con = duck_connect()
     planted: dict[str, int] = {}
     for t in TABLES:
         src = os.path.join(src_dir, f"{t}.parquet")
@@ -145,7 +148,7 @@ def main() -> int:
     print(f"twin: {twin_dir}  planted NULLs: {planted}")
 
     spark = get_spark("audit_null_conventions")
-    con = duckdb.connect()
+    con = duck_connect()
     for t in TABLES:
         con.sql(
             f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{twin_dir}/{t}.parquet')"

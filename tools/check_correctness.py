@@ -13,6 +13,7 @@ from __future__ import annotations
 import math
 import os
 import sys
+import tempfile
 import time
 
 import duckdb
@@ -76,6 +77,13 @@ def duck_run(con: duckdb.DuckDBPyConnection, sql: str):
     return list(rel.columns), rel.fetchall()
 
 
+def duck_connect() -> duckdb.DuckDBPyConnection:
+    """DuckDB connection that spills under the system temp dir, not the
+    working directory (a full-registry run can spill gigabytes)."""
+    tmp = os.path.join(tempfile.gettempdir(), f"duckdb_tmp_{os.getpid()}")
+    return duckdb.connect(config={"temp_directory": tmp})
+
+
 def spark_rows(df) -> tuple[list[str], list[tuple]]:
     cols = df.columns
     return cols, [tuple(r) for r in df.collect()]
@@ -85,7 +93,7 @@ def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
     spark = get_spark("check_correctness")
-    con = duckdb.connect()
+    con = duck_connect()
     for t in TABLES:
         con.sql(
             f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"

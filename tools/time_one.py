@@ -15,6 +15,10 @@ from mini_etl_project_spark.session import get_spark
 
 
 def main() -> None:
+    if len(sys.argv) < 2 or sys.argv[1] not in QUERIES:
+        print(__doc__.splitlines()[2], file=sys.stderr)
+        print(f"known queries: {sorted(QUERIES)}", file=sys.stderr)
+        sys.exit(1)
     name = sys.argv[1]
     n = int(sys.argv[2]) if len(sys.argv) > 2 else 5
     sf_dir = sys.argv[3] if len(sys.argv) > 3 else os.environ.get(
