@@ -96,6 +96,26 @@ def clean_numeric(col: Column | str, compat: bool = True) -> Column:
     return F.coalesce(guarded_try_double(F.trim(c)), via_regex)
 
 
+def clean_numeric_double(col: Column | str, compat: bool = True) -> Column:
+    """R9 for a DOUBLE-typed column, without the string round trip.
+
+    The reference strips its regex over ``astype(str)``, Python's float
+    repr, which is positional for ``x == 0`` and ``1e-4 <= |x| < 1e16``
+    and otherwise ``nan``/``inf``/``1e+16``/``1e-05`` — strings the strip
+    turns into non-numbers. Spark's double→string cast already switches
+    to ``1.2345678E7`` at 1e7, which the strip would mangle into
+    ``1.234567897``. So compat mode keeps exactly the values whose repr
+    survives and nulls the rest (NaN and ±inf included: Spark orders NaN
+    above every double). ``compat=False`` keeps every value, as the
+    native cleaner's direct cast does.
+    """
+    x = F.col(col) if isinstance(col, str) else col
+    if not compat:
+        return x
+    a = F.abs(x)
+    return F.when((x == 0) | ((a >= 1e-4) & (a < 1e16)), x)
+
+
 def clean_text(col: Column | str, collapse_whitespace: bool) -> Column:
     """R10. ``collapse_whitespace`` comes from the profile (mean cleaned
     length > 20) — a data-dependent plan decision made by the caller.

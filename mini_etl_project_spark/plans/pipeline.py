@@ -2,56 +2,60 @@
 (reference R13–R19, R24, R25; ETL_PROJECT.py:129-302,326-368).
 
 The reference runs ~7 eager pandas passes with per-row Python loops. This
-engine instead runs a CONSTANT number of aggregation jobs (≤6, most
-conditional on column types present) to gather the data-dependent facts —
-logical types, null ratios, medians, modes, category frequencies, outlier
-stats — then compiles everything into ONE fused Project + dropDuplicates
-plan that Catalyst collapses into a single whole-stage-codegen'd pass over
-the data. Imputation values, clamp bounds, and rare-value lists enter the
-plan as literals (they are tiny), so the data plane never joins against
-driver state.
+engine instead runs a CONSTANT number of aggregation jobs (2 always, at
+most 7) to gather the data-dependent facts — logical types, null ratios,
+medians, modes, category frequencies, outlier stats — then compiles
+everything into ONE fused Project + dropDuplicates plan that Catalyst
+collapses into a single whole-stage-codegen'd pass over the data.
+Imputation values, clamp bounds, and rare-value lists enter the plan as
+literals (they are tiny), so the data plane never joins against driver
+state.
 
 Job structure (SURVEY.md §3/§4.3):
 
 1. profile        — raw frame, or its deterministic 1/k hash sample
                     (``profile_sample_mod``): types only (plans/profile.py,
                     HLL distincts — the type rules never need exact
-                    counts). A sample that comes back empty or with a
-                    parse ratio near the 0.7 type threshold is re-profiled
-                    over the full frame.
-2. fused stats    — ONE action over the cleaned base serving both former
-                    jobs 2 and 3: the stacked category/speculative-mode
-                    groupBy is the collected plan (full value counts for
-                    every categorical column — rare merge + post-merge
-                    categorical mode — plus windowed top-1 rows for every
-                    bounded-cardinality non-numeric column, SPECULATED
-                    because mode need isn't known until null counts land;
-                    deterministic tie-break: highest count, then smallest
-                    value — pandas ``mode()[0]`` parity; Spark's ``F.mode``
-                    is tie-nondeterministic, SURVEY.md §7); the global
-                    pre-stats aggregates (per-column null counts, text
-                    mean lengths driving the conditional whitespace
-                    collapse, numeric medians — exact interpolating,
-                    pandas parity) and the exact row count ride the same
-                    scan as an ``observe``. This action also materializes
-                    the persisted cleaned base. A rare dedicated mode job
-                    covers columns whose cardinality exceeded the
-                    speculation bound.
-3. outlier stats  — imputed numerics: mean, stddev_samp (= pandas ddof=1),
-                    exact percentiles 0.05/0.95. Outlier COUNTS ride an
-                    ``observe`` on the pre-dedup node (filled by the first
-                    downstream action — the clamp itself is a no-op when a
-                    column has no outliers, so the plan never needs the
-                    count, only the report does); the same observation
-                    carries the pre-dedup row count for the duplicate-
-                    removed report line.
-4. summary        — final frame (post-dedup), eager mode only; its single
-                    agg action also materializes the observation.
+                    counts).
+2. fused stats    — ONE action over the cleaned base: the stacked
+                    category/speculative-mode groupBy is the collected plan
+                    (full value counts for every categorical column — rare
+                    merge + post-merge categorical mode — plus windowed
+                    top-1 rows for every bounded-cardinality non-numeric
+                    column, SPECULATED because mode need isn't known until
+                    null counts land; deterministic tie-break: highest
+                    count, then smallest value — pandas ``mode()[0]``
+                    parity; Spark's ``F.mode`` is tie-nondeterministic,
+                    SURVEY.md §7); the global pre-stats aggregates
+                    (per-column null counts, text mean lengths driving the
+                    conditional whitespace collapse, numeric medians —
+                    exact interpolating, pandas parity) and the exact row
+                    count ride the same scan as an ``observe``. This
+                    action also materializes the persisted cleaned base.
 
-So: ≤3 stats jobs eager, ≤2 lazy (``eager_summary=False``), + the
-caller's terminal action. At 100 TB additionally switch ``exact_stats``
-off — medians/percentiles go approximate (partial-aggregable, no exact
-sort-based percentile state) — and the data plane is unchanged.
+Conditional jobs, each at most once:
+
+- sample re-profile — the 1/k sample came back empty or with a parse
+  ratio near the 0.7 type threshold: profile the full frame instead.
+- median fallback — a numeric column the profile estimated fully clean
+  (so job 2 skipped its median) has nulls after all.
+- dedicated mode job — a column needing a mode fill whose cardinality
+  exceeded the speculation bound.
+- outlier job — any kept numeric column: mean, stddev_samp (= pandas
+  ddof=1), percentiles 0.05/0.95 of the imputed values. Outlier COUNTS
+  ride an ``observe`` on the pre-dedup node (filled by the first
+  downstream action — the clamp itself is a no-op when a column has no
+  outliers, so the plan never needs the count, only the report does);
+  the same observation carries the pre-dedup row count for the
+  duplicate-removed report line.
+- summary — final frame (post-dedup), eager mode only; its single agg
+  action also materializes the observation.
+
+So ``transform`` runs 2 to 7 jobs eager, 2 to 6 lazy
+(``eager_summary=False``), + the caller's terminal action. At 100 TB
+additionally switch ``exact_stats`` off — medians/percentiles go
+approximate (partial-aggregable, no exact sort-based percentile state) —
+and the data plane is unchanged.
 
 Once the types are known, the cleaned base — one narrow column per input
 column, the parse work done once — is persisted (MEMORY_AND_DISK, so it
@@ -73,16 +77,14 @@ from mini_etl_project_spark.functions.cleaning import (
     clean_categorical_base,
     clean_date,
     clean_numeric,
+    clean_numeric_double,
     clean_text,
 )
 from mini_etl_project_spark.plans.profile import (
     CATEGORICAL,
     DATE,
-    NC_PREFIX,
     NUMERIC,
-    PD_PREFIX,
     ColumnProfile,
-    prepare_parse_frame,
     profile_frame_and_count,
 )
 
@@ -213,6 +215,10 @@ class AutoETLPipeline:
         cleaned = self.transform(raw)
         if output_path is not None or db_connection is not None:
             self.load(cleaned, output_path, db_connection)
+            # the load was the first action on the result, so the
+            # observation is filled: fold in the clamp lines a lazy
+            # (eager_summary=False) transform left pending
+            self._fill_observed_report()
         return cleaned
 
     # -- phase 2 of run_etl (R19) ------------------------------------------
@@ -266,38 +272,12 @@ class AutoETLPipeline:
                 f"detected column type: {self.column_types[c]}"
             )
 
-        # Cleaned base: the parse layer is built ONLY for the columns
-        # whose detected type reads it (date chain for date-typed
-        # strings, numeric cleaner for numeric-typed strings) — the 100 TB
-        # lever: the regex parses never run over columns that won't use
-        # them. Text/categorical cleaners are cheap char scans.
-        wide, parsed = prepare_parse_frame(
-            df,
-            compat=self.compat,
-            date_cols={c for c, t in self.column_types.items() if t == DATE},
-            numeric_cols={
-                c for c, t in self.column_types.items() if t == NUMERIC
-            },
+        # Cleaned base: one type-dispatched cleaner per column (R9–R12),
+        # so the regex date chain and numeric parse run only over the
+        # columns whose detected type reads them — the 100 TB lever.
+        base_df = df.select(
+            *[self._clean_base(df, c).alias(c) for c in df.columns]
         )
-        pset = set(parsed)
-        base_exprs: dict[str, Column] = {}
-        for c in df.columns:
-            t = self.column_types[c]
-            if t == NUMERIC:
-                base_exprs[c] = (
-                    F.col(NC_PREFIX + c)
-                    if c in pset
-                    else clean_numeric(c, compat=self.compat)
-                )
-            elif t == DATE:
-                base_exprs[c] = (
-                    F.col(PD_PREFIX + c) if c in pset else clean_date(c)
-                )
-            elif t == CATEGORICAL:
-                base_exprs[c] = clean_categorical_base(c)
-            else:  # text and unknown both take the text cleaner (:255-256)
-                base_exprs[c] = clean_text(c, collapse_whitespace=False)
-        base_df = wide.select(*[expr.alias(c) for c, expr in base_exprs.items()])
 
         # Persist the narrow cleaned base — the only frame every stats job
         # reads (guide §5: cache only what the downstream jobs actually
@@ -316,8 +296,8 @@ class AutoETLPipeline:
 
         base: dict[str, Column] = {c: F.col(c) for c in df.columns}
 
-        # Jobs 2+3 FUSED into one action: the stacked category/mode groupBy
-        # is the action; job 2's global aggregates (null counts, text mean
+        # Job 2, the fused stats job: the stacked category/mode groupBy is
+        # the action; the global aggregates (null counts, text mean
         # lengths, numeric medians) ride it as an ``observe`` on the same
         # scan — computed map-side on the rows already flowing into the
         # stack, so the cleaned base is traversed ONCE for both.
@@ -326,7 +306,7 @@ class AutoETLPipeline:
         # they are SPECULATED: every non-numeric, non-categorical column
         # whose profiled cardinality is bounded contributes top-1 rows
         # (text columns in both raw and whitespace-collapsed variants —
-        # the collapse decision needs job-2's lengths and is resolved
+        # the collapse decision needs job 2's lengths and is resolved
         # driver-side after the fact); unused results are discarded. The
         # cardinality bound keeps the speculation scale-safe: a 100 TB
         # high-distinct text column never ships its value counts unless it
@@ -370,19 +350,13 @@ class AutoETLPipeline:
             if t == DATE and c in est_clean_full:
                 continue
             (spec_date if t == DATE else spec_text).append(c)
-        spec_outlier = {
-            c
-            for c in est_clean_full
-            if self.column_types[c] == NUMERIC
-        }
         (
             null_count,
             text_len,
             medians,
             cat_counts,
             spec_top1,
-            rows_total,
-            spec_out_stats,
+            n_rows,  # exact, from the full-scan fused job
         ) = self._fused_stats(
             base_df,
             base,
@@ -391,9 +365,7 @@ class AutoETLPipeline:
             spec_date,
             spec_text,
             skip_median=est_clean_full,
-            spec_outlier=spec_outlier,
         )
-        n_rows = rows_total  # exact, from the full-scan fused job
 
         # Finalize cleaning expressions (on top of the cleaned base:
         # whitespace collapse after trim/nullify ≡ the reference's order).
@@ -431,13 +403,7 @@ class AutoETLPipeline:
             # found some: compute the skipped medians exactly, one
             # dedicated agg (rare — only on a profile/full disagreement).
             row = base_df.agg(
-                *[
-                    (
-                        F.median(c) if self.exact_stats
-                        else F.percentile_approx(c, 0.5)
-                    ).alias(f"{c}__med")
-                    for c in med_missing
-                ]
+                *[self._median(F.col(c)).alias(f"{c}__med") for c in med_missing]
             ).collect()[0]
             for c in med_missing:
                 fills[c] = row[f"{c}__med"]
@@ -551,36 +517,18 @@ class AutoETLPipeline:
                     expr = F.coalesce(expr, F.lit(fills[c]))
             imputed[c] = expr
 
-        # Job 5 + clamp plan: outliers on imputed numerics (R16, :172-201).
-        # The clamp is gated per ROW (z > threshold), so applying it to a
-        # column with zero outliers is the identity — the plan never needs
-        # the outlier COUNT, only the report does. The counts therefore
-        # ride the pre-dedup observation (below) instead of a second agg.
+        # Outlier job + clamp plan: outliers on imputed numerics (R16,
+        # :172-201). The clamp is gated per ROW (z > threshold), so applying
+        # it to a column with zero outliers is the identity — the plan never
+        # needs the outlier COUNT, only the report does. The counts
+        # therefore ride the pre-dedup observation (below) instead of a
+        # second agg.
         obs_metrics: list[Column] = [F.count(F.lit(1)).alias("__rows_pre")]
         num_cols = [c for c in kept if self.column_types[c] == NUMERIC]
         if num_cols:
-            # Use the ridden outlier scalars where the speculation held —
-            # the full scan confirmed zero cleaned-nulls, so the imputed
-            # expression equals the base column the ride aggregated.
-            # Everything else (a fill happened, or the column wasn't
-            # ridden) takes the dedicated exact job as before.
-            stats = {}
-            out_leftover = []
-            for c in num_cols:
-                if (
-                    c in spec_out_stats
-                    and null_count[c] == 0
-                    and c not in fills
-                ):
-                    stats[c] = spec_out_stats[c]
-                else:
-                    out_leftover.append(c)
-            if out_leftover:
-                stats.update(
-                    self._outlier_stats(
-                        base_df, {c: imputed[c] for c in out_leftover}
-                    )
-                )
+            stats = self._outlier_stats(
+                base_df, {c: imputed[c] for c in num_cols}
+            )
             for c in num_cols:
                 mu, sigma, q05, q95 = stats[c]
                 if sigma and q05 is not None:
@@ -611,7 +559,7 @@ class AutoETLPipeline:
         result = projected.dropDuplicates()
 
         if self.eager_summary:
-            self.create_data_summary(result)  # job 6; also fills the observation
+            self.create_data_summary(result)  # also fills the observation
         return result
 
     def _fill_observed_report(self, n_after: int | None = None) -> None:
@@ -634,6 +582,26 @@ class AutoETLPipeline:
                     f"removed {removed} duplicate rows"
                 )
 
+    # -- expression builders ----------------------------------------------
+
+    def _clean_base(self, df: DataFrame, c: str) -> Column:
+        """The cleaned-base expression for column ``c`` under its
+        detected type (text and unknown both take the text cleaner,
+        :255-256)."""
+        t = self.column_types[c]
+        if t == NUMERIC:
+            if df.schema[c].dataType.typeName() == "double":
+                return clean_numeric_double(c, compat=self.compat)
+            return clean_numeric(c, compat=self.compat)
+        if t == DATE:
+            return clean_date(c)
+        if t == CATEGORICAL:
+            return clean_categorical_base(c)
+        return clean_text(c, collapse_whitespace=False)
+
+    def _median(self, expr: Column) -> Column:
+        return F.median(expr) if self.exact_stats else F.percentile_approx(expr, 0.5)
+
     # -- helpers (one job each) --------------------------------------------
 
     def _pre_stats_aggs(
@@ -641,7 +609,6 @@ class AutoETLPipeline:
         base: dict[str, Column],
         profiles: dict[str, ColumnProfile],
         skip_median: set[str] | None = None,
-        spec_outlier: set[str] | None = None,
     ) -> list[Column]:
         # the exact row count rides for free (a sampled profile's count
         # covers only ~1/k of the rows)
@@ -652,33 +619,7 @@ class AutoETLPipeline:
             if t not in (NUMERIC, DATE, CATEGORICAL):
                 aggs.append(F.avg(F.length(expr)).alias(f"{c}__len"))
             if t == NUMERIC and c not in (skip_median or ()):
-                if self.exact_stats:
-                    aggs.append(F.median(expr).alias(f"{c}__med"))
-                else:
-                    aggs.append(
-                        F.percentile_approx(expr, 0.5).alias(f"{c}__med")
-                    )
-            if c in (spec_outlier or ()):
-                # Speculative outlier-stat ride (r13, guide §1.2 "don't
-                # run a whole job for what an existing scan can carry"):
-                # when the profile estimates a numeric column
-                # fully clean, its imputed expression IS the cleaned base
-                # column (no median fill), so the outlier scalars can
-                # ride this same traversal. The full-scan null count
-                # validates the speculation; any disagreement falls back
-                # to the dedicated exact job (same values, one extra
-                # rare job — identical to the median-gating contract).
-                qs = F.array(F.lit(0.05), F.lit(0.95))
-                quant = (
-                    F.percentile(expr, qs)
-                    if self.exact_stats
-                    else F.percentile_approx(expr, qs)
-                )
-                aggs += [
-                    F.avg(expr).alias(f"{c}__omu"),
-                    F.stddev_samp(expr).alias(f"{c}__osd"),
-                    quant.alias(f"{c}__oq"),
-                ]
+                aggs.append(self._median(expr).alias(f"{c}__med"))
         return aggs
 
     @staticmethod
@@ -700,7 +641,6 @@ class AutoETLPipeline:
         spec_date: list[str],
         spec_text: list[str],
         skip_median: set[str] | None = None,
-        spec_outlier: set[str] | None = None,
     ) -> tuple[
         dict[str, int],
         dict[str, float],
@@ -708,31 +648,16 @@ class AutoETLPipeline:
         dict[str, list[tuple[str, int]]],
         dict[str, str],
         int,
-        dict[str, tuple],
     ]:
-        """Jobs 2+3 as ONE action: the stacked category/speculative-mode
+        """Job 2 as ONE action: the stacked category/speculative-mode
         groupBy is the collected plan; the global pre-stats aggregates
         (null counts, text lengths, medians) ride an ``observe`` below the
         stack — both are computed in the same traversal of the cleaned
         base. Returns (null_count, text_len, medians, cat_counts,
-        spec_top1, rows_total, spec_out_stats) where ``spec_top1`` is
-        keyed by stack label (column name, with the raw/ws variant suffix
-        for text columns), ``rows_total`` is the exact row count, and
-        ``spec_out_stats`` maps each ``spec_outlier`` column to its ridden
-        (mean, stddev, q05, q95) scalars."""
-        aggs = self._pre_stats_aggs(base, profiles, skip_median, spec_outlier)
-
-        def out_stats(d: dict) -> dict[str, tuple]:
-            out: dict[str, tuple] = {}
-            for c in spec_outlier or ():
-                q = d.get(f"{c}__oq")
-                out[c] = (
-                    d.get(f"{c}__omu"),
-                    d.get(f"{c}__osd"),
-                    q[0] if q else None,
-                    q[1] if q else None,
-                )
-            return out
+        spec_top1, rows_total) where ``spec_top1`` is keyed by stack label
+        (column name, with the raw/ws variant suffix for text columns) and
+        ``rows_total`` is the exact row count."""
+        aggs = self._pre_stats_aggs(base, profiles, skip_median)
 
         stacked_cols: dict[str, Column] = {c: base[c] for c in cat_cols}
         for c in spec_date:
@@ -747,15 +672,7 @@ class AutoETLPipeline:
             null_count, text_len, medians, rows_total = self._split_pre_stats(
                 row, base
             )
-            return (
-                null_count,
-                text_len,
-                medians,
-                {},
-                {},
-                rows_total,
-                out_stats(row.asDict()),
-            )
+            return null_count, text_len, medians, {}, {}, rows_total
 
         from pyspark.sql import Observation
 
@@ -783,15 +700,7 @@ class AutoETLPipeline:
                 by_col[r[_C]].append((r[_V], r["count"]))
             if r["__rn"] == 1 and r[_C] not in by_col:
                 spec_top1[r[_C]] = r[_V]
-        return (
-            null_count,
-            text_len,
-            medians,
-            by_col,
-            spec_top1,
-            rows_total,
-            out_stats(obs.get),
-        )
+        return null_count, text_len, medians, by_col, spec_top1, rows_total
 
     def _mode_stats(
         self, df: DataFrame, mode_cols: dict[str, Column]

@@ -130,47 +130,3 @@ def profile_frame_and_count(
     }
     return profiles, row["__rows"]
 
-
-def profile_frame(df: DataFrame) -> dict[str, ColumnProfile]:
-    """Profile every column in one aggregation job."""
-    return profile_frame_and_count(df)[0]
-
-
-# -- parse layer for the cleaned base ------------------------------------
-#
-# Once the profile has typed the columns, the cleaned base reads each
-# typed string column's parse result from a projected parse layer built
-# only where a cleaner reads it: the 16-format date chain for date-typed
-# strings, the full numeric cleaner for numeric-typed strings. At 100 TB
-# the regex date chain / numeric parse never run over columns that won't
-# use them.
-
-#: column-name prefixes for the parse layer of a prepared frame
-PD_PREFIX, NC_PREFIX = "__pd__", "__nc__"
-
-
-def prepare_parse_frame(
-    df: DataFrame,
-    date_cols: set[str],
-    numeric_cols: set[str],
-    compat: bool = True,
-) -> tuple[DataFrame, list[str]]:
-    """Project ``df`` plus a parse layer per typed string column:
-    ``__pd__<c>`` (multi-format date parse) for ``c`` in ``date_cols``,
-    ``__nc__<c>`` (the full numeric cleaner) for ``c`` in
-    ``numeric_cols``; text/categorical strings and non-string columns get
-    none. Returns (wide_frame, parsed_columns)."""
-    from mini_etl_project_spark.functions.cleaning import clean_numeric
-
-    exprs = [F.col(c) for c in df.columns]
-    parsed: list[str] = []
-    for c in df.columns:
-        if df.schema[c].dataType.typeName() != "string":
-            continue
-        if c in date_cols:
-            parsed.append(c)
-            exprs.append(parse_date_multi(F.col(c)).alias(PD_PREFIX + c))
-        elif c in numeric_cols:
-            parsed.append(c)
-            exprs.append(clean_numeric(c, compat=compat).alias(NC_PREFIX + c))
-    return df.select(*exprs), parsed

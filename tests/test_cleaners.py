@@ -12,7 +12,7 @@ from pyspark.sql import functions as F
 from mini_etl_project_spark.functions.cleaning import clean_numeric, clean_text
 from mini_etl_project_spark.functions.dates import parse_date_multi
 from mini_etl_project_spark.plans.pipeline import AutoETLPipeline
-from mini_etl_project_spark.plans.profile import profile_frame
+from mini_etl_project_spark.plans.profile import profile_frame_and_count
 
 
 def _eval_str(spark, expr_builder, values):
@@ -43,6 +43,38 @@ def test_clean_numeric_compat(spark):
 def test_clean_numeric_native_preserves_scientific(spark):
     got = _eval_str(spark, lambda c: clean_numeric(c, compat=False), ["1.2e3", "$5"])
     assert got == [1200.0, 5.0]
+
+
+def test_clean_numeric_double_matches_pandas_repr_path(spark):
+    """A double-typed numeric column cleans like the reference's
+    ``astype(str)`` → strip → ``to_numeric`` path at every edge of Python's
+    positional repr (0, 1e-4, 1e16, nan, ±inf) — not via Spark's
+    double→string cast, whose ``1.2345678E7`` the strip would mangle."""
+    import math
+
+    import pandas as pd
+
+    xs = [
+        0.0, -0.0, 1e-4, -1e-4, 9.99e-5, 1e-5, 1.5e-4, 1.5e-3, 123.25,
+        12345678.9, 1e9, -1e9, 9999999999999998.0, 1e16, -1e16, 1e300,
+        float("nan"), float("inf"), float("-inf"),
+    ]
+    s = pd.Series(xs, dtype="float64")
+    ref = pd.to_numeric(
+        s.astype(str)
+        .str.replace(r"[^\d\.,\-+]", "", regex=True)
+        .str.replace(",", "."),
+        errors="coerce",
+    )
+    df = spark.createDataFrame(pd.DataFrame({"i": range(len(xs)), "x": s}))
+    pipe = AutoETLPipeline(eager_summary=False, assume_partitioned=True)
+    pipe.transform(df)
+    assert pipe.column_types["x"] == "numeric"
+    got = {int(r["i"]): r["x"] for r in pipe._cached_base.collect()}
+    pipe.release()
+    for i, want in enumerate(ref):
+        want = None if math.isnan(want) else want
+        assert got[i] == want, (xs[i], got[i], want)
 
 
 # -- R8 date parse ---------------------------------------------------------
@@ -103,7 +135,7 @@ def test_detection_threshold_strict(spark):
     ten = ["1", "2", "3", "4", "5", "6", "7", "xxxxxxxxxxxxxxxx1", "xxxxxxxxxxxxxxx2", "xxxxxxxxxxxxxx3"]
     eight = ["1", "2", "3", "4", "5", "6", "7", "8", "xxxxxxxxxxxxxxx1", "xxxxxxxxxxxxxx2"]
     df = spark.createDataFrame(pd.DataFrame({"p70": ten, "p80": eight}))
-    prof = profile_frame(df)
+    prof = profile_frame_and_count(df)[0]
     assert prof["p70"].logical_type != "numeric"  # exactly 70 % → NOT numeric
     assert prof["p80"].logical_type == "numeric"  # 80 % → numeric
 
@@ -114,7 +146,7 @@ def test_detection_categorical_and_text(spark):
     cat = ["a", "b"] * 50                      # ratio 0.02, distinct 2 < 50
     txt = [f"long-unique-string-number-{i}" for i in range(100)]
     df = spark.createDataFrame(pd.DataFrame({"cat": cat, "txt": txt}))
-    prof = profile_frame(df)
+    prof = profile_frame_and_count(df)[0]
     assert prof["cat"].logical_type == "categorical"
     assert prof["txt"].logical_type == "text"
 
@@ -165,6 +197,22 @@ def test_outlier_clamped_to_quantile(spark):
     # 1000 has z > 3 → clamped to q95 = 1.0; dedup leaves a single row
     assert rows == [1.0]
     assert any("outlier" in n for n in pipe.cleaning_report["x"])
+
+
+def test_run_etl_lazy_reports_clamps_after_load(spark, tmp_path):
+    """With ``eager_summary=False`` no summary job fills the outlier
+    observation; ``run_etl``'s load does, and its clamp line must reach
+    the cleaning report."""
+    import pandas as pd
+
+    vals = [1.0] * 20 + [1000.0]
+    pipe = AutoETLPipeline(eager_summary=False)
+    pipe.run_etl(
+        spark,
+        pd.DataFrame({"x": vals}),
+        output_path=str(tmp_path / "out.parquet"),
+    )
+    assert "clamped 1 outlier values" in pipe.cleaning_report["x"]
 
 
 # -- R14/R15 imputation ----------------------------------------------------

@@ -182,19 +182,41 @@ def test_approx_profile_matches_exact_pipeline(spark):
         assert a_lines == e_lines, c
 
 
-def test_approx_profile_trims_parse_layer(spark):
-    """The parse frame must carry parse layers ONLY for
-    the columns whose detected type reads them — that projection is the
-    100 TB regex saving the flag exists for."""
-    from mini_etl_project_spark.plans.profile import prepare_parse_frame
+def test_cleaned_base_parses_only_typed_columns(spark, tmp_path):
+    """The persisted cleaned base runs the 16-format date chain only over
+    date-typed columns and the numeric strip regex only over numeric-typed
+    ones — the 100 TB regex saving, read off the optimized plan (each
+    occurrence is attributed to the input column it reads)."""
+    import re
 
-    df = _typed_frame(spark)
-    wide_trim, parsed_trim = prepare_parse_frame(
-        df, date_cols={"when"}, numeric_cols={"amount"}
+    from mini_etl_project_spark.plans.pipeline import AutoETLPipeline
+
+    # a parquet scan, not local data: a Project over a local relation is
+    # folded into it and leaves no expressions in the plan
+    _typed_frame(spark).write.parquet(str(tmp_path / "typed"))
+    df = spark.read.parquet(str(tmp_path / "typed"))
+    pipe = AutoETLPipeline(eager_summary=False, assume_partitioned=True)
+    pipe.transform(df)
+    plan = pipe._cached_base._jdf.queryExecution().optimizedPlan().toString()
+    pipe.release()
+    types = pipe.column_types
+    date_cols = {c for c, t in types.items() if t == "date"}
+    num_cols = {c for c, t in types.items() if t == "numeric"}
+    assert date_cols == {"when"}
+    assert num_cols == {"id", "amount"}
+
+    strip = r"[^\d\.,\-+]"
+    num_src = re.findall(
+        r"regexp_replace\((?:cast\()?(\w+)#\d+L?(?: as string\))?, "
+        + re.escape(strip),
+        plan,
     )
-    assert set(parsed_trim) == {"amount", "when"}
-    extras_trim = [c for c in wide_trim.columns if c.startswith("__")]
-    assert sorted(extras_trim) == ["__nc__amount", "__pd__when"]
+    assert len(num_src) == plan.count(strip) > 0
+    assert set(num_src) == num_cols
+
+    date_src = re.findall(r"gettimestamp\(trim\((\w+)#\d+L?,", plan)
+    assert len(date_src) == plan.count("try_to_date") > 0
+    assert set(date_src) == date_cols
 
 
 def test_approx_profile_empty_sample_falls_back(spark):
