@@ -3,7 +3,7 @@
 
 The reference runs ~7 eager pandas passes with per-row Python loops. This
 engine instead runs a CONSTANT number of aggregation jobs (2 always, at
-most 7) to gather the data-dependent facts — logical types, null ratios,
+most 6) to gather the data-dependent facts — logical types, null ratios,
 medians, modes, category frequencies, outlier stats — then compiles
 everything into ONE fused Project + dropDuplicates plan that Catalyst
 collapses into a single whole-stage-codegen'd pass over the data.
@@ -14,33 +14,33 @@ state.
 Job structure (SURVEY.md §3/§4.3):
 
 1. profile        — raw frame, or its deterministic 1/k hash sample
-                    (``profile_sample_mod``): types only (plans/profile.py,
+                    (``profile_sample_mod``): types (plans/profile.py,
                     HLL distincts — the type rules never need exact
-                    counts).
-2. fused stats    — ONE action over the cleaned base: the stacked
-                    category/speculative-mode groupBy is the collected plan
-                    (full value counts for every categorical column — rare
-                    merge + post-merge categorical mode — plus windowed
-                    top-1 rows for every bounded-cardinality non-numeric
-                    column, SPECULATED because mode need isn't known until
-                    null counts land; deterministic tie-break: highest
-                    count, then smallest value — pandas ``mode()[0]``
-                    parity; Spark's ``F.mode`` is tie-nondeterministic,
-                    SURVEY.md §7); the global pre-stats aggregates
-                    (per-column null counts, text mean lengths driving the
-                    conditional whitespace collapse, numeric medians —
-                    exact interpolating, pandas parity) and the exact row
-                    count ride the same scan as an ``observe``. This
-                    action also materializes the persisted cleaned base.
+                    counts), plus the per-type cleaned non-null counts
+                    that PREDICT which columns need a fill.
+2. fused stats    — ONE action over the cleaned base (``_fill_stats``):
+                    the stacked (column, value) groupBy is the collected
+                    plan — full value counts for every categorical column
+                    (rare merge + post-merge categorical mode) and the
+                    top-1 value of every non-numeric column predicted to
+                    need a fill (deterministic tie-break: highest count,
+                    then smallest value — pandas ``mode()[0]`` parity);
+                    the global aggregates (per-column null counts, text
+                    mean lengths driving the conditional whitespace
+                    collapse, the predicted numeric medians — exact
+                    interpolating, pandas parity) and the exact row count
+                    ride the same scan as an ``observe``. This action also
+                    materializes the persisted cleaned base.
 
 Conditional jobs, each at most once:
 
 - sample re-profile — the 1/k sample came back empty or with a parse
   ratio near the 0.7 type threshold: profile the full frame instead.
-- median fallback — a numeric column the profile estimated fully clean
-  (so job 2 skipped its median) has nulls after all.
-- dedicated mode job — a column needing a mode fill whose cardinality
-  exceeded the speculation bound.
+- mispredict fallback — ``_fill_stats`` again, for the fills the
+  full-scan null counts need but job 2 did not compute (a numeric column
+  whose every profiled row parsed, a column the 1/k sample saw no null
+  of) and for text top-1s whose whitespace variant the full-scan length
+  decided the other way.
 - outlier job — any kept numeric column: mean, stddev_samp (= pandas
   ddof=1), percentiles 0.05/0.95 of the imputed values. Outlier COUNTS
   ride an ``observe`` on the pre-dedup node (filled by the first
@@ -51,7 +51,7 @@ Conditional jobs, each at most once:
 - summary — final frame (post-dedup), eager mode only; its single agg
   action also materializes the observation.
 
-So ``transform`` runs 2 to 7 jobs eager, 2 to 6 lazy
+So ``transform`` runs 2 to 6 jobs eager, 2 to 5 lazy
 (``eager_summary=False``), + the caller's terminal action. At 100 TB
 additionally switch ``exact_stats`` off — medians/percentiles go
 approximate (partial-aggregable, no exact sort-based percentile state) —
@@ -70,7 +70,7 @@ from __future__ import annotations
 from typing import Any
 
 from pyspark import StorageLevel
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from mini_etl_project_spark.functions.cleaning import (
@@ -84,18 +84,16 @@ from mini_etl_project_spark.plans.profile import (
     CATEGORICAL,
     DATE,
     NUMERIC,
-    ColumnProfile,
     profile_frame_and_count,
 )
 
 _V = "__etl_value"
 _C = "__etl_column"
 
-#: Speculative-mode stack labels: ``<col>\x1fr`` = raw cleaned value,
-#: ``<col>\x1fw`` = whitespace-collapsed variant (\x1f never appears in a
-#: real column name).
-_RAW_VARIANT = "\x1fr"
-_WS_VARIANT = "\x1fw"
+
+def _collapse(c: Column) -> Column:
+    """The text cleaner's whitespace collapse (ETL_PROJECT.py:88-89)."""
+    return F.regexp_replace(c, r"\s+", " ")
 
 
 def _stacked(df: DataFrame, cols: dict[str, Column]) -> DataFrame:
@@ -137,11 +135,11 @@ class AutoETLPipeline:
         # content-keyed, partitioning-independent). Every DATA decision
         # downstream stays exact: fill values (median/mode), outlier
         # scalars, null-ratio drops, and the rare-category threshold all
-        # read full-scan jobs; only the type decisions and the two
-        # profile-count report lines ("invalid values: N", speculation
-        # bound) become sample-extrapolated estimates. The 100x sweep
-        # measured the full-scan regex profile at 136-213 s — this is the
-        # switch that cuts it.
+        # read full-scan jobs; only the type decisions, the fill
+        # prediction (checked against the full-scan null counts) and the
+        # "invalid values: N" report line become sample-extrapolated
+        # estimates. The 100x sweep measured the full-scan regex profile
+        # at 136-213 s — this is the switch that cuts it.
         self.profile_sample_mod = profile_sample_mod
         # The degenerate-partitioning probe (ensure_parallelism) physically
         # plans the input frame (~0.8 s of driver time on expression-heavy
@@ -169,13 +167,6 @@ class AutoETLPipeline:
                 if abs(ok / p.non_null - 0.7) <= cls._TYPE_RATIO_BAND:
                     return True
         return False
-
-    #: Columns with more profiled distincts than this are not speculated
-    #: into the fused stats job (their value counts would dominate its
-    #: shuffle); they get a dedicated mode job only if they truly need
-    #: a mode fill. 100k (col,value) partial counts per column is noise
-    #: at any scale.
-    _SPECULATE_MAX_DISTINCT = 100_000
 
     # Cached cleaned-base projections live here so sequential pipelines
     # (bench loops, notebook re-runs) never accumulate cached plans: each
@@ -240,8 +231,8 @@ class AutoETLPipeline:
         # ~1/k row sample of it (content-keyed hash: independent of
         # partitioning, stable across runs). Type rules are ratio
         # thresholds, which the sample estimates without bias; distinct
-        # counts only feed coarse bounds (<50 categorical, speculation
-        # cap) and never overcount under sampling. Its row count covers
+        # counts only feed the coarse <50 categorical bound and never
+        # overcount under sampling. Its row count covers
         # only the profiled rows; the exact n_rows arrives with the fused
         # stats job below.
         k = max(1, self.profile_sample_mod or 1)
@@ -296,139 +287,95 @@ class AutoETLPipeline:
 
         base: dict[str, Column] = {c: F.col(c) for c in df.columns}
 
-        # Job 2, the fused stats job: the stacked category/mode groupBy is
-        # the action; the global aggregates (null counts, text mean
-        # lengths, numeric medians) ride it as an ``observe`` on the same
-        # scan — computed map-side on the rows already flowing into the
-        # stack, so the cleaned base is traversed ONCE for both.
-        #
-        # Mode columns aren't knowable before the null counts arrive, so
-        # they are SPECULATED: every non-numeric, non-categorical column
-        # whose profiled cardinality is bounded contributes top-1 rows
-        # (text columns in both raw and whitespace-collapsed variants —
-        # the collapse decision needs job 2's lengths and is resolved
-        # driver-side after the fact); unused results are discarded. The
-        # cardinality bound keeps the speculation scale-safe: a 100 TB
-        # high-distinct text column never ships its value counts unless it
-        # actually needs a mode (rare; dedicated fallback job below).
+        # Fill prediction: a column's median or top-1 is READ only when its
+        # cleaned values have nulls. The profile counts, per type, the
+        # profiled rows the cleaner keeps (numeric parses, date parses,
+        # text-cleaned values), so a column may need a fill iff that count
+        # is below the profiled row count. For dates and text the profile
+        # runs the cleaner itself: exact at k = 1, and under a 1/k sample a
+        # predicted need is real (every sampled row is a row). The numeric
+        # parse count estimates the compat strip. A text column is stacked
+        # in the whitespace variant its profiled cleaned length predicts.
         cat_cols = [c for c in df.columns if self.column_types[c] == CATEGORICAL]
-        spec_date: list[str] = []
-        spec_text: list[str] = []
-        # Under a 1/k sampled profile, a high-cardinality column's sampled
-        # distinct count is ~distinct/k (near-unique values mostly appear
-        # once), so the speculation cap scales down with it.
-        spec_bound = max(1, self._SPECULATE_MAX_DISTINCT // k)
-        # Profile-count gating (r12, guide §1.2 "don't compute things you
-        # throw away"): a column's median/mode is READ only when the
-        # cleaned column has nulls. The profiled rows' parse counts
-        # estimate that for numeric/date columns (cleaned null ⇔ parse
-        # failure ∨ raw null): when every profiled row parsed,
-        # skip the speculative median (an exact-percentile/approx-sketch
-        # agg per numeric column — the single most expensive term of the
-        # fused observe) and the date column's speculative mode rows. The
-        # estimate gates SPECULATION only, never a data decision: if the
-        # full-scan null counts later disagree, the existing leftover-mode
-        # job covers dates and the dedicated median job below covers
-        # numerics — same exact values, one extra (rare) job.
-        est_clean_full: set[str] = set()
-        if sample_rows:
-            for c in df.columns:
-                t = self.column_types[c]
-                ok = (
-                    profiles[c].numeric_ok
-                    if t == NUMERIC
-                    else profiles[c].date_ok if t == DATE else -1
-                )
-                if ok == sample_rows:
-                    est_clean_full.add(c)
+        text_cols = [
+            c
+            for c in df.columns
+            if self.column_types[c] not in (NUMERIC, DATE, CATEGORICAL)
+        ]
+        aggs: list[Column] = [F.count(F.lit(1)).alias("__rows")]
+        aggs += [
+            F.sum(base[c].isNull().cast("long")).alias(f"{c}__null")
+            for c in df.columns
+        ]
+        aggs += [F.avg(F.length(base[c])).alias(f"{c}__len") for c in text_cols]
+        stacked: dict[str, Column] = {c: base[c] for c in cat_cols}
+        ws_predicted: set[str] = set()
         for c in df.columns:
-            t = self.column_types[c]
-            if t in (NUMERIC, CATEGORICAL):
+            t, p = self.column_types[c], profiles[c]
+            ok = {NUMERIC: p.numeric_ok, DATE: p.date_ok}.get(t, p.text_ok)
+            if t == CATEGORICAL or ok >= sample_rows:
                 continue
-            if profiles[c].distinct > spec_bound:
-                continue
-            if t == DATE and c in est_clean_full:
-                continue
-            (spec_date if t == DATE else spec_text).append(c)
-        (
-            null_count,
-            text_len,
-            medians,
-            cat_counts,
-            spec_top1,
-            n_rows,  # exact, from the full-scan fused job
-        ) = self._fused_stats(
-            base_df,
-            base,
-            profiles,
-            cat_cols,
-            spec_date,
-            spec_text,
-            skip_median=est_clean_full,
+            if t == NUMERIC:
+                aggs.append(self._median(base[c]).alias(f"{c}__med"))
+            elif t != DATE and (p.text_len or 0.0) > 20:
+                stacked[c] = _collapse(base[c])
+                ws_predicted.add(c)
+            else:
+                stacked[c] = base[c]
+        # Job 2, the fused stats job: every pre-stat, predicted median,
+        # predicted top-1 and category count in one action, which also
+        # materializes the persisted cleaned base.
+        stats, top1, cat_counts = self._fill_stats(
+            base_df, aggs, stacked, cat_cols
         )
+        n_rows = stats["__rows"]  # exact, from the full scan
+        null_count = {c: stats[f"{c}__null"] for c in df.columns}
 
         # Finalize cleaning expressions (on top of the cleaned base:
         # whitespace collapse after trim/nullify ≡ the reference's order).
         cleaned = dict(base)
         collapsed: set[str] = set()
-        for c in df.columns:
-            t = self.column_types[c]
-            if t in (NUMERIC, DATE, CATEGORICAL):
-                continue
-            if (text_len.get(c) or 0.0) > 20:  # conditional collapse (:88-89)
-                cleaned[c] = F.regexp_replace(base[c], r"\s+", " ")
+        for c in text_cols:
+            if (stats[f"{c}__len"] or 0.0) > 20:  # conditional collapse (:88-89)
+                cleaned[c] = _collapse(base[c])
                 collapsed.add(c)
             self.cleaning_report[c].append("cleaned text column")
 
         # Missing-value classification (R13–R15, :129-170); the report
         # lines are emitted further down in the reference's order.
         dropped: list[str] = []
-        fills: dict[str, Any] = {}
         mode_needed: list[str] = []
-        med_missing: list[str] = []
+        med_needed: list[str] = []
         for c in df.columns:
             ratio = (null_count[c] / n_rows) if n_rows else 0.0
             if ratio > self.missing_threshold:
                 dropped.append(c)
+            elif ratio > 0 and self.column_types[c] == NUMERIC:
+                med_needed.append(c)
             elif ratio > 0:
-                if self.column_types[c] == NUMERIC:
-                    if c in medians:
-                        fills[c] = medians[c]
-                    else:
-                        med_missing.append(c)
-                else:
-                    mode_needed.append(c)
-        if med_missing:
-            # The profile estimated zero cleaned-nulls but the full scan
-            # found some: compute the skipped medians exactly, one
-            # dedicated agg (rare — only on a profile/full disagreement).
-            row = base_df.agg(
-                *[self._median(F.col(c)).alias(f"{c}__med") for c in med_missing]
-            ).collect()[0]
-            for c in med_missing:
-                fills[c] = row[f"{c}__med"]
+                mode_needed.append(c)
 
-        # Resolve speculated top-1 rows into the modes actually needed;
-        # columns that dodged speculation (cardinality above the bound)
-        # get the dedicated stacked job as before.
-        top1: dict[str, str] = {}
-        leftover: list[str] = []
-        for c in mode_needed:
-            if self.column_types[c] == CATEGORICAL:
-                continue
-            variant = (
-                c
-                if self.column_types[c] == DATE
-                else c + (_WS_VARIANT if c in collapsed else _RAW_VARIANT)
+        # Mispredict fallback: a fill the full-scan null counts ask for but
+        # job 2 did not compute, or a text top-1 stacked in the other
+        # whitespace variant than the full-scan length chose. One more
+        # ``_fill_stats`` call, over the final cleaning expressions.
+        late_med = [c for c in med_needed if f"{c}__med" not in stats]
+        late_top = [
+            c
+            for c in mode_needed
+            if c not in cat_cols
+            and (c not in stacked or (c in ws_predicted) != (c in collapsed))
+        ]
+        if late_med or late_top:
+            late_stats, late_top1, _ = self._fill_stats(
+                base_df,
+                [self._median(base[c]).alias(f"{c}__med") for c in late_med],
+                {c: cleaned[c] for c in late_top},
+                [],
             )
-            if variant in spec_top1:
-                top1[c] = spec_top1[variant]
-            else:
-                leftover.append(c)
-        if leftover:
-            top1.update(
-                self._mode_stats(base_df, {c: cleaned[c] for c in leftover})
-            )
+            stats.update(late_stats)
+            top1.update(late_top1)
+        fills: dict[str, Any] = {c: stats[f"{c}__med"] for c in med_needed}
 
         # Rare-value merge (:114-124) over the collected counts.
         threshold = max(2, 0.01 * n_rows)  # :117
@@ -490,7 +437,7 @@ class AutoETLPipeline:
         # Mode fills: categorical modes from the POST-merge counts (the
         # reference imputes after cleaning, so 'Other' competes as a value;
         # tie → smallest value, pandas mode()[0] parity); everything else
-        # from the windowed top-1.
+        # from the fill-stats top-1.
         for c in mode_needed:
             if self.column_types[c] == CATEGORICAL:
                 counts = merged_counts.get(c) or {}
@@ -604,133 +551,47 @@ class AutoETLPipeline:
 
     # -- helpers (one job each) --------------------------------------------
 
-    def _pre_stats_aggs(
-        self,
-        base: dict[str, Column],
-        profiles: dict[str, ColumnProfile],
-        skip_median: set[str] | None = None,
-    ) -> list[Column]:
-        # the exact row count rides for free (a sampled profile's count
-        # covers only ~1/k of the rows)
-        aggs: list[Column] = [F.count(F.lit(1)).alias("__rows_total")]
-        for c, expr in base.items():
-            aggs.append(F.sum(expr.isNull().cast("long")).alias(f"{c}__null"))
-            t = profiles[c].logical_type
-            if t not in (NUMERIC, DATE, CATEGORICAL):
-                aggs.append(F.avg(F.length(expr)).alias(f"{c}__len"))
-            if t == NUMERIC and c not in (skip_median or ()):
-                aggs.append(self._median(expr).alias(f"{c}__med"))
-        return aggs
-
-    @staticmethod
-    def _split_pre_stats(
-        row, base: dict[str, Column]
-    ) -> tuple[dict[str, int], dict[str, float], dict[str, float], int]:
-        d = dict(row) if isinstance(row, dict) else row.asDict()
-        null_count = {c: d[f"{c}__null"] for c in base}
-        text_len = {c: d[f"{c}__len"] for c in base if f"{c}__len" in d}
-        medians = {c: d[f"{c}__med"] for c in base if f"{c}__med" in d}
-        return null_count, text_len, medians, d["__rows_total"]
-
-    def _fused_stats(
+    def _fill_stats(
         self,
         df: DataFrame,
-        base: dict[str, Column],
-        profiles: dict[str, ColumnProfile],
-        cat_cols: list[str],
-        spec_date: list[str],
-        spec_text: list[str],
-        skip_median: set[str] | None = None,
-    ) -> tuple[
-        dict[str, int],
-        dict[str, float],
-        dict[str, float],
-        dict[str, list[tuple[str, int]]],
-        dict[str, str],
-        int,
-    ]:
-        """Job 2 as ONE action: the stacked category/speculative-mode
-        groupBy is the collected plan; the global pre-stats aggregates
-        (null counts, text lengths, medians) ride an ``observe`` below the
-        stack — both are computed in the same traversal of the cleaned
-        base. Returns (null_count, text_len, medians, cat_counts,
-        spec_top1, rows_total) where ``spec_top1`` is keyed by stack label
-        (column name, with the raw/ws variant suffix for text columns) and
-        ``rows_total`` is the exact row count."""
-        aggs = self._pre_stats_aggs(base, profiles, skip_median)
-
-        stacked_cols: dict[str, Column] = {c: base[c] for c in cat_cols}
-        for c in spec_date:
-            stacked_cols[c] = base[c]
-        for c in spec_text:
-            stacked_cols[c + _RAW_VARIANT] = base[c]
-            stacked_cols[c + _WS_VARIANT] = F.regexp_replace(
-                base[c], r"\s+", " "
-            )
-        if not stacked_cols:
-            row = df.agg(*aggs).collect()[0]
-            null_count, text_len, medians, rows_total = self._split_pre_stats(
-                row, base
-            )
-            return null_count, text_len, medians, {}, {}, rows_total
-
+        aggs: list[Column],
+        stacked: dict[str, Column],
+        count_labels: list[str],
+    ) -> tuple[dict[str, Any], dict[str, str], dict[str, list]]:
+        """Every fill statistic as ONE action: the stacked (label, value)
+        groupBy is the collected plan, and ``aggs`` (null counts, lengths,
+        medians) ride an ``observe`` on the same scan. Per label it keeps
+        the top-1 value — ``min(struct(-count, value))``: highest count,
+        then smallest value, pandas ``mode()[0]`` parity (Spark's
+        ``F.mode`` is tie-nondeterministic, SURVEY.md §7) — and, for
+        ``count_labels``, the full value counts. The aggregate form is
+        partial-aggregable map-side and never sorts a label's values inside
+        one task, as a ``row_number`` window would. Returns (aggs by alias,
+        top-1 by label, counts by count label)."""
+        if not stacked:
+            return df.agg(*aggs).collect()[0].asDict(), {}, {}
         from pyspark.sql import Observation
 
         obs = Observation()
-        observed = df.observe(obs, *aggs)
-        w = Window.partitionBy(_C).orderBy(F.desc("count"), F.asc(_V))
-        grouped = (
-            _stacked(observed, stacked_cols)
-            .filter(F.col(_V).isNotNull())
-            .groupBy(_C, _V)
-            .count()
-            .withColumn("__rn", F.row_number().over(w))
-        )
-        keep = F.col("__rn") == 1
-        if cat_cols:
-            keep = keep | F.col(_C).isin(cat_cols)
-        rows = grouped.filter(keep).collect()
-        null_count, text_len, medians, rows_total = self._split_pre_stats(
-            obs.get, base
-        )
-        by_col: dict[str, list[tuple[str, int]]] = {c: [] for c in cat_cols}
-        spec_top1: dict[str, str] = {}
-        for r in rows:
-            if r[_C] in by_col:
-                by_col[r[_C]].append((r[_V], r["count"]))
-            if r["__rn"] == 1 and r[_C] not in by_col:
-                spec_top1[r[_C]] = r[_V]
-        return null_count, text_len, medians, by_col, spec_top1, rows_total
-
-    def _mode_stats(
-        self, df: DataFrame, mode_cols: dict[str, Column]
-    ) -> dict[str, str]:
-        """The dedicated mode job for columns whose cardinality dodged
-        speculation (by construction HIGH-distinct columns): one stacked
-        groupBy, then top-1-by-(count desc, value asc) per column as an
-        AGGREGATE, ``min(struct(-count, value))``, which compares fields
-        lexicographically and so selects exactly a window's rn=1 row. A
-        window form would sort every (value, count) row of a label inside
-        ONE partition (partitionBy label — a 400k-row single-task sort for
-        a 600k-row text column at sf0.1, measured ~1.9 s); the agg form is
-        partial-aggregable map-side and never materializes a per-label
-        sort (guide §2.3 "aggregate before you shuffle"). Returns
-        {mode_col: top_value}."""
+        if aggs:
+            df = df.observe(obs, *aggs)
+        top = F.struct((-F.col("count")).alias("nc"), F.col(_V))
+        counted = F.when(F.col(_C).isin(count_labels), F.struct(_V, "count"))
         rows = (
-            _stacked(df, mode_cols)
+            _stacked(df, stacked)
             .filter(F.col(_V).isNotNull())
             .groupBy(_C, _V)
             .count()
             .groupBy(_C)
-            .agg(
-                F.min(
-                    F.struct((-F.col("count")).alias("nc"), F.col(_V).alias("v"))
-                ).alias("b")
-            )
-            .select(_C, F.col("b.v").alias(_V))
+            .agg(F.min(top).alias("top"), F.collect_list(counted).alias("counts"))
             .collect()
         )
-        return {r[_C]: r[_V] for r in rows}
+        top1 = {r[_C]: r["top"][_V] for r in rows}
+        counts: dict[str, list[tuple[str, int]]] = {c: [] for c in count_labels}
+        for r in rows:
+            if r[_C] in counts:
+                counts[r[_C]] = [(x[_V], x["count"]) for x in r["counts"]]
+        return (obs.get if aggs else {}), top1, counts
 
     def _outlier_stats(
         self, df: DataFrame, cols: dict[str, Column]

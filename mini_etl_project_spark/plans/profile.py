@@ -4,14 +4,18 @@ ETL_PROJECT.py:16-41).
 The reference scans every column ~4 times with per-row Python. Here the
 whole profile is ONE wide aggregation job — per column: non-null count,
 HLL distinct count (``approx_count_distinct``), mean stringified length,
-date-parse successes (16-format chain), numeric-parse successes — and the
+date-parse successes (16-format chain), numeric-parse successes, and, for
+string columns, the text cleaner's non-null count and mean cleaned length
+(``t = clean_text(s, False)``: ``count(t)``, ``avg(length(t))``) — and the
 driver applies the reference's strict threshold rules to produce a
-logical type per column.
+logical type per column. The per-type cleaned non-null counts also tell
+the pipeline which columns may need a fill, and the cleaned length which
+whitespace variant a text fill reads.
 
 This two-phase profile→plan flow is the engine's core custom machinery
 (SURVEY.md §4.2): data-dependent typed plans, no custom Catalyst rules.
 
-Scale: one job, ~5 aggregates per column, all codegen'd and partial-
+Scale: one job, ~7 aggregates per column, all codegen'd and partial-
 aggregable. Detection only compares the distinct count against coarse
 bounds (the 50 / 30 %-ratio categorical rule), where HLL's ~2 % error is
 immaterial — an exact multi-column COUNT(DISTINCT) would cost a whole
@@ -46,6 +50,8 @@ class ColumnProfile:
     avg_len: float | None  # mean length of str-cast non-null values
     date_ok: int
     numeric_ok: int
+    text_ok: int = 0  # non-null values after the text cleaner
+    text_len: float | None = None  # their mean length
 
     @property
     def unique_ratio(self) -> float:
@@ -90,6 +96,10 @@ def profile_frame_and_count(
         # typed columns can never reach (they pass an earlier rule at
         # 100 %) — skip the cast-to-string length scan for them.
         length_agg = F.avg(F.length(s))
+        # typed columns reach text/unknown only when all-null, where a 0
+        # cleaned count is exact
+        text_ok = F.lit(0).cast("long")
+        text_len = F.lit(None).cast("double")
         if kind in ("double", "float", "decimal"):
             date_ok = F.lit(0).cast("long")
             num_ok = F.count(raw)
@@ -100,6 +110,7 @@ def profile_frame_and_count(
             length_agg = F.lit(None).cast("double")
         else:
             from mini_etl_project_spark.functions.cleaning import (
+                clean_text,
                 guarded_try_double,
                 ws_trim,
             )
@@ -109,12 +120,17 @@ def profile_frame_and_count(
             # date branch already strips all whitespace.
             date_ok = F.count(parse_date_multi(s))
             num_ok = F.count(guarded_try_double(ws_trim(s)))
+            # exactly the text/unknown cleaned base
+            t = clean_text(s, False)
+            text_ok, text_len = F.count(t), F.avg(F.length(t))
         aggs += [
             F.count(raw).alias(f"{c}__nn"),
             F.approx_count_distinct(raw).alias(f"{c}__dc"),
             length_agg.alias(f"{c}__len"),
             date_ok.alias(f"{c}__date"),
             num_ok.alias(f"{c}__num"),
+            text_ok.alias(f"{c}__txt"),
+            text_len.alias(f"{c}__tlen"),
         ]
     row = df.agg(*aggs).collect()[0]
     profiles = {
@@ -125,6 +141,8 @@ def profile_frame_and_count(
             avg_len=row[f"{c}__len"],
             date_ok=row[f"{c}__date"],
             numeric_ok=row[f"{c}__num"],
+            text_ok=row[f"{c}__txt"],
+            text_len=row[f"{c}__tlen"],
         )
         for c in df.columns
     }

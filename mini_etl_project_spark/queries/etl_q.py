@@ -487,7 +487,8 @@ def q_etl_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     The profile→plan machinery chooses types and cleaning at runtime; its
     semantics are pinned by the golden-parity and unit tests
     (tests/test_pipeline_golden.py, tests/test_cleaners.py); per-SF row
-    counts are pinned by tests/test_cleaners.py::test_pipeline_sf_rowcounts.
+    counts, sorted-row sha256 and the ``price`` fill are pinned by
+    tests/test_round2.py::test_pipeline_sf_rowcounts.
 
     ``exact_stats=False`` is the 100 TB posture: approx medians/percentiles
     are partial-aggregable, so every stats job is a straight map-side-

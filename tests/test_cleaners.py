@@ -226,12 +226,27 @@ def test_median_and_mode_fill(spark):
                 "num": ["1", "2", "3", "4", "N/A"],
                 "txt": ["aaaaaaaaaaaaaaaaaaaaaaa-b", None, "aaaaaaaaaaaaaaaaaaaaaaa-b",
                         "zzzzzzzzzzzzzzzzzzzzzzz-c", "zzzzzzzzzzzzzzzzzzzzzzz-a"],
+                # every raw value parses, so the profile predicts no fill,
+                # but the compat strip nulls "inf": the full-scan null
+                # count sends the median to the mispredict fallback
+                "inf": ["1", "2", "3", "4", "inf"],
             }
         )
     )
     pipe = AutoETLPipeline()
+    calls = []
+    real = pipe._fill_stats
+
+    def spy(*a):
+        calls.append(a)
+        return real(*a)
+
+    pipe._fill_stats = spy
     out = pipe.transform(df)
     nums = sorted(r["num"] for r in out.collect())
     assert nums == [1.0, 2.0, 2.5, 3.0, 4.0]          # median 2.5 (interpolated)
     txts = [r["txt"] for r in out.collect()]
     assert txts.count("aaaaaaaaaaaaaaaaaaaaaaa-b") == 3  # mode fills the null
+    assert sorted(r["inf"] for r in out.collect()) == [1.0, 2.0, 2.5, 3.0, 4.0]
+    assert "filled missing values with median: 2.5" in pipe.cleaning_report["inf"]
+    assert len(calls) == 2                            # fused stats + fallback

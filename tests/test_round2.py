@@ -1,6 +1,6 @@
 """Round-2 operator tests: nearest as-of join (incl. the row-level NULL
 payload semantics), interval-overlap join, and the AutoETL per-SF row-count
-tripwires (VERDICT r1 items 7 and 8), plus the sampled-vs-full-profile
+and output-hash tripwires (VERDICT r1 items 7 and 8), plus the sampled-vs-full-profile
 differential for `q_etl_pipeline`."""
 
 from __future__ import annotations
@@ -105,24 +105,64 @@ def test_interval_join_open_bounds(spark):
     assert closed.count() == 1 and opened.count() == 0
 
 
-#: Pinned output row counts for the generic (rows-only) AutoETL query —
-#: the regression tripwire VERDICT r1 item 8 asked for.
-_PIPELINE_GOLDEN_COUNTS = {"0.001": 6000, "0.01": 59999, "0.1": 599995}
+#: Pinned output of the generic (rows-only) AutoETL query per SF: row
+#: count (the regression tripwire VERDICT r1 item 8 asked for), the
+#: sha256 of its sorted full-precision row reprs, and the ``price`` column's
+#: cleaning-report lines (its mode fill is the one data-dependent value
+#: the output alone does not name). The same at 2 and 4 local cores.
+_PIPELINE_GOLDEN = {
+    "0.001": (
+        6000,
+        "437fc4dda7819f7596db635cc5f1deda9cc4155ae4fbf0c7db4bdc3f67c1a271",
+        "$32637.82",
+    ),
+    "0.01": (
+        59999,
+        "01914b93f47dff6cb1206b54924a704fd95013ed679da296ce36788534d2272a",
+        "$35870.85",
+    ),
+    "0.1": (
+        599995,
+        "f84c06b2d3ba689bc55eb7f549365d623305a595452922ab8266e54e550a11d4",
+        "$26750.52",
+    ),
+}
+
+
+def _check_pipeline_golden(spark, monkeypatch, sf_dir, sf):
+    import hashlib
+    import os
+
+    from mini_etl_project_spark.queries import QUERIES, etl_q
+
+    pipes = []
+    real = etl_q.AutoETLPipeline
+
+    def capture(**kw):
+        pipes.append(real(**kw))
+        return pipes[-1]
+
+    monkeypatch.setattr(etl_q, "AutoETLPipeline", capture)
+    sf_path = os.path.join(os.path.dirname(sf_dir), f"sf{sf}")
+    rows = QUERIES["q_etl_pipeline"](spark, sf_path).collect()
+    n, digest, price_fill = _PIPELINE_GOLDEN[sf]
+    assert len(rows) == n
+    text = "\n".join(sorted(repr(tuple(r)) for r in rows))
+    assert hashlib.sha256(text.encode()).hexdigest() == digest
+    assert pipes[0].cleaning_report["price"] == [
+        "detected column type: unknown",
+        "cleaned text column",
+        f"filled missing values with value: {price_fill}",
+    ]
 
 
 @pytest.mark.parametrize("sf", ["0.001", "0.01"])
-def test_pipeline_sf_rowcounts(spark, sf):
-    from mini_etl_project_spark.queries import QUERIES
-
-    n = QUERIES["q_etl_pipeline"](spark, f"/root/testdata/sf{sf}").count()
-    assert n == _PIPELINE_GOLDEN_COUNTS[sf]
+def test_pipeline_sf_rowcounts(spark, monkeypatch, sf_dir, sf):
+    _check_pipeline_golden(spark, monkeypatch, sf_dir, sf)
 
 
-def test_pipeline_sf01_rowcount(spark):
-    from mini_etl_project_spark.queries import QUERIES
-
-    n = QUERIES["q_etl_pipeline"](spark, "/root/testdata/sf0.1").count()
-    assert n == _PIPELINE_GOLDEN_COUNTS["0.1"]
+def test_pipeline_sf01_rowcount(spark, monkeypatch, sf_dir):
+    _check_pipeline_golden(spark, monkeypatch, sf_dir, "0.1")
 
 
 def test_pipeline_sampled_profile_matches_full_profile(

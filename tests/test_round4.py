@@ -105,45 +105,123 @@ def test_stateful_v2_live_equals_v1(spark, sf_dir):
     assert v1 == v2
 
 
-# -- pipeline fused-stats speculation fallback ------------------------------
+# -- pipeline fill-stats mispredict fallback ---------------------------------
 
 
-def test_fused_stats_leftover_path_matches_speculation(spark):
-    """A mode-needing column whose cardinality exceeds the speculation
-    bound takes the dedicated fallback job; forcing EVERY column down
-    that path (bound = 0) must not change any output or report line —
-    speculative and dedicated mode computation are the same math."""
+_MISPREDICT_SCHEMA = "id string, tag string, day string, note string"
+
+
+def _mispredict_row(i: int, role: str) -> tuple:
+    """One row of the mispredict frame; ``role`` plants the dirt."""
+    tag = "value_string_modal" if i % 4 == 0 else f"value_string_{i}"
+    day = f"2024-01-{1 + i % 28:02d}"
+    # whitespace variants of one value: the raw top-1 is the 4x
+    # "b_value_modal_x", the collapsed top-1 the 7x "mode candidate one"
+    planted = (
+        ["mode  candidate  one"] * 3
+        + ["mode candidate one"] * 2
+        + ["mode   candidate one"] * 2
+        + ["b_value_modal_x"] * 4
+    )
+    note = planted[i] if i < len(planted) else f"short note {i}"
+    if role == "tag_null":
+        tag = None
+    elif role == "tag_na":
+        tag = "N/A"
+    elif role == "day_bad":
+        day = "bogus"
+    elif role == "note_long":
+        note = f"long note {i} " + "x" * 50
+    elif role == "note_null":
+        note = None
+    return (str(i), tag, day, note)
+
+
+def test_fill_stats_mispredict_fallback_matches_full_profile(spark):
+    """Under a 1/k hash-sampled profile the fill prediction can miss: the
+    sample holds none of ``tag``'s null/sentinel rows nor ``day``'s
+    unparseable rows (both predicted fill-free), and ``note``'s sampled
+    cleaned mean length sits below 20 while the full frame's is above it
+    (its top-1 predicted in the wrong whitespace variant). The mispredict
+    fallback must recompute exactly those fills: output, report and types
+    equal the every-row profile, which predicts every fill right."""
+    from collections import Counter
+
+    from mini_etl_project_spark.functions.cleaning import clean_text
     from mini_etl_project_spark.plans.pipeline import AutoETLPipeline
 
-    rows = []
-    for i in range(200):
-        # high-cardinality TEXT column (distinct >= 50, len > 10, unique
-        # ratio > 0.5 -> not categorical, so nulls SURVIVE cleaning and a
-        # mode fill fires); 'value_string_modal' planted as the mode
-        if i % 5 == 0:
-            tag = None
-        elif i % 3 == 0:
-            tag = "value_string_modal"
-        else:
-            tag = f"value_string_{i}"
-        rows.append((i, tag))
-    df = spark.createDataFrame(rows, "id bigint, tag string")
+    k = 4
+    cols = [F.col(c) for c in ("id", "tag", "day", "note")]
+    in_sample = F.pmod(F.xxhash64(*cols), F.lit(k)) == 0
+    # (role, rows wanted, must the row be in the profiled sample?)
+    wanted = [
+        ("tag_null", 10, False),
+        ("tag_na", 10, False),
+        ("day_bad", 10, False),
+        ("note_long", 60, False),
+        ("note_null", 3, True),
+    ]
+    cands = spark.createDataFrame(
+        [_mispredict_row(i, role) for role, _, _ in wanted for i in range(200, 2000)],
+        _MISPREDICT_SCHEMA,
+    )
+    hit = {
+        (r["id"], r["tag"], r["day"], r["note"]): r["s"]
+        for r in cands.select(*cols, in_sample.alias("s")).collect()
+    }
+    rows = [_mispredict_row(i, "plain") for i in range(200)]
+    used: set[str] = set()
+    for role, n, want in wanted:
+        picked = 0
+        for i in range(200, 2000):
+            row = _mispredict_row(i, role)
+            if picked < n and str(i) not in used and hit[row] == want:
+                rows.append(row)
+                used.add(str(i))
+                picked += 1
+        assert picked == n
+    df = spark.createDataFrame(rows, _MISPREDICT_SCHEMA)
 
-    def run(bound):
-        saved = AutoETLPipeline._SPECULATE_MAX_DISTINCT
-        AutoETLPipeline._SPECULATE_MAX_DISTINCT = bound
-        try:
-            p = AutoETLPipeline(eager_summary=False)
-            out = {tuple(r) for r in p.transform(df).collect()}
-            return out, p.cleaning_report
-        finally:
-            AutoETLPipeline._SPECULATE_MAX_DISTINCT = saved
+    # the sample has the properties the docstring names
+    clean_len = F.length(clean_text("note", collapse_whitespace=False))
+    sample = df.filter(in_sample)
+    s = sample.agg(
+        F.count(F.lit(1)).alias("n"),
+        F.sum((F.col("tag").isNull() | (F.col("tag") == "N/A")).cast("int")).alias(
+            "tag_dirt"
+        ),
+        F.sum((F.col("day") == "bogus").cast("int")).alias("day_dirt"),
+        F.sum(F.col("note").isNull().cast("int")).alias("note_null"),
+        F.avg(clean_len).alias("note_len"),
+    ).collect()[0]
+    full_len = df.agg(F.avg(clean_len)).collect()[0][0]
+    assert s["n"] > 0 and s["tag_dirt"] == 0 and s["day_dirt"] == 0
+    assert s["note_null"] > 0 and s["note_len"] <= 20 < full_len
 
-    spec_out, spec_report = run(100_000)
-    fall_out, fall_report = run(0)
-    assert spec_out == fall_out
-    assert spec_report == fall_report
-    assert any("filled missing values" in n for n in spec_report["tag"])
+    def run(mod):
+        p = AutoETLPipeline(eager_summary=False, profile_sample_mod=mod)
+        calls = []
+        real = p._fill_stats
+
+        def spy(*a):
+            calls.append(sorted(a[2]))  # the stacked labels
+            return real(*a)
+
+        p._fill_stats = spy
+        out = Counter(p.transform(df).collect())
+        p.release()
+        return out, p.cleaning_report, p.column_types, calls
+
+    s_out, s_report, s_types, s_calls = run(k)
+    f_out, f_report, f_types, f_calls = run(None)
+    assert s_out == f_out
+    assert s_report == f_report
+    assert s_types == f_types
+    for c in ("tag", "day", "note"):
+        assert any("filled missing values with value" in n for n in s_report[c])
+    assert "filled missing values with value: mode candidate one" in s_report["note"]
+    assert len(f_calls) == 1                  # every fill predicted
+    assert s_calls[1] == ["day", "note", "tag"]  # the three mispredicts
 
 
 # -- hive-style partitioned layout -----------------------------------------
