@@ -39,8 +39,9 @@ Conditional jobs, each at most once:
 - mispredict fallback — ``_fill_stats`` again, for the fills the
   full-scan null counts need but job 2 did not compute (a numeric column
   whose every profiled row parsed, a column the 1/k sample saw no null
-  of) and for text top-1s whose whitespace variant the full-scan length
-  decided the other way.
+  of, a column predicted dropped that the full scan keeps) and for text
+  top-1s whose whitespace variant the full-scan length decided the other
+  way.
 - outlier job — any kept numeric column: mean, stddev_samp (= pandas
   ddof=1), percentiles 0.05/0.95 of the imputed values. Outlier COUNTS
   ride an ``observe`` on the pre-dedup node (filled by the first
@@ -296,6 +297,8 @@ class AutoETLPipeline:
         # predicted need is real (every sampled row is a row). The numeric
         # parse count estimates the compat strip. A text column is stacked
         # in the whitespace variant its profiled cleaned length predicts.
+        # A non-categorical column whose profiled null share already exceeds
+        # ``missing_threshold`` is predicted dropped and gets no fill.
         cat_cols = [c for c in df.columns if self.column_types[c] == CATEGORICAL]
         text_cols = [
             c
@@ -314,6 +317,8 @@ class AutoETLPipeline:
             t, p = self.column_types[c], profiles[c]
             ok = {NUMERIC: p.numeric_ok, DATE: p.date_ok}.get(t, p.text_ok)
             if t == CATEGORICAL or ok >= sample_rows:
+                continue
+            if (sample_rows - ok) / sample_rows > self.missing_threshold:
                 continue
             if t == NUMERIC:
                 aggs.append(self._median(base[c]).alias(f"{c}__med"))

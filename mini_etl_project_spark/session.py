@@ -16,6 +16,7 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 DEFAULT_SF_DIR = "/root/testdata/sf0.1"
 
@@ -63,6 +64,11 @@ def get_spark(app_name: str = "mini_etl_project_spark", cpus: str | None = None)
         # q10 +0.2 s (its pruned fact IS small; the honest estimate costs
         # one extra shuffle that AQE's local-read conversion bounds).
         .config("spark.sql.sources.fileCompressionFactor", "8.0")
+        # The NANOS generation of events.parquet reads as raw int64 nanos
+        # (load_table truncates them to micros). Set here, once, so no
+        # load writes session conf and a schema the scan catalog records
+        # never depends on which query ran first.
+        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.sql.warehouse.dir", "/tmp/mini_etl_warehouse")
         .config("spark.ui.enabled", "false")
     )
@@ -113,30 +119,70 @@ def _default_driver_mem() -> str:
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Read one contract table as a lazy parquet scan (Q1: parquet source).
 
+    Scans go through a per-session scan catalog (``_scan``). The first
+    load of a parquet file infers its schema (Spark's footer-read job) and
+    probes its partition count (``_maybe_widen``) as a plain
+    ``spark.read.parquet`` would, and records both — the ``StructType``
+    and the widen decision — under the file's identity: this
+    SparkContext's applicationId, the real path, device, inode, size and
+    mtime_ns. Every later load of the same file in the session reads
+    ``spark.read.schema(s).parquet(path)`` and repartitions only if the
+    recorded decision says so: no Spark job and no scan planning at load
+    time. The catalog holds metadata only, never rows. A rewritten file
+    has a new identity and is inferred again; a path that is not a
+    regular file (a directory of parts) bypasses the catalog.
+
     ``events.parquet``'s ``ts`` physical type has varied across testdata
     generations — parquet TIMESTAMP(NANOS) (which Spark's vectorized reader
-    rejects; readable only as raw longs under ``nanosAsLong``) and plain
+    rejects; readable only as raw longs under ``nanosAsLong``, which
+    ``get_spark`` sets at session build — a session built elsewhere must
+    set it too, or inference fails with PARQUET_TYPE_ILLEGAL) and plain
     TIMESTAMP(MICROS) (read as TIMESTAMP_NTZ). Normalize either to a
     session-TZ TIMESTAMP so every downstream plan and oracle sees identical
     values: nanos truncate to micros with integer ``DIV`` (double division
     would lose precision above 2^53 ns — matches DuckDB's truncation), and
     NTZ micros cast 1:1 under the pinned UTC session timezone.
     """
-    if name == "events":
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        from pyspark.sql import functions as F
-        from pyspark.sql.types import LongType, TimestampNTZType
-
-        raw = spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
-        raw = _maybe_widen(raw, os.path.join(sf_dir, "events.parquet"))
-        ts_type = raw.schema["ts"].dataType
-        if isinstance(ts_type, LongType):  # TIMESTAMP(NANOS) as raw nanos
-            return raw.withColumn("ts", F.timestamp_micros(F.expr("ts DIV 1000")))
-        if isinstance(ts_type, TimestampNTZType):  # TIMESTAMP(MICROS)
-            return raw.withColumn("ts", F.col("ts").cast("timestamp"))
+    raw = _scan(spark, os.path.join(sf_dir, f"{name}.parquet"))
+    if name != "events":
         return raw
-    path = os.path.join(sf_dir, f"{name}.parquet")
-    return _maybe_widen(spark.read.parquet(path), path)
+    from pyspark.sql import functions as F
+    from pyspark.sql.types import LongType, TimestampNTZType
+
+    ts_type = raw.schema["ts"].dataType
+    if isinstance(ts_type, LongType):  # TIMESTAMP(NANOS) as raw nanos
+        return raw.withColumn("ts", F.timestamp_micros(F.expr("ts DIV 1000")))
+    if isinstance(ts_type, TimestampNTZType):  # TIMESTAMP(MICROS)
+        return raw.withColumn("ts", F.col("ts").cast("timestamp"))
+    return raw
+
+
+#: The scan catalog: (applicationId, realpath, st_dev, st_ino, st_size,
+#: st_mtime_ns) -> (inferred schema, widen decision). A new SparkContext
+#: has a new applicationId, so nothing carries over between sessions.
+_SCAN_CATALOG: dict[tuple, tuple[StructType, bool]] = {}
+
+
+def _scan(spark: SparkSession, path: str) -> DataFrame:
+    """``_maybe_widen(spark.read.parquet(path), path)``, with the schema
+    and the widen decision taken from the scan catalog when this session
+    already loaded the same file. A path that is not a regular file
+    (a directory of parts, a missing path) bypasses the catalog."""
+    key = None
+    if os.path.isfile(path):
+        st = os.stat(path)
+        key = (spark.sparkContext.applicationId, os.path.realpath(path),
+               st.st_dev, st.st_ino, st.st_size, st.st_mtime_ns)
+    hit = _SCAN_CATALOG.get(key)
+    if hit is not None:
+        schema, widen = hit
+        df = spark.read.schema(schema).parquet(path)
+        return df.repartition(spark.sparkContext.defaultParallelism) if widen else df
+    df = spark.read.parquet(path)
+    out = _maybe_widen(df, path)
+    if key is not None:
+        _SCAN_CATALOG[key] = (df.schema, out is not df)
+    return out
 
 
 def _maybe_widen(df: DataFrame, path: str) -> DataFrame:
@@ -145,7 +191,11 @@ def _maybe_widen(df: DataFrame, path: str) -> DataFrame:
     the file is big enough to matter, repartition to restore parallelism.
     Catalyst still pushes filters/pruning through the repartition to the
     scan, and the guard never fires on a properly-chunked (i.e., at-scale)
-    layout. Tiny dimension files stay single-partition (they broadcast)."""
+    layout. Tiny dimension files stay single-partition (they broadcast).
+
+    The probe plans the scan (``df.rdd``), so ``_scan`` runs it once per
+    file and session and records its decision — whether the returned
+    frame is a repartition of ``df`` — in the scan catalog."""
     try:
         if os.path.getsize(path) < 4 << 20:
             return df

@@ -120,8 +120,8 @@ def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         # 1:1 under the pinned UTC session timezone.
         return raw.withColumn("ts", F.col("ts").cast("timestamp"))
-    # nanos generation → raw int64 nanos; integer-DIV truncate to micros.
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    # nanos generation → raw int64 nanos (``nanosAsLong``, set by
+    # get_spark); integer-DIV truncate to micros.
     raw = (
         spark.readStream.schema(EVENTS_RAW_SCHEMA)
         .format("parquet")

@@ -224,6 +224,121 @@ def test_fill_stats_mispredict_fallback_matches_full_profile(spark):
     assert s_calls[1] == ["day", "note", "tag"]  # the three mispredicts
 
 
+def _spy_fill_stats(monkeypatch):
+    """Record each ``_fill_stats`` call's aggregate strings and stacked
+    labels."""
+    from mini_etl_project_spark.plans.pipeline import AutoETLPipeline
+
+    calls = []
+    real = AutoETLPipeline._fill_stats
+
+    def spy(self, df, aggs, stacked, count_labels):
+        calls.append(([str(a) for a in aggs], sorted(stacked)))
+        return real(self, df, aggs, stacked, count_labels)
+
+    monkeypatch.setattr(AutoETLPipeline, "_fill_stats", spy)
+    return calls
+
+
+def test_fill_stats_skips_predicted_drop(spark, sf_dir, monkeypatch):
+    """``q_etl_pipeline_events``' 90 %-null ``junk`` column is dropped; the
+    profile predicts that, so no fill statistic of it is computed — its
+    null count (the drop decision itself) is its only aggregate."""
+    from mini_etl_project_spark.queries import QUERIES
+
+    calls = _spy_fill_stats(monkeypatch)
+    out = QUERIES["q_etl_pipeline_events"](spark, sf_dir)
+    assert "junk" not in out.columns
+    assert len(calls) == 1
+    aggs, stacked = calls[0]
+    junk_aggs = [a for a in aggs if "junk" in a]
+    assert len(junk_aggs) == 1 and junk_aggs[0].endswith(" AS junk__null'>")
+    assert "junk" not in stacked
+
+
+_DROP_SCHEMA = "id string, amt string, word string"
+
+
+def test_predicted_drop_kept_by_full_scan_takes_fallback(spark, monkeypatch):
+    """Under a k = 2 hash-sampled profile, ``amt`` (numeric) and ``word``
+    (text) look > 80 % null in the sample but are 70 % null in full, so
+    they are kept. The predicted drop skips their fills; the mispredict
+    fallback must compute them: output, report and types equal the
+    every-row profile's."""
+    from collections import Counter
+
+    from mini_etl_project_spark.plans.pipeline import AutoETLPipeline
+
+    k = 2
+    cols = [F.col(c) for c in ("id", "amt", "word")]
+    in_sample = F.pmod(F.xxhash64(*cols), F.lit(k)) == 0
+
+    def row(i, filled):
+        if filled:
+            return (str(i), f"{i}.25", f"a longer word value {i}")
+        return (str(i), None, None)
+
+    cands = spark.createDataFrame(
+        [row(i, f) for i in range(3000) for f in (True, False)], _DROP_SCHEMA
+    )
+    hit = {
+        (r["id"], r["amt"], r["word"]): r["s"]
+        for r in cands.select(*cols, in_sample.alias("s")).collect()
+    }
+    rows, used = [], set()
+    # (filled?, rows wanted, must the row be in the profiled sample?) —
+    # half the null rows sampled, so the extrapolated "invalid values"
+    # report line is exact
+    wanted = (
+        (True, 10, True),
+        (True, 110, False),
+        (False, 140, True),
+        (False, 140, False),
+    )
+    for filled, n, want in wanted:
+        picked = 0
+        for i in range(3000):
+            r = row(i, filled)
+            if picked < n and i not in used and hit[r] == want:
+                rows.append(r)
+                used.add(i)
+                picked += 1
+        assert picked == n
+    df = spark.createDataFrame(rows, _DROP_SCHEMA)
+
+    # the sample predicts the drop the full scan does not make
+    def null_share(frame):
+        r = frame.agg(
+            F.count(F.lit(1)).alias("n"), F.count("amt").alias("a")
+        ).collect()[0]
+        return (r["n"] - r["a"]) / r["n"]
+
+    assert null_share(df.filter(in_sample)) > 0.8 >= null_share(df)
+
+    calls = _spy_fill_stats(monkeypatch)
+
+    def run(mod):
+        calls.clear()
+        p = AutoETLPipeline(eager_summary=False, profile_sample_mod=mod)
+        out = Counter(p.transform(df).collect())
+        p.release()
+        return out, p.cleaning_report, p.column_types, list(calls)
+
+    s_out, s_report, s_types, s_calls = run(k)
+    f_out, f_report, f_types, f_calls = run(None)
+    assert s_out == f_out
+    assert s_report == f_report
+    assert s_types == f_types == {"id": "numeric", "amt": "numeric", "word": "text"}
+    assert any("filled missing values with median" in n for n in s_report["amt"])
+    assert any("filled missing values with value" in n for n in s_report["word"])
+    assert len(f_calls) == 1  # every fill predicted
+    assert len(s_calls) == 2
+    assert not any("amt__med" in a for a in s_calls[0][0])
+    assert "word" not in s_calls[0][1]
+    assert any("amt__med" in a for a in s_calls[1][0])
+    assert s_calls[1][1] == ["word"]
+
+
 # -- hive-style partitioned layout -----------------------------------------
 
 

@@ -545,3 +545,153 @@ def test_csv_malformed_row_modes(spark, tmp_path):
     with _pytest.raises(Exception) as exc:
         failfast.collect()
     assert "Malformed" in str(exc.value) or "FAILFAST" in str(exc.value)
+
+
+# -- the per-session scan catalog behind load_table ------------------------
+
+
+def _jobs_in_group(spark, group, fn):
+    """Run ``fn`` under its own job group; return its result and the
+    number of Spark jobs the group started."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty(60_000)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_scan_catalog_warm_load_starts_no_job(spark, sf_dir):
+    """A second load of each contract table reads the catalog's schema and
+    widen decision: no Spark job at load time, and the same schema and
+    partitioning as an uncached inferred read."""
+    from mini_etl_project_spark.session import TABLES, _maybe_widen, _scan, load_table
+
+    for name in TABLES:
+        p = os.path.join(sf_dir, f"{name}.parquet")
+        first = load_table(spark, sf_dir, name)
+        second, jobs = _jobs_in_group(
+            spark, f"scan_catalog.{name}", lambda: load_table(spark, sf_dir, name)
+        )
+        assert jobs == 0, name
+        assert second.schema == first.schema, name
+        warm, ref = _scan(spark, p), _maybe_widen(spark.read.parquet(p), p)
+        assert warm.schema == ref.schema, name
+        assert warm.rdd.getNumPartitions() == ref.rdd.getNumPartitions(), name
+
+
+def test_scan_catalog_records_widen_decision(spark, tmp_path):
+    """A single-row-group file above the 4 MiB guard widens on the first
+    load (from 3 cores up); the warm load repeats the partitioning from the
+    recorded decision without probing, and reads the same rows."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from mini_etl_project_spark.session import _maybe_widen, load_table
+
+    n = 600_000
+    rng = np.random.default_rng(7)
+    p = str(tmp_path / "lineitem.parquet")
+    pq.write_table(
+        pa.table({"k": np.arange(n), "v": rng.integers(0, 1 << 40, n)}),
+        p,
+        row_group_size=n,
+    )
+    assert 4 << 20 <= os.path.getsize(p) < 8 << 20
+    plain = spark.read.parquet(p).rdd.getNumPartitions()
+    ref = _maybe_widen(spark.read.parquet(p), p)
+    # the file scans as 2 byte-range splits: too few from 3 cores up
+    parallelism = spark.sparkContext.defaultParallelism
+    assert ref.rdd.getNumPartitions() > plain or parallelism <= 2
+    load_table(spark, str(tmp_path), "lineitem")
+    warm, jobs = _jobs_in_group(
+        spark,
+        "scan_catalog.widen",
+        lambda: load_table(spark, str(tmp_path), "lineitem"),
+    )
+    assert jobs == 0
+    assert warm.rdd.getNumPartitions() == ref.rdd.getNumPartitions()
+    assert warm.agg({"v": "sum"}).collect() == ref.agg({"v": "sum"}).collect()
+
+
+def test_scan_catalog_misses_a_rewritten_file(spark, sf_dir, tmp_path):
+    """A file rewritten in place (new size and mtime) is inferred again:
+    the next load sees the added column and its values."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from mini_etl_project_spark.session import load_table
+
+    table = pq.read_table(os.path.join(sf_dir, "documents.parquet"))
+    p = str(tmp_path / "documents.parquet")
+    pq.write_table(table, p)
+    before = load_table(spark, str(tmp_path), "documents")
+    load_table(spark, str(tmp_path), "documents")  # warm: from the catalog
+    assert "extra" not in before.columns
+    pq.write_table(
+        table.append_column("extra", pa.array(range(table.num_rows), pa.int64())), p
+    )
+    after = load_table(spark, str(tmp_path), "documents")
+    assert after.columns == before.columns + ["extra"]
+    assert after.agg({"extra": "sum"}).collect()[0][0] == sum(range(table.num_rows))
+
+
+def test_scan_catalog_bypasses_a_directory(spark, sf_dir, tmp_path):
+    """A multi-file table (a directory of parts) is not a regular file: it
+    bypasses the catalog and reads as a plain inferred scan."""
+    import pyarrow.parquet as pq
+
+    from mini_etl_project_spark.session import _SCAN_CATALOG, load_table
+
+    table = pq.read_table(os.path.join(sf_dir, "documents.parquet"))
+    d = tmp_path / "documents.parquet"
+    d.mkdir()
+    half = table.num_rows // 2
+    pq.write_table(table.slice(0, half), str(d / "part-0.parquet"))
+    pq.write_table(table.slice(half), str(d / "part-1.parquet"))
+    ref = load_table(spark, sf_dir, "documents")
+    for _ in range(2):
+        got = load_table(spark, str(tmp_path), "documents")
+        assert got.schema == ref.schema
+        assert sorted(got.collect()) == sorted(ref.collect())
+    assert not any(os.path.realpath(str(d)) in key for key in _SCAN_CATALOG)
+
+
+def test_load_table_writes_no_session_conf(spark, sf_dir, monkeypatch):
+    """``nanosAsLong`` is set once at session build: loading every contract
+    table writes no session conf, so how events loads never depends on
+    which query ran first."""
+    from pyspark.sql.conf import RuntimeConfig
+
+    from mini_etl_project_spark.session import TABLES, load_table
+
+    before = spark.conf.getAll
+    assert before.get("spark.sql.legacy.parquet.nanosAsLong") == "true"
+    writes = []
+    monkeypatch.setattr(RuntimeConfig, "set", lambda self, k, v: writes.append(k))
+    for name in TABLES:
+        load_table(spark, sf_dir, name)
+    assert writes == []
+    assert spark.conf.getAll == before
+
+
+def test_load_table_reads_nanos_events(spark, sf_dir, tmp_path):
+    """The TIMESTAMP(NANOS) generation of events loads, cold and warm, to
+    the same rows as the TIMESTAMP(MICROS) fixture."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from mini_etl_project_spark.session import load_table
+
+    table = pq.read_table(os.path.join(sf_dir, "events.parquet"))
+    i = table.schema.get_field_index("ts")
+    table = table.set_column(i, "ts", table.column("ts").cast(pa.timestamp("ns")))
+    pq.write_table(table, str(tmp_path / "events.parquet"), version="2.6")
+    ref = sorted(load_table(spark, sf_dir, "events").collect())
+    for _ in range(2):
+        got = load_table(spark, str(tmp_path), "events")
+        assert dict(got.dtypes)["ts"] == "timestamp"
+        assert sorted(got.collect()) == ref

@@ -2,6 +2,8 @@
 
 Usage: python tools/time_one.py <query_name> [n_runs] [sf_dir]
 Prints per-run seconds and the median. Same noop-sink action as bench.py.
+Each run (build + action) is its own Spark job group, and its line also
+shows how many Spark jobs that run started.
 """
 import os
 import statistics
@@ -25,15 +27,20 @@ def main() -> None:
         "SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"
     )
     spark = get_spark("time_one")
-    spark.sparkContext.setJobDescription(f"time_one:{name}")
+    sc = spark.sparkContext
     ts = []
     for i in range(n + 1):
+        tag = "warmup" if i == 0 else f"run{i}"
+        group = f"time_one:{name}:{tag}"
+        sc.setJobGroup(group, f"time_one:{name}")
         t0 = time.time()
         df = QUERIES[name](spark, sf_dir)
         df.write.format("noop").mode("overwrite").save()
         dt = time.time() - t0
-        tag = "warmup" if i == 0 else f"run{i}"
-        print(f"{tag}: {dt:.3f}", flush=True)
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty(60_000)
+        jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+        print(f"{tag}: {dt:.3f} s, {jobs} jobs", flush=True)
         if i > 0:
             ts.append(dt)
     print(f"median: {statistics.median(ts):.4f}")
