@@ -2,84 +2,63 @@
 
 All numerics use the exact-decimal accumulation trick: float32 elements
 promote to double exactly, per-element products are deterministic doubles,
-and the DECIMAL(38,10) sum is order-independent — so cosine similarity is
+and the DECIMAL(28,10) sum is order-independent — so cosine similarity is
 bit-identical under any partitioning AND matches a sequential oracle.
 Everything stays in higher-order functions (JVM-side, no UDFs).
+
+Each builder takes column names (any SQL expression text) and returns ONE
+``F.expr`` over SQL text: one parse per expression instead of dozens of
+py4j round trips of Column-API construction, so nothing needs caching.
+The ``*_sql`` helpers return the SQL text itself, for callers that fold it
+into a larger expression.
 """
 
 from __future__ import annotations
 
-from mini_etl_project_spark.functions.memo import jvm_memo
-
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-
-# Expression-construction memoization (r12, guide §7.3 — driver time):
-# each higher-order-function Column here costs dozens of py4j round
-# trips (~8 ms apiece measured) to CONSTRUCT, and the hot callers
-# (LSH bucketing, ingest probes, top-k scoring) rebuild the identical
-# tree every query invocation. Catalyst Columns are immutable
-# expression trees — reusing one across plans/queries is sound — so
-# the string-named forms are built once per (name[, name]) and cached
-# for the life of the JVM. Data never enters the cache; only
-# unresolved expression shapes.
 
 # Precision 28, not 38: Spark types decimal(38,10)+decimal(38,10) as
 # decimal(38,9) (allowPrecisionLoss), silently rounding every partial sum.
 # At (28,10) the addition widens to (29,10) — exact — and the re-cast back
 # to (28,10) is lossless for our magnitudes. DuckDB oracles may keep
 # DECIMAL(38,10): per-term values round identically at scale 10.
-_DEC = "decimal(28,10)"
+_DEC = "DECIMAL(28,10)"
 
 
-def _dec_sum(arr: Column) -> Column:
-    """Exact sum of a double-array via decimal accumulation, as double."""
-    return F.aggregate(
-        arr,
-        F.lit(0).cast(_DEC),
-        lambda acc, x: (acc + x.cast(_DEC)).cast(_DEC),
-    ).cast("double")
+def dec_sum_sql(arr: str) -> str:
+    """Exact sum of a double-array expression via decimal accumulation,
+    as double."""
+    return (
+        f"CAST(aggregate({arr}, CAST(0 AS {_DEC}), "
+        f"(acc, x) -> CAST(acc + CAST(x AS {_DEC}) AS {_DEC})) AS DOUBLE)"
+    )
 
 
-def dot_exact(a: Column | str, b: Column | str) -> Column:
+def _prods_sql(a: str, b: str) -> str:
+    return f"zip_with({a}, {b}, (x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE))"
+
+
+def _sqnorm_sql(a: str) -> str:
+    return dec_sum_sql(f"transform({a}, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))")
+
+
+def dot_exact(a: str, b: str) -> Column:
     """Order-independent exact dot product of two float arrays."""
-    if isinstance(a, str) and isinstance(b, str):
-        return _dot_exact_named(a, b)
-    a = F.col(a) if isinstance(a, str) else a
-    b = F.col(b) if isinstance(b, str) else b
-    prods = F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double"))
-    return _dec_sum(prods)
+    return F.expr(dec_sum_sql(_prods_sql(a, b)))
 
 
-@jvm_memo
-def _dot_exact_named(a: str, b: str) -> Column:
-    prods = F.zip_with(
-        F.col(a), F.col(b), lambda x, y: x.cast("double") * y.cast("double")
-    )
-    return _dec_sum(prods)
-
-
-def sqnorm_exact(a: Column | str) -> Column:
+def sqnorm_exact(a: str) -> Column:
     """Exact squared L2 norm of a float array."""
-    if isinstance(a, str):
-        return _sqnorm_exact_named(a)
-    sq = F.transform(a, lambda x: x.cast("double") * x.cast("double"))
-    return _dec_sum(sq)
+    return F.expr(_sqnorm_sql(a))
 
 
-@jvm_memo
-def _sqnorm_exact_named(a: str) -> Column:
-    sq = F.transform(
-        F.col(a), lambda x: x.cast("double") * x.cast("double")
-    )
-    return _dec_sum(sq)
-
-
-def dot_sign_nonneg(a: Column | str, b: Column | str) -> Column:
-    """``dot_exact(a, b) >= 0``, computed fast: a plain double fold
-    decides the sign except within ±1e-6 of zero, where the exact
+def dot_sign_nonneg_sql(a: str, b: str) -> str:
+    """SQL for ``dot_exact(a, b) >= 0``, computed fast: a plain double
+    fold decides the sign except within ±1e-6 of zero, where the exact
     decimal fold is consulted (lazy CASE branch — evaluated only for
-    ambiguous rows).
+    ambiguous rows). ``a`` and ``b`` are SQL text: a column name, or a
+    lambda variable of an enclosing higher-order function.
 
     Bit-identical to the decimal sign by construction: the decimal path
     rounds each product to 1e-10 (≤ 5e-11 error ×64 terms = 3.2e-9) and
@@ -88,19 +67,18 @@ def dot_sign_nonneg(a: Column | str, b: Column | str) -> Column:
     sign-only, which makes this the hot-path form — the full decimal
     fold is ~10× costlier per term (boxed BigDecimal vs double).
     """
-    a = F.col(a) if isinstance(a, str) else a
-    b = F.col(b) if isinstance(b, str) else b
-    dd = F.aggregate(
-        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
+    # The finish lambda reads the double fold once; its variable name
+    # must not shadow a column that ``a``/``b`` name.
+    return (
+        f"aggregate({_prods_sql(a, b)}, 0.0D, (acc, x) -> acc + x, "
+        f"_d -> CASE WHEN abs(_d) > 1e-6 THEN _d >= 0 "
+        f"ELSE {dec_sum_sql(_prods_sql(a, b))} >= 0 END)"
     )
-    return F.when(F.abs(dd) > 1e-6, dd >= 0).otherwise(dot_exact(a, b) >= 0)
 
 
-def cosine_exact(a: Column | str, b: Column | str) -> Column:
+def cosine_exact(a: str, b: str) -> Column:
     """Exact-deterministic cosine similarity (null on zero vectors)."""
-    d = dot_exact(a, b)
-    na, nb = F.sqrt(sqnorm_exact(a)), F.sqrt(sqnorm_exact(b))
-    denom = na * nb
-    return F.when(denom != 0, d / denom)
+    denom = f"sqrt({_sqnorm_sql(a)}) * sqrt({_sqnorm_sql(b)})"
+    return F.expr(
+        f"CASE WHEN {denom} != 0 THEN {dec_sum_sql(_prods_sql(a, b))} / ({denom}) END"
+    )

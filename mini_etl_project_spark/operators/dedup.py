@@ -53,21 +53,6 @@ def shingle_rows(df: DataFrame, id_col: str, text_col: str, k: int = 5) -> DataF
     )
 
 
-from mini_etl_project_spark.functions.memo import jvm_memo
-
-
-@jvm_memo
-def _minhash_aggs(num_hashes: int) -> tuple:
-    """The k min-hash aggregate Columns, built once per k (r12: each
-    ``hash64`` chain is ~6 py4j round trips to construct — ~0.8 s for
-    k=16 rebuilt per query invocation; the tree is deterministic, so
-    cache the immutable Columns for the life of the JVM)."""
-    return tuple(
-        F.min(hash64(F.col("shingle"), s)).alias(f"__mh{s}")
-        for s in range(num_hashes)
-    )
-
-
 def minhash_signatures(
     shingles: DataFrame, num_hashes: int = 16
 ) -> DataFrame:
@@ -80,11 +65,10 @@ def minhash_signatures(
     per-seed formulation (``hash64(shingle, seed)``), so the DuckDB oracle
     reproduces them bit-for-bit.
     """
-    aggs = list(_minhash_aggs(num_hashes))
-    wide = shingles.groupBy("id").agg(*aggs)
-    return wide.select(
-        "id",
-        F.array(*[F.col(f"__mh{s}") for s in range(num_hashes)]).alias("minhashes"),
+    return shingles.groupBy("id").agg(
+        F.array(*[F.min(hash64("shingle", s)) for s in range(num_hashes)]).alias(
+            "minhashes"
+        )
     )
 
 
@@ -194,7 +178,7 @@ def simhash(df: DataFrame, id_col: str, text_col: str, bits: int = 32) -> DataFr
     toks = df.select(
         F.col(id_col).alias("id"),
         F.explode(F.split(F.trim(F.col(text_col)), r"\s+")).alias("tok"),
-    ).withColumn("h", hash64(F.col("tok"), 0))
+    ).withColumn("h", hash64("tok", 0))
     bit_sums = toks.groupBy("id").agg(
         *[
             F.sum(

@@ -13,15 +13,13 @@
 
 from __future__ import annotations
 
-from mini_etl_project_spark.functions.memo import jvm_memo as _jvm_memo
-
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from mini_etl_project_spark.functions.vectors import (
     cosine_exact,
     dot_exact,
-    dot_sign_nonneg,
+    dot_sign_nonneg_sql,
     sqnorm_exact,
 )
 
@@ -45,7 +43,7 @@ def topk_exact(
     margin set, a plain double-fold cosine ranks every pair cheaply
     first and the exact-decimal rescore runs ONLY on pairs within
     ``margin`` of the k-th approximate score. Lossless by the same
-    argument as ``dot_sign_nonneg``: |exact − double| per pair is
+    argument as ``dot_sign_nonneg_sql``: |exact − double| per pair is
     bounded by the decimal quantization (64 · 5e-11 = 3.2e-9) over the
     norm product plus ~1 ulp of double accumulation, so with margin ≫
     2·bound no pair outside the margin can reach the exact top-k, and
@@ -144,22 +142,6 @@ def _hyperplane(dim: int, table: int, bit: int) -> list[float]:
     return out
 
 
-@_jvm_memo
-def _bucket_expr_cached(
-    dim: int, bits: int, table: int, exact_sign: bool, vec_col: str
-):
-    """JVM-lifetime cache of the per-table bucket expression — the
-    hyperplanes are md5-derived from (dim, table, bit) alone, so the
-    tree is identical for every LSH instance with these parameters."""
-    probe = RandomHyperplaneLSH.__new__(RandomHyperplaneLSH)
-    probe.dim, probe.bits, probe.tables = dim, bits, table + 1
-    probe.exact_sign = exact_sign
-    probe._planes = {
-        (table, b): _hyperplane(dim, table, b) for b in range(bits)
-    }
-    return probe._bucket_build(vec_col, table)
-
-
 class RandomHyperplaneLSH:
     """Sign-random-projection LSH for cosine similarity (X4).
 
@@ -180,66 +162,52 @@ class RandomHyperplaneLSH:
         #: oracle-checkable in SQL (q_sim_lsh_topk) and partitioning-proof
         #: even for dots within one ulp of zero.
         self.exact_sign = exact_sign
-        # hyperplanes as literal arrays in the plan: tiny (tables×bits×dim)
-        self._planes = {
-            (t, b): _hyperplane(dim, t, b)
-            for t in range(tables)
-            for b in range(bits)
-        }
-
-    def bucket(self, vec_col, table: int):
-        """Bucket id (bigint) of a vector in one table: packed sign bits.
-
-        String-named columns hit a JVM-lifetime expression cache (r12):
-        the tree is ~(bits × 3 higher-order folds) of py4j construction
-        — measured 3.3 s per ``add_buckets`` call at (4 tables, 4 bits,
-        exact_sign) — and is fully determined by
-        (dim, bits, table, exact_sign, vec_col).
-        """
-        if isinstance(vec_col, str):
-            return _bucket_expr_cached(
-                self.dim, self.bits, table, self.exact_sign, vec_col
+        # Each table's planes as ONE array(array(...)) of SQL literals
+        # (bits × dim doubles, tiny), parsed with the rest of the bucket
+        # expression; the optimizer folds it to a single array Literal.
+        # (``F.lit(list)`` is not one Literal: it builds ``array(lit(x),
+        # ...)``, one py4j call per component.) ``repr`` round-trips each
+        # double exactly.
+        self._planes = [
+            "array("
+            + ", ".join(
+                "array(" + ", ".join(f"{v!r}D" for v in _hyperplane(dim, t, b)) + ")"
+                for b in range(bits)
             )
-        return self._bucket_build(vec_col, table)
+            + ")"
+            for t in range(tables)
+        ]
 
-    def _bucket_build(self, vec_col, table: int):
-        vec = F.col(vec_col) if isinstance(vec_col, str) else vec_col
-        acc = F.lit(0).cast("bigint")
-        for b in range(self.bits):
-            # ONE array Literal node, not CreateArray over 64 child
-            # literals — the bucketing expression tree is compiled per
-            # plan, and at tables×bits×64 children the analyzer/codegen
-            # cost dominated small-SF runtime (measured: 64× smaller
-            # tree ≈ 2-3 s less cold-plan latency at sf0.1).
-            plane = F.lit(self._planes[(table, b)])
-            if self.exact_sign:
-                # Sign-only decision: double fold with an exact-decimal
-                # fallback inside ±1e-6 of zero — bit-identical to the
-                # pure decimal fold (see dot_sign_nonneg), ~10× cheaper
-                # on the bucketing hot path.
-                nonneg = dot_sign_nonneg(vec, plane)
-            else:
-                dot = F.aggregate(
-                    F.zip_with(vec, plane, lambda x, y: x.cast("double") * y),
-                    F.lit(0.0),
-                    lambda a, x: a + x,
-                )
-                nonneg = dot >= 0
-            acc = acc + F.when(nonneg, F.lit(2**b).cast("bigint")).otherwise(0)
-        return acc
+    def bucket(self, vec_col: str, table: int) -> str:
+        """SQL for the bucket id (bigint) of a vector in one table: the
+        packed sign bits, folded over (bit, plane) with ``zip_with``."""
+        if self.exact_sign:
+            # Sign-only decision: double fold with an exact-decimal
+            # fallback inside ±1e-6 of zero — bit-identical to the pure
+            # decimal fold (see dot_sign_nonneg_sql), ~10× cheaper on the
+            # bucketing hot path.
+            nonneg = dot_sign_nonneg_sql(vec_col, "_plane")
+        else:
+            nonneg = (
+                f"aggregate(zip_with({vec_col}, _plane, "
+                "(x, y) -> CAST(x AS DOUBLE) * y), 0.0D, (acc, x) -> acc + x) >= 0"
+            )
+        # The lambda variables must not shadow the column ``vec_col`` names.
+        return (
+            f"aggregate(zip_with(sequence(0, {self.bits - 1}), {self._planes[table]}, "
+            f"(_bit, _plane) -> IF({nonneg}, shiftleft(1L, _bit), 0L)), "
+            "0L, (acc, x) -> acc + x)"
+        )
 
     def add_buckets(self, df: DataFrame, vec_col: str = "embedding") -> DataFrame:
         """One row per (row, table) with its bucket id."""
-        tables = F.explode(
-            F.array(*[F.lit(t) for t in range(self.tables)])
-        ).alias("table")
-        out = df.select("*", tables)
-        # CASE over the table index — when-branches evaluate lazily, so
-        # each row computes exactly one table's bit signature
-        expr = F.lit(None).cast("bigint")
-        for t in range(self.tables):
-            expr = F.when(F.col("table") == t, self.bucket(vec_col, t)).otherwise(expr)
-        return out.withColumn("bucket", expr)
+        out = df.select("*", F.expr(f"explode(sequence(0, {self.tables - 1})) AS `table`"))
+        # CASE over the table index — branches evaluate lazily, so each
+        # row computes exactly one table's bit signature
+        whens = " ".join(
+            f"WHEN {t} THEN {self.bucket(vec_col, t)}" for t in range(self.tables)
+        )
+        return out.withColumn("bucket", F.expr(f"CASE `table` {whens} END"))
 
     def topk(
         self,

@@ -43,16 +43,18 @@ def char_shingles(col: Column | str, k: int = 5) -> Column:
     return F.array_distinct(F.transform(idx, lambda i: F.substring(c, i, k)))
 
 
-def hash64(col: Column, seed: int | Column = 0) -> Column:
+def hash64(col: str, seed: int = 0) -> Column:
     """Deterministic 60-bit hash portable to the DuckDB oracle:
     first 15 hex digits of md5(seed || ':' || value) as a bigint.
 
-    (xxhash64 would be faster but is Spark-specific; this one lets every
-    hash-dependent operator — minhash, simhash, LSH — be oracle-checked.)
+    ``col`` is a column name or any SQL expression text; the hash is one
+    ``F.expr``. (xxhash64 would be faster but is Spark-specific; this one
+    lets every hash-dependent operator — minhash, simhash, LSH — be
+    oracle-checked.)
     """
-    s = F.lit(str(seed)) if isinstance(seed, int) else seed.cast("string")
-    return F.conv(F.substring(F.md5(F.concat(s, F.lit(":"), col)), 1, 15), 16, 10).cast(
-        "bigint"
+    return F.expr(
+        f"CAST(conv(substring(md5(concat('{int(seed)}', ':', {col})), 1, 15), 16, 10)"
+        " AS BIGINT)"
     )
 
 

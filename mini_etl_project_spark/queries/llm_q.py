@@ -247,9 +247,9 @@ def weighted_mix(
     hash-derived from the shard (stand-in for a supplied mixing table)."""
     from mini_etl_project_spark.operators.textops import hash64
 
-    w = 1 + hash64(F.col(shard_col), _MIX_W_SEED) % 4
+    w = 1 + hash64(shard_col, _MIX_W_SEED) % 4
     hs = [
-        hash64(F.col(id_col).cast("string"), seed) for seed in _MIX_P_SEEDS
+        hash64(f"CAST({id_col} AS STRING)", seed) for seed in _MIX_P_SEEDS
     ]
     priority = F.least(
         hs[0],

@@ -416,7 +416,7 @@ def q_agg_countmin(spark: SparkSession, sf_dir: str) -> DataFrame:
         *[
             F.struct(
                 F.lit(s).alias("seed"),
-                (hash64(F.col("event_type"), s) % _CMS_W).alias("bucket"),
+                (hash64("event_type", s) % _CMS_W).alias("bucket"),
             )
             for s in _CMS_D_SEEDS
         ]

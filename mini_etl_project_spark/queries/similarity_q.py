@@ -1531,10 +1531,7 @@ LEFT JOIN hits ON hits.query_id = qids.query_id
 def q_sim_ann_recall_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
-    from mini_etl_project_spark.functions.vectors import (
-        _dec_sum,
-        cosine_exact,
-    )
+    from mini_etl_project_spark.functions.vectors import cosine_exact, dec_sum_sql
 
     e = load_table(spark, sf_dir, "embeddings")
     queries = e.filter(F.col("vec_id") < _NQ)
@@ -1572,12 +1569,10 @@ def q_sim_ann_recall_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("vec_id", F.col("x.s").alias("s"), F.col("x.sv").alias("sv"))
     encd = v_subs.join(F.broadcast(cb_subs), "s").withColumn(
         "sqd",
-        _dec_sum(
-            F.zip_with(
-                "sv",
-                "cbv",
-                lambda x, y: (x.cast("double") - y.cast("double"))
-                * (x.cast("double") - y.cast("double")),
+        F.expr(
+            dec_sum_sql(
+                "zip_with(sv, cbv, (x, y) -> (CAST(x AS DOUBLE) - CAST(y AS DOUBLE))"
+                " * (CAST(x AS DOUBLE) - CAST(y AS DOUBLE)))"
             )
         ),
     ).select("vec_id", "s", "j", "sqd")

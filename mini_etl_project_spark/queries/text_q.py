@@ -354,7 +354,7 @@ def q_text_winnow_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.posexplode(
             F.transform(idx, lambda i: F.substring(F.col("text"), i, _WINNOW_K))
         ).alias("p", "gram"),
-    ).withColumn("h", hash64(F.col("gram"), 0))
+    ).withColumn("h", hash64("gram", 0))
     w = (
         Window.partitionBy("doc_id")
         .orderBy("p")

@@ -15,6 +15,7 @@ from __future__ import annotations
 
 import os
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
@@ -134,14 +135,14 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
     ``events.parquet``'s ``ts`` physical type has varied across testdata
     generations — parquet TIMESTAMP(NANOS) (which Spark's vectorized reader
-    rejects; readable only as raw longs under ``nanosAsLong``, which
-    ``get_spark`` sets at session build — a session built elsewhere must
-    set it too, or inference fails with PARQUET_TYPE_ILLEGAL) and plain
-    TIMESTAMP(MICROS) (read as TIMESTAMP_NTZ). Normalize either to a
-    session-TZ TIMESTAMP so every downstream plan and oracle sees identical
-    values: nanos truncate to micros with integer ``DIV`` (double division
-    would lose precision above 2^53 ns — matches DuckDB's truncation), and
-    NTZ micros cast 1:1 under the pinned UTC session timezone.
+    rejects; readable only as raw longs, under the ``nanosAsLong`` that
+    ``get_spark`` sets or, on any other session, through the footer schema
+    ``_scan`` falls back to) and plain TIMESTAMP(MICROS) (read as
+    TIMESTAMP_NTZ). Normalize either to a session-TZ TIMESTAMP so every
+    downstream plan and oracle sees identical values: nanos truncate to
+    micros with integer ``DIV`` (double division would lose precision
+    above 2^53 ns — matches DuckDB's truncation), and NTZ micros cast 1:1
+    under the pinned UTC session timezone.
     """
     raw = _scan(spark, os.path.join(sf_dir, f"{name}.parquet"))
     if name != "events":
@@ -178,17 +179,41 @@ def _scan(spark: SparkSession, path: str) -> DataFrame:
         schema, widen = hit
         df = spark.read.schema(schema).parquet(path)
         return df.repartition(spark.sparkContext.defaultParallelism) if widen else df
-    df = spark.read.parquet(path)
+    try:
+        df = spark.read.parquet(path)
+    except AnalysisException as e:
+        if e.getCondition() != "PARQUET_TYPE_ILLEGAL":
+            raise
+        df = spark.read.schema(_footer_schema(path)).parquet(path)
     out = _maybe_widen(df, path)
     if key is not None:
         _SCAN_CATALOG[key] = (df.schema, out is not df)
     return out
 
 
+def _footer_schema(path: str) -> StructType:
+    """The file's schema from its parquet footer (metadata only), with
+    TIMESTAMP(NANOS) columns as ``bigint`` raw nanos — the schema
+    ``nanosAsLong`` inference gives, for a session that lacks that conf
+    (Spark's own inference raises PARQUET_TYPE_ILLEGAL there)."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import from_arrow_schema
+
+    arrow = pq.read_schema(path)
+    arrow = pa.schema([
+        f.with_type(pa.int64())
+        if pa.types.is_timestamp(f.type) and f.type.unit == "ns" else f
+        for f in arrow
+    ])
+    return from_arrow_schema(arrow, prefer_timestamp_ntz=True)
+
+
 def _maybe_widen(df: DataFrame, path: str) -> DataFrame:
-    """Fact tables written as a single parquet row group scan as ~1 task no
-    matter what (a row group is the minimum split). When that happens AND
-    the file is big enough to matter, repartition to restore parallelism.
+    """A fact table written as a single parquet row group is read by one
+    task (a row group is the minimum unit of work). When its scan also
+    plans fewer splits than cores (see ``ensure_parallelism``) AND the
+    file is big enough to matter, repartition to restore parallelism.
     Catalyst still pushes filters/pruning through the repartition to the
     scan, and the guard never fires on a properly-chunked (i.e., at-scale)
     layout. Tiny dimension files stay single-partition (they broadcast).
@@ -207,12 +232,17 @@ def _maybe_widen(df: DataFrame, path: str) -> DataFrame:
 def ensure_parallelism(df: DataFrame, min_parts: int | None = None) -> DataFrame:
     """Repartition ONLY when the input's partitioning is degenerate.
 
-    Single-row-group parquet files scan as one task regardless of
-    ``maxPartitionBytes`` (a row group is the minimum split unit), which
-    silently serializes expression-heavy operators (regex profiling,
-    shingling, vector math) on small inputs. At scale this is a no-op: a
-    100 TB table scans as thousands of splits ≥ cores, so the guard never
-    triggers and no shuffle is added. The repartition cost on the small
+    The guard counts the scan's PLANNED partitions — byte-range splits of
+    the file — not its row groups. A single-row-group parquet file can
+    still plan several splits, and every split but the one holding the
+    row group's start reads nothing: sf0.1 ``lineitem`` (one row group)
+    plans 2 splits at ``local[2]``, one of them empty, so it is not
+    widened and one task reads the whole table. A scan that plans fewer
+    splits than ``target`` is repartitioned, so expression-heavy operators
+    (regex profiling, shingling, vector math) do not run serially on
+    small inputs. At scale this is a no-op: a 100 TB table scans as
+    thousands of splits ≥ cores, so the guard never triggers and no
+    shuffle is added. The repartition cost on the small
     side (where it does trigger) is bounded by the input being small.
     """
     target = min_parts or df.sparkSession.sparkContext.defaultParallelism

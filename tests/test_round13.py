@@ -118,29 +118,6 @@ def test_sampled_profile_threshold_safety_band(spark):
     pipe.release()
 
 
-def test_jvm_memo_invalidates_on_context_change(monkeypatch):
-    from mini_etl_project_spark.functions.memo import jvm_memo
-
-    calls = {"n": 0}
-
-    @jvm_memo
-    def build(name):
-        calls["n"] += 1
-        return object()
-
-    a = build("x")
-    assert build("x") is a and calls["n"] == 1
-    # a NEW SparkContext identity must drop the cache (stale py4j refs)
-    import pyspark
-
-    monkeypatch.setattr(
-        pyspark.SparkContext, "_active_spark_context", object()
-    )
-    b = build("x")
-    assert b is not a and calls["n"] == 2
-    assert build("x") is b and calls["n"] == 2
-
-
 def test_pln_named_forms_match_column_forms(spark):
     from pyspark.sql import functions as F
 

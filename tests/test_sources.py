@@ -695,3 +695,30 @@ def test_load_table_reads_nanos_events(spark, sf_dir, tmp_path):
         got = load_table(spark, str(tmp_path), "events")
         assert dict(got.dtypes)["ts"] == "timestamp"
         assert sorted(got.collect()) == ref
+
+
+def test_load_table_reads_nanos_events_on_plain_session(spark, tmp_path):
+    """A TIMESTAMP(NANOS) events file loads on a session without
+    ``nanosAsLong`` (Spark's inference raises PARQUET_TYPE_ILLEGAL there)
+    and yields the same rows as the MICROS fixture."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from mini_etl_project_spark.session import load_table
+
+    src = "/root/testdata/sf0.001"
+    t = pq.read_table(f"{src}/events.parquet")
+    i = t.schema.get_field_index("ts")
+    t = t.set_column(i, "ts", t.column("ts").cast(pa.timestamp("ns")))
+    pq.write_table(t, str(tmp_path / "events.parquet"), version="2.6")
+    assert pq.read_schema(str(tmp_path / "events.parquet")).field("ts").type.unit == "ns"
+
+    plain = spark.newSession()
+    plain.conf.unset("spark.sql.legacy.parquet.nanosAsLong")
+    assert plain.conf.get("spark.sql.legacy.parquet.nanosAsLong") == "false"
+    got = load_table(plain, str(tmp_path), "events")
+    want = load_table(spark, src, "events")
+    assert got.schema == want.schema
+    assert sorted(got.collect()) == sorted(want.collect())
+    # no session conf was written to make it work
+    assert plain.conf.get("spark.sql.legacy.parquet.nanosAsLong") == "false"

@@ -2,8 +2,9 @@
 
 Usage: python tools/time_one.py <query_name> [n_runs] [sf_dir]
 Prints per-run seconds and the median. Same noop-sink action as bench.py.
-Each run (build + action) is its own Spark job group, and its line also
-shows how many Spark jobs that run started.
+Each run's line splits its seconds into build (the ``QUERIES[...]`` call,
+eager jobs included) and action (the noop write); each is its own Spark
+job group, and the line shows how many Spark jobs each started.
 """
 import os
 import statistics
@@ -28,22 +29,38 @@ def main() -> None:
     )
     spark = get_spark("time_one")
     sc = spark.sparkContext
-    ts = []
-    for i in range(n + 1):
-        tag = "warmup" if i == 0 else f"run{i}"
-        group = f"time_one:{name}:{tag}"
+    ts, builds, actions = [], [], []
+
+    def timed(group, fn):
         sc.setJobGroup(group, f"time_one:{name}")
         t0 = time.time()
-        df = QUERIES[name](spark, sf_dir)
-        df.write.format("noop").mode("overwrite").save()
+        out = fn()
         dt = time.time() - t0
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc._jsc.sc().listenerBus().waitUntilEmpty(60_000)
-        jobs = len(sc.statusTracker().getJobIdsForGroup(group))
-        print(f"{tag}: {dt:.3f} s, {jobs} jobs", flush=True)
+        return out, dt, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    for i in range(n + 1):
+        tag = "warmup" if i == 0 else f"run{i}"
+        group = f"time_one:{name}:{tag}"
+        df, b_s, b_jobs = timed(f"{group}:build", lambda: QUERIES[name](spark, sf_dir))
+        _, a_s, a_jobs = timed(
+            f"{group}:action",
+            lambda: df.write.format("noop").mode("overwrite").save(),
+        )
+        print(
+            f"{tag}: {b_s + a_s:.3f} s, {b_jobs + a_jobs} jobs "
+            f"(build {b_s:.3f} s, {b_jobs} jobs; action {a_s:.3f} s, {a_jobs} jobs)",
+            flush=True,
+        )
         if i > 0:
-            ts.append(dt)
-    print(f"median: {statistics.median(ts):.4f}")
+            ts.append(b_s + a_s)
+            builds.append(b_s)
+            actions.append(a_s)
+    print(
+        f"median: {statistics.median(ts):.4f} "
+        f"(build {statistics.median(builds):.4f}, action {statistics.median(actions):.4f})"
+    )
 
 
 if __name__ == "__main__":
