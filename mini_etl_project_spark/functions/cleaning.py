@@ -1,7 +1,23 @@
-"""Type-dispatched column cleaners (reference R9–R12) as pure
-Column-expression builders — no actions, no Python row loops.
+"""Type-dispatched column cleaners (reference R9–R12) as pure expression
+builders — no actions, no Python row loops.
 
-Each builder mirrors the reference cleaner's observable semantics,
+Each cleaner is built as SQL text and parsed once by ``F.expr``. It takes
+``col`` as SQL text (a column name, or any expression; quote unusual names
+with ``sqltext.q``) and returns one Column. Each is the composition of two
+``*_sql`` parts, which ``AutoETLPipeline`` evaluates as two projections:
+
+- an input part over the raw column — the trimmed string (date, text), the
+  trimmed ``'nan'``-coalesced string (categorical), or the stripped,
+  comma-swapped string (numeric);
+- a cleaning part over that input — shape guards and casts, the date
+  chain, sentinel nulls, ``initcap``.
+
+The pipeline projects every input part once, and its cleaning parts read
+the projected attribute: ``CollapseProject`` does not inline a non-cheap
+expression its consumer references twice, so each strip or trim runs once
+per row instead of once per reference.
+
+Each cleaner mirrors the reference cleaner's observable semantics,
 including its quirks (verified by executing the reference; see
 FIXTURES.md §2):
 
@@ -29,7 +45,8 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-from mini_etl_project_spark.functions.dates import parse_date_multi
+from mini_etl_project_spark.functions.dates import parse_date_sql, trim_sql
+from mini_etl_project_spark.functions.sqltext import sql_lit
 
 #: Sentinel strings the text cleaner nullifies (ETL_PROJECT.py:81-85).
 TEXT_SENTINELS: tuple[str, ...] = ("", "nan", "None", "NULL", "N/A", "n/a", "null", "NaN")
@@ -48,55 +65,57 @@ CATEGORICAL_SENTINELS: tuple[str, ...] = ("", "none", "n/a")
 #: Superset of string shapes Spark's string→double cast accepts.
 #: ``try_cast`` signals failure via caught JVM exceptions; on a mostly
 #: non-numeric string column that's an exception per row. The guard makes
-#: garbage skip the attempt entirely (same null result, no throw).
+#: garbage skip the attempt entirely (same null result, no throw). The
+#: empty string never matches, so the guard also nulls it.
 NUMERIC_SHAPE = (
     r"^[+-]?((\d+\.?\d*|\.\d+)([eEdD][+-]?\d+)?|[iI]nf(inity)?|[nN]a[nN])$"
 )
 
-
-def guarded_try_double(s: Column) -> Column:
-    """null-on-mismatch string→double without exception overhead."""
-    return F.when(s.rlike(NUMERIC_SHAPE), s.try_cast("double"))
-
-
-def ws_trim(c: Column) -> Column:
-    """Strip ALL leading/trailing whitespace. Spark's ``F.trim`` removes
-    only ASCII spaces, but the reference's ``str.strip()`` removes tabs,
-    newlines, etc. — found by the idempotence property test on ``"\\ta"``.
-
-    ``btrim`` over the exact Java-regex ``\\s`` char set — equivalent to
-    ``regexp_replace(c, '^\\s+|\\s+$', '')`` but a plain char scan:
-    measured 2× faster standalone and ~5× in the categorical cleaner,
-    where the trimmed value feeds two branches and Catalyst evaluates the
-    expression twice (regexp twice per row vs btrim twice per row).
-    """
-    return F.btrim(c, F.lit(" \t\n\x0b\x0c\r"))
+#: The reference's numeric strip: every char outside ``[\d.,+-]``.
+_STRIP = r"[^\d\.,\-+]"
+_WS_RUN = sql_lit(r"\s+")
 
 
-def _nullify(c: Column, sentinels: tuple[str, ...]) -> Column:
-    out = c
-    for s in sentinels:
-        out = F.nullif(out, F.lit(s))
-    return out
+def _in_list(values: tuple[str, ...]) -> str:
+    return ", ".join(sql_lit(v) for v in values)
 
 
-def clean_numeric(col: Column | str, compat: bool = True) -> Column:
+def guarded_double_sql(s: str) -> str:
+    """SQL: null-on-mismatch string→double without exception overhead."""
+    return f"CASE WHEN {s} RLIKE {sql_lit(NUMERIC_SHAPE)} THEN try_cast({s} AS DOUBLE) END"
+
+
+def _strip_sql(s: str) -> str:
+    return f"replace(regexp_replace({s}, {sql_lit(_STRIP)}, ''), ',', '.')"
+
+
+def numeric_input_sql(col: str, compat: bool = True) -> str:
+    """The numeric cleaner's input part: the stripped, comma-swapped string
+    (compat), or the space-trimmed string (native)."""
+    s = f"CAST({col} AS STRING)"
+    return _strip_sql(s) if compat else f"trim({s})"
+
+
+def numeric_sql(s: str, compat: bool = True) -> str:
+    """The numeric cleaner's cleaning part over ``numeric_input_sql``.
+    Native mode tries the trimmed string's direct cast first and falls back
+    to the strip (which drops the spaces the trim would have)."""
+    if compat:
+        return guarded_double_sql(s)
+    return f"coalesce({guarded_double_sql(s)}, {guarded_double_sql(_strip_sql(s))})"
+
+
+def clean_numeric(col: str, compat: bool = True) -> Column:
     """R9. ``compat=True`` reproduces the reference's regex pipeline
     (including the scientific-notation mangling and the decimal-comma
     swap); ``compat=False`` is the engine-native cleaner: try a direct
     cast first and fall back to the sanitize-then-cast path, preserving
     well-formed values like ``1.2e3``.
     """
-    c = (F.col(col) if isinstance(col, str) else col).cast("string")
-    stripped = F.regexp_replace(c, r"[^\d\.,\-+]", "")
-    sanitized = F.nullif(F.replace(stripped, F.lit(","), F.lit(".")), F.lit(""))
-    via_regex = guarded_try_double(sanitized)
-    if compat:
-        return via_regex
-    return F.coalesce(guarded_try_double(F.trim(c)), via_regex)
+    return F.expr(numeric_sql(numeric_input_sql(col, compat), compat))
 
 
-def clean_numeric_double(col: Column | str, compat: bool = True) -> Column:
+def numeric_double_sql(x: str, compat: bool = True) -> str:
     """R9 for a DOUBLE-typed column, without the string round trip.
 
     The reference strips its regex over ``astype(str)``, Python's float
@@ -109,14 +128,27 @@ def clean_numeric_double(col: Column | str, compat: bool = True) -> Column:
     above every double). ``compat=False`` keeps every value, as the
     native cleaner's direct cast does.
     """
-    x = F.col(col) if isinstance(col, str) else col
     if not compat:
         return x
-    a = F.abs(x)
-    return F.when((x == 0) | ((a >= 1e-4) & (a < 1e16)), x)
+    return (
+        f"CASE WHEN {x} = 0 OR (abs({x}) >= {sql_lit(1e-4)} "
+        f"AND abs({x}) < {sql_lit(1e16)}) THEN {x} END"
+    )
 
 
-def clean_text(col: Column | str, collapse_whitespace: bool) -> Column:
+def text_sql(t: str, collapse_whitespace: bool) -> str:
+    """The text cleaner's cleaning part over ``trim_sql``: sentinel nulls,
+    then the optional whitespace collapse."""
+    out = f"CASE WHEN {t} IN ({_in_list(TEXT_SENTINELS)}) THEN NULL ELSE {t} END"
+    return collapse_sql(out) if collapse_whitespace else out
+
+
+def collapse_sql(s: str) -> str:
+    """The text cleaner's whitespace collapse (ETL_PROJECT.py:88-89)."""
+    return f"regexp_replace({s}, {_WS_RUN}, ' ')"
+
+
+def clean_text(col: str, collapse_whitespace: bool) -> Column:
     """R10. ``collapse_whitespace`` comes from the profile (mean cleaned
     length > 20) — a data-dependent plan decision made by the caller.
 
@@ -124,29 +156,22 @@ def clean_text(col: Column | str, collapse_whitespace: bool) -> Column:
     the sentinel replace maps them back to null, so null-in → null-out
     holds there too; trim-then-nullify gives the same result.
     """
-    c = (F.col(col) if isinstance(col, str) else col).cast("string")
-    out = _nullify(ws_trim(c), TEXT_SENTINELS)
-    if collapse_whitespace:
-        out = F.regexp_replace(out, r"\s+", " ")
-    return out
+    return F.expr(text_sql(trim_sql(col), collapse_whitespace))
 
 
-def clean_date(col: Column | str) -> Column:
-    """R11: the R8 parse chain applied to every value."""
-    return parse_date_multi(col)
+def categorical_input_sql(col: str) -> str:
+    """The categorical cleaner's input part. The reference stringifies
+    nulls to ``"nan"`` first, which title-cases to ``"Nan"`` and SURVIVES
+    as a real category — reproduced here with a coalesce."""
+    return trim_sql(f"coalesce(CAST({col} AS STRING), 'nan')")
 
 
-def clean_categorical_base(col: Column | str) -> Column:
-    """R12, expression part: normalize case and nullify the (effectively
-    reachable) sentinels. The reference stringifies nulls to ``"nan"``
-    first, which title-cases to ``"Nan"`` and SURVIVES as a real category —
-    reproduced here with a coalesce.
-
-    The rare-value merge needs a frequency aggregate → see
-    ``AutoETLPipeline`` (it composes this expression with a counts join).
-    """
-    c = (F.col(col) if isinstance(col, str) else col).cast("string")
-    t = ws_trim(F.coalesce(c, F.lit("nan")))
-    return F.when(F.lower(t).isin(*CATEGORICAL_SENTINELS), F.lit(None)).otherwise(
-        F.initcap(t)
+def categorical_sql(t: str) -> str:
+    """The categorical cleaner's cleaning part over
+    ``categorical_input_sql``: nullify the (effectively reachable)
+    sentinels, title-case the rest."""
+    return (
+        f"CASE WHEN lower({t}) IN ({_in_list(CATEGORICAL_SENTINELS)}) "
+        f"THEN NULL ELSE initcap({t}) END"
     )
+

@@ -3,7 +3,9 @@
 The reference tries 16 strptime formats in declared order — order IS
 precedence (day-first formats precede month-first, so ``03/04/2023`` parses
 as April 3rd). We compile the same chain into one ``coalesce(try_to_date,
-…)`` Column expression: JVM-side, codegen-friendly, no per-row Python.
+…)`` expression, built as SQL text (``parse_date_sql``) and parsed once by
+``F.expr``: JVM-side, codegen-friendly, no per-row Python and no per-call
+py4j round trips.
 
 ``try_to_date`` (not ``to_date``) keeps null-on-mismatch semantics under
 Spark 4's default ANSI mode. Datetime-bearing formats truncate to date,
@@ -14,6 +16,8 @@ from __future__ import annotations
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
+
+from mini_etl_project_spark.functions.sqltext import sql_lit
 
 #: strptime → Spark datetime pattern, in the reference's precedence order
 #: (ETL_PROJECT.py:48-54).
@@ -88,28 +92,41 @@ _FAMILIES: tuple[tuple[str, tuple[str, ...]], ...] = (
 )
 
 
-def parse_date_multi(col: Column | str) -> Column:
-    """Best-effort date parse over the 16-format chain; null if none match.
+#: The Java-regex ``\s`` character set: what the reference's
+#: ``str.strip()`` removes around a value (``F.trim`` strips spaces only).
+WS = " \t\n\x0b\x0c\r"
 
-    The input is trimmed first (the reference strips before strptime).
-    Structured as family-dispatch (see ``_FAMILIES``) purely for speed;
-    results are identical to the flat precedence chain.
-    """
-    c = F.col(col) if isinstance(col, str) else col
-    # strip ALL whitespace like the reference's str.strip() (F.trim only
-    # strips ASCII spaces — tabs/newlines would defeat the shape guards);
-    # btrim over the Java-\s char set == the regex strip, minus the regex
-    s = F.btrim(c.cast("string"), F.lit(" \t\n\x0b\x0c\r"))
-    expr = F.lit(None).cast("date")
-    for family_rx, fmts in reversed(_FAMILIES):
-        inner = F.coalesce(
-            *[
-                F.when(s.rlike(FORMAT_GUARDS[fmt]), F.try_to_date(s, fmt))
-                for fmt in fmts
-            ]
+
+def trim_sql(col: str) -> str:
+    """SQL stripping every ``WS`` character from both ends of ``col`` cast
+    to string. ``btrim`` over the char set equals the regex strip
+    ``regexp_replace(c, '^\\s+|\\s+$', '')`` without the regex."""
+    return f"btrim(CAST({col} AS STRING), {sql_lit(WS)})"
+
+
+def parse_date_sql(s: str) -> str:
+    """SQL for the 16-format chain over ``s``, an already trimmed string
+    expression; null if no format matches. Structured as family dispatch
+    (see ``_FAMILIES``) purely for speed; results are identical to the
+    flat precedence chain. Every family starts with a digit, so a 1-char
+    prefilter skips the 6 family regexes for ``$1.23``, ``N/A``, free
+    text, … (identity on results)."""
+    branches = " ".join(
+        f"WHEN {s} RLIKE {sql_lit(family_rx)} THEN coalesce("
+        + ", ".join(
+            f"CASE WHEN {s} RLIKE {sql_lit(FORMAT_GUARDS[fmt])} "
+            f"THEN try_to_date({s}, {sql_lit(fmt)}) END"
+            for fmt in fmts
         )
-        expr = F.when(s.rlike(family_rx), inner).otherwise(expr)
-    # Every family starts with a digit: one 1-char prefilter short-circuits
-    # the 6 family regexes for '$1.23', 'N/A', free text, … (identity on
-    # results — a non-digit start can never match any family).
-    return F.when(s.rlike(r"^\d"), expr)
+        + ")"
+        for family_rx, fmts in _FAMILIES
+    )
+    digit = sql_lit(r"^\d")
+    return f"CASE WHEN {s} RLIKE {digit} THEN CASE {branches} END END"
+
+
+def parse_date_multi(col: str) -> Column:
+    """Best-effort date parse of ``col`` (SQL text: a column name or any
+    expression) over the 16-format chain; null if none match. The input is
+    trimmed first (the reference strips before strptime)."""
+    return F.expr(parse_date_sql(trim_sql(col)))

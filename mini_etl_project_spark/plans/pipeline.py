@@ -58,29 +58,49 @@ additionally switch ``exact_stats`` off — medians/percentiles go
 approximate (partial-aggregable, no exact sort-based percentile state) —
 and the data plane is unchanged.
 
+Every expression is SQL text over backtick-quoted identifiers
+(``sqltext.q``: any column name works, dots and backticks included), with
+its literals rendered by ``sqltext.sql_lit`` (exact doubles; strings that
+parse the same under any ``escapedStringLiterals`` setting), parsed once
+per ``selectExpr`` entry or ``F.expr``. A transform of a 4-column frame
+builds its plans through about 300 py4j calls; as Column-API trees it took
+about 6,200.
+
 Once the types are known, the cleaned base — one narrow column per input
 column, the parse work done once — is persisted (MEMORY_AND_DISK, so it
 degrades to spill rather than OOM) and every stats job reads it. It is
 tracked class-level: a new ``transform()`` releases the previous
 pipeline's cache, and ``release()`` frees it explicitly, so repeated runs
-never accumulate cached plans.
+never accumulate cached plans. The base is two projections: the first
+holds each cleaner's input (the numeric strip, or the trimmed string), the
+second the cleaning over that attribute. ``CollapseProject`` keeps them
+apart because the second reads each non-cheap input many times (the date
+chain reads its string about 40 times), so every strip and trim runs once
+per row.
 """
 
 from __future__ import annotations
 
+from collections.abc import Callable
+from functools import partial
 from typing import Any
 
 from pyspark import StorageLevel
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructField
 
 from mini_etl_project_spark.functions.cleaning import (
-    clean_categorical_base,
-    clean_date,
-    clean_numeric,
-    clean_numeric_double,
-    clean_text,
+    categorical_input_sql,
+    categorical_sql,
+    collapse_sql,
+    numeric_double_sql,
+    numeric_input_sql,
+    numeric_sql,
+    text_sql,
 )
+from mini_etl_project_spark.functions.dates import parse_date_sql, trim_sql
+from mini_etl_project_spark.functions.sqltext import q, sql_lit
 from mini_etl_project_spark.plans.profile import (
     CATEGORICAL,
     DATE,
@@ -91,21 +111,18 @@ from mini_etl_project_spark.plans.profile import (
 _V = "__etl_value"
 _C = "__etl_column"
 
+#: ``create_data_summary``'s per-type aggregates: (SQL function, key).
+_SUMMARY_AGGS = {
+    NUMERIC: (("avg", "mean"), ("stddev_samp", "std"), ("min", "min"), ("max", "max")),
+    DATE: (("min", "min"), ("max", "max")),
+}
 
-def _collapse(c: Column) -> Column:
-    """The text cleaner's whitespace collapse (ETL_PROJECT.py:88-89)."""
-    return F.regexp_replace(c, r"\s+", " ")
 
-
-def _stacked(df: DataFrame, cols: dict[str, Column]) -> DataFrame:
-    """(column_name, value) pairs for a set of expressions — lets one
+def _stacked(df: DataFrame, exprs: list[str]) -> DataFrame:
+    """(position, value) pairs for a list of SQL expressions — lets one
     groupBy job serve every column instead of a job per column."""
-    pairs: list[Column] = []
-    for name, expr in cols.items():
-        pairs.append(F.lit(name))
-        pairs.append(expr.cast("string"))
-    n = len(cols)
-    return df.select(F.stack(F.lit(n), *pairs).alias(_C, _V))
+    pairs = ", ".join(f"{j}, CAST({e} AS STRING)" for j, e in enumerate(exprs))
+    return df.selectExpr(f"stack({len(exprs)}, {pairs}) AS ({_C}, {_V})")
 
 
 class AutoETLPipeline:
@@ -222,9 +239,11 @@ class AutoETLPipeline:
             from mini_etl_project_spark.session import ensure_parallelism
 
             df = ensure_parallelism(df)
+        fields = df.schema.fields
+        cols = [f.name for f in fields]
         self.column_types = {}
         self.cleaning_report = {"global": []}
-        for c in df.columns:
+        for c in cols:
             self.cleaning_report[c] = []
         self.data_summary = {}
 
@@ -239,9 +258,8 @@ class AutoETLPipeline:
         k = max(1, self.profile_sample_mod or 1)
         sample = df
         if k > 1:
-            sample = df.filter(
-                F.pmod(F.xxhash64(*[F.col(c) for c in df.columns]), F.lit(k))
-                == 0
+            sample = df.where(
+                f"pmod(xxhash64({', '.join(q(c) for c in cols)}), {k}) = 0"
             )
         profiles, sample_rows = profile_frame_and_count(sample)
         if k > 1 and (
@@ -258,18 +276,24 @@ class AutoETLPipeline:
             # adversarial mixes.
             k = 1
             profiles, sample_rows = profile_frame_and_count(df)
-        self.column_types = {c: profiles[c].logical_type for c in df.columns}
-        for c in df.columns:
+        self.column_types = {c: profiles[c].logical_type for c in cols}
+        for c in cols:
             self.cleaning_report[c].append(
                 f"detected column type: {self.column_types[c]}"
             )
 
         # Cleaned base: one type-dispatched cleaner per column (R9–R12),
         # so the regex date chain and numeric parse run only over the
-        # columns whose detected type reads them — the 100 TB lever.
-        base_df = df.select(
-            *[self._clean_base(df, c).alias(c) for c in df.columns]
-        )
+        # columns whose detected type reads them — the 100 TB lever. Two
+        # projections: the first computes each cleaner's input (the strip
+        # or trim) once per row, the second cleans that attribute, which
+        # its guards and date chain read many times.
+        inputs, cleaners = [], []
+        for i, f in enumerate(fields):
+            inp, clean = self._cleaner(f)
+            inputs.append(f"{inp} AS _in{i}")
+            cleaners.append(f"{clean(f'_in{i}')} AS {q(f.name)}")
+        base_df = df.selectExpr(*inputs).selectExpr(*cleaners)
 
         # Persist the narrow cleaned base — the only frame every stats job
         # reads (guide §5: cache only what the downstream jobs actually
@@ -286,7 +310,7 @@ class AutoETLPipeline:
         AutoETLPipeline._LIVE_CACHES.append(base_df)
         self._cached_base = base_df
 
-        base: dict[str, Column] = {c: F.col(c) for c in df.columns}
+        base = {c: q(c) for c in cols}
 
         # Fill prediction: a column's median or top-1 is READ only when its
         # cleaned values have nulls. The profile counts, per type, the
@@ -299,21 +323,21 @@ class AutoETLPipeline:
         # in the whitespace variant its profiled cleaned length predicts.
         # A non-categorical column whose profiled null share already exceeds
         # ``missing_threshold`` is predicted dropped and gets no fill.
-        cat_cols = [c for c in df.columns if self.column_types[c] == CATEGORICAL]
+        cat_cols = [c for c in cols if self.column_types[c] == CATEGORICAL]
         text_cols = [
             c
-            for c in df.columns
+            for c in cols
             if self.column_types[c] not in (NUMERIC, DATE, CATEGORICAL)
         ]
-        aggs: list[Column] = [F.count(F.lit(1)).alias("__rows")]
+        aggs = ["count(1) AS __rows"]
         aggs += [
-            F.sum(base[c].isNull().cast("long")).alias(f"{c}__null")
-            for c in df.columns
+            f"sum(CAST({base[c]} IS NULL AS BIGINT)) AS {q(c + '__null')}"
+            for c in cols
         ]
-        aggs += [F.avg(F.length(base[c])).alias(f"{c}__len") for c in text_cols]
-        stacked: dict[str, Column] = {c: base[c] for c in cat_cols}
+        aggs += [f"avg(length({base[c]})) AS {q(c + '__len')}" for c in text_cols]
+        stacked = {c: base[c] for c in cat_cols}
         ws_predicted: set[str] = set()
-        for c in df.columns:
+        for c in cols:
             t, p = self.column_types[c], profiles[c]
             ok = {NUMERIC: p.numeric_ok, DATE: p.date_ok}.get(t, p.text_ok)
             if t == CATEGORICAL or ok >= sample_rows:
@@ -321,9 +345,9 @@ class AutoETLPipeline:
             if (sample_rows - ok) / sample_rows > self.missing_threshold:
                 continue
             if t == NUMERIC:
-                aggs.append(self._median(base[c]).alias(f"{c}__med"))
+                aggs.append(f"{self._median(base[c])} AS {q(c + '__med')}")
             elif t != DATE and (p.text_len or 0.0) > 20:
-                stacked[c] = _collapse(base[c])
+                stacked[c] = collapse_sql(base[c])
                 ws_predicted.add(c)
             else:
                 stacked[c] = base[c]
@@ -334,7 +358,7 @@ class AutoETLPipeline:
             base_df, aggs, stacked, cat_cols
         )
         n_rows = stats["__rows"]  # exact, from the full scan
-        null_count = {c: stats[f"{c}__null"] for c in df.columns}
+        null_count = {c: stats[f"{c}__null"] for c in cols}
 
         # Finalize cleaning expressions (on top of the cleaned base:
         # whitespace collapse after trim/nullify ≡ the reference's order).
@@ -342,7 +366,7 @@ class AutoETLPipeline:
         collapsed: set[str] = set()
         for c in text_cols:
             if (stats[f"{c}__len"] or 0.0) > 20:  # conditional collapse (:88-89)
-                cleaned[c] = _collapse(base[c])
+                cleaned[c] = collapse_sql(base[c])
                 collapsed.add(c)
             self.cleaning_report[c].append("cleaned text column")
 
@@ -351,7 +375,7 @@ class AutoETLPipeline:
         dropped: list[str] = []
         mode_needed: list[str] = []
         med_needed: list[str] = []
-        for c in df.columns:
+        for c in cols:
             ratio = (null_count[c] / n_rows) if n_rows else 0.0
             if ratio > self.missing_threshold:
                 dropped.append(c)
@@ -374,7 +398,7 @@ class AutoETLPipeline:
         if late_med or late_top:
             late_stats, late_top1, _ = self._fill_stats(
                 base_df,
-                [self._median(base[c]).alias(f"{c}__med") for c in late_med],
+                [f"{self._median(base[c])} AS {q(c + '__med')}" for c in late_med],
                 {c: cleaned[c] for c in late_top},
                 [],
             )
@@ -392,7 +416,8 @@ class AutoETLPipeline:
             if len(vals) < 50:  # "truly categorical" guard (:116)
                 rare = sorted(v for v, n in vals if n < threshold)
                 if rare:
-                    expr = F.when(expr.isin(rare), "Other").otherwise(expr)
+                    in_rare = ", ".join(sql_lit(v) for v in rare)
+                    expr = f"CASE WHEN {expr} IN ({in_rare}) THEN 'Other' ELSE {expr} END"
                     self.cleaning_report[c].append(
                         f"merged {len(rare)} rare values into 'Other'"
                     )
@@ -404,7 +429,7 @@ class AutoETLPipeline:
             self.cleaning_report[c].append("cleaned categorical column")
 
         # Per-type report lines that need job-2 numbers.
-        for c in df.columns:
+        for c in cols:
             t = self.column_types[c]
             if t == NUMERIC:
                 # raw-null count extrapolated from the 1/k sample — the
@@ -423,7 +448,7 @@ class AutoETLPipeline:
 
         # Missing-value report lines (reference order: per-column drop /
         # median lines, then the global drop line, then the mode fills).
-        for c in df.columns:
+        for c in cols:
             ratio = (null_count[c] / n_rows) if n_rows else 0.0
             if c in dropped:
                 self.cleaning_report[c].append(
@@ -437,7 +462,7 @@ class AutoETLPipeline:
             self.cleaning_report["global"].append(
                 f"dropped columns: {', '.join(dropped)}"
             )
-        kept = [c for c in df.columns if c not in dropped]
+        kept = [c for c in cols if c not in dropped]
 
         # Mode fills: categorical modes from the POST-merge counts (the
         # reference imputes after cleaning, so 'Other' competes as a value;
@@ -459,14 +484,14 @@ class AutoETLPipeline:
                 f"filled missing values with {label}: {v}"
             )
 
-        imputed: dict[str, Column] = {}
+        imputed: dict[str, str] = {}
         for c in kept:
             expr = cleaned[c]
             if c in fills:
+                fill = sql_lit(fills[c])
                 if self.column_types[c] == DATE:
-                    expr = F.coalesce(expr, F.lit(str(fills[c])).cast("date"))
-                else:
-                    expr = F.coalesce(expr, F.lit(fills[c]))
+                    fill = f"CAST({sql_lit(str(fills[c]))} AS DATE)"
+                expr = f"coalesce({expr}, {fill})"
             imputed[c] = expr
 
         # Outlier job + clamp plan: outliers on imputed numerics (R16,
@@ -475,7 +500,7 @@ class AutoETLPipeline:
         # needs the outlier COUNT, only the report does. The counts
         # therefore ride the pre-dedup observation (below) instead of a
         # second agg.
-        obs_metrics: list[Column] = [F.count(F.lit(1)).alias("__rows_pre")]
+        obs_metrics = ["count(1) AS __rows_pre"]
         num_cols = [c for c in kept if self.column_types[c] == NUMERIC]
         if num_cols:
             stats = self._outlier_stats(
@@ -484,17 +509,17 @@ class AutoETLPipeline:
             for c in num_cols:
                 mu, sigma, q05, q95 = stats[c]
                 if sigma and q05 is not None:
-                    z = F.abs((imputed[c] - F.lit(mu)) / F.lit(sigma))
-                    clamped = F.least(
-                        F.greatest(imputed[c], F.lit(q05)), F.lit(q95)
+                    x = imputed[c]
+                    out = (
+                        f"abs(({x} - {sql_lit(mu)}) / {sql_lit(sigma)}) "
+                        f"> {sql_lit(self.outlier_z)}"
                     )
-                    imputed[c] = F.when(z > self.outlier_z, clamped).otherwise(
-                        imputed[c]
+                    imputed[c] = (
+                        f"CASE WHEN {out} THEN least(greatest({x}, "
+                        f"{sql_lit(q05)}), {sql_lit(q95)}) ELSE {x} END"
                     )
                     obs_metrics.append(
-                        F.sum((z > self.outlier_z).cast("long")).alias(
-                            f"{c}__n_out"
-                        )
+                        f"sum(CAST({out} AS BIGINT)) AS {q(c + '__n_out')}"
                     )
 
         # Fused final plan: one Project + distinct (R17, :264-272), with an
@@ -506,8 +531,10 @@ class AutoETLPipeline:
 
         self._observation = Observation()
         self._obs_filled = False
-        observed = base_df.observe(self._observation, *obs_metrics)
-        projected = observed.select(*[imputed[c].alias(c) for c in kept])
+        observed = base_df.observe(
+            self._observation, *[F.expr(m) for m in obs_metrics]
+        )
+        projected = observed.selectExpr(*[f"{imputed[c]} AS {q(c)}" for c in kept])
         result = projected.dropDuplicates()
 
         if self.eager_summary:
@@ -536,31 +563,36 @@ class AutoETLPipeline:
 
     # -- expression builders ----------------------------------------------
 
-    def _clean_base(self, df: DataFrame, c: str) -> Column:
-        """The cleaned-base expression for column ``c`` under its
-        detected type (text and unknown both take the text cleaner,
-        :255-256)."""
-        t = self.column_types[c]
+    def _cleaner(self, f: StructField) -> tuple[str, Callable[[str], str]]:
+        """The cleaned base's two parts for column ``f`` under its detected
+        type (text and unknown both take the text cleaner, :255-256): the
+        input SQL over the raw column, and a function building the cleaning
+        SQL over that input's projected attribute."""
+        c, t = q(f.name), self.column_types[f.name]
         if t == NUMERIC:
-            if df.schema[c].dataType.typeName() == "double":
-                return clean_numeric_double(c, compat=self.compat)
-            return clean_numeric(c, compat=self.compat)
+            if f.dataType.typeName() == "double":
+                return c, partial(numeric_double_sql, compat=self.compat)
+            return numeric_input_sql(c, self.compat), partial(
+                numeric_sql, compat=self.compat
+            )
         if t == DATE:
-            return clean_date(c)
+            return trim_sql(c), parse_date_sql
         if t == CATEGORICAL:
-            return clean_categorical_base(c)
-        return clean_text(c, collapse_whitespace=False)
+            return categorical_input_sql(c), categorical_sql
+        return trim_sql(c), partial(text_sql, collapse_whitespace=False)
 
-    def _median(self, expr: Column) -> Column:
-        return F.median(expr) if self.exact_stats else F.percentile_approx(expr, 0.5)
+    def _median(self, expr: str) -> str:
+        if self.exact_stats:
+            return f"median({expr})"
+        return f"percentile_approx({expr}, 0.5D)"
 
     # -- helpers (one job each) --------------------------------------------
 
     def _fill_stats(
         self,
         df: DataFrame,
-        aggs: list[Column],
-        stacked: dict[str, Column],
+        aggs: list[str],
+        stacked: dict[str, str],
         count_labels: list[str],
     ) -> tuple[dict[str, Any], dict[str, str], dict[str, list]]:
         """Every fill statistic as ONE action: the stacked (label, value)
@@ -571,58 +603,56 @@ class AutoETLPipeline:
         ``F.mode`` is tie-nondeterministic, SURVEY.md §7) — and, for
         ``count_labels``, the full value counts. The aggregate form is
         partial-aggregable map-side and never sorts a label's values inside
-        one task, as a ``row_number`` window would. Returns (aggs by alias,
-        top-1 by label, counts by count label)."""
+        one task, as a ``row_number`` window would. Labels are stacked by
+        position. Returns (aggs by alias, top-1 by label, counts by count
+        label)."""
         if not stacked:
-            return df.agg(*aggs).collect()[0].asDict(), {}, {}
+            return df.selectExpr(*aggs).collect()[0].asDict(), {}, {}
         from pyspark.sql import Observation
 
         obs = Observation()
         if aggs:
-            df = df.observe(obs, *aggs)
-        top = F.struct((-F.col("count")).alias("nc"), F.col(_V))
-        counted = F.when(F.col(_C).isin(count_labels), F.struct(_V, "count"))
+            df = df.observe(obs, *[F.expr(a) for a in aggs])
+        labels = list(stacked)
+        per_label = [F.expr(f"min(struct(-`count` AS nc, {_V})) AS top")]
+        counted = [str(j) for j, c in enumerate(labels) if c in count_labels]
+        if counted:
+            per_label.append(F.expr(
+                f"collect_list(CASE WHEN {_C} IN ({', '.join(counted)}) "
+                f"THEN struct({_V}, `count`) END) AS counts"
+            ))
         rows = (
-            _stacked(df, stacked)
-            .filter(F.col(_V).isNotNull())
+            _stacked(df, list(stacked.values()))
+            .where(f"{_V} IS NOT NULL")
             .groupBy(_C, _V)
             .count()
             .groupBy(_C)
-            .agg(F.min(top).alias("top"), F.collect_list(counted).alias("counts"))
+            .agg(*per_label)
             .collect()
         )
-        top1 = {r[_C]: r["top"][_V] for r in rows}
+        top1 = {labels[r[_C]]: r["top"][_V] for r in rows}
         counts: dict[str, list[tuple[str, int]]] = {c: [] for c in count_labels}
         for r in rows:
-            if r[_C] in counts:
-                counts[r[_C]] = [(x[_V], x["count"]) for x in r["counts"]]
+            if labels[r[_C]] in counts:
+                counts[labels[r[_C]]] = [(x[_V], x["count"]) for x in r["counts"]]
         return (obs.get if aggs else {}), top1, counts
 
     def _outlier_stats(
-        self, df: DataFrame, cols: dict[str, Column]
+        self, df: DataFrame, cols: dict[str, str]
     ) -> dict[str, tuple]:
         pq = "percentile" if self.exact_stats else "approx_percentile"
-        named = df.select(
-            *[expr.alias(f"__etl_{c}") for c, expr in cols.items()]
+        named = df.selectExpr(
+            *[f"{expr} AS _o{i}" for i, expr in enumerate(cols.values())]
         )
-        aggs: list[Column] = []
-        for c in cols:
-            col = F.col(f"__etl_{c}")
-            aggs += [
-                F.avg(col).alias(f"{c}__mu"),
-                F.stddev_samp(col).alias(f"{c}__sd"),
-                F.expr(f"{pq}(`__etl_{c}`, array(0.05, 0.95))").alias(f"{c}__q"),
-            ]
-        row = named.agg(*aggs).collect()[0]
+        aggs: list[str] = []
+        for i in range(len(cols)):
+            o = f"_o{i}"
+            aggs += [f"avg({o})", f"stddev_samp({o})", f"{pq}({o}, array(0.05, 0.95))"]
+        row = named.selectExpr(*aggs).collect()[0]
         out = {}
-        for c in cols:
-            q = row[f"{c}__q"]
-            out[c] = (
-                row[f"{c}__mu"],
-                row[f"{c}__sd"],
-                q[0] if q else None,
-                q[1] if q else None,
-            )
+        for i, c in enumerate(cols):
+            mu, sd, qs = row[3 * i : 3 * i + 3]
+            out[c] = (mu, sd, qs[0] if qs else None, qs[1] if qs else None)
         return out
 
     # -- R18 ---------------------------------------------------------------
@@ -634,27 +664,21 @@ class AutoETLPipeline:
         supplies the duplicate-removed and outlier-clamped report counts —
         no separate ``count()`` job.
         """
-        aggs: list[Column] = [F.count(F.lit(1)).alias("__rows")]
-        for c in df.columns:
-            aggs.append(F.sum(F.col(c).isNull().cast("long")).alias(f"{c}__na"))
-            t = self.column_types.get(c)
-            if t == NUMERIC:
-                aggs += [
-                    F.avg(c).alias(f"{c}__mean"),
-                    F.stddev_samp(c).alias(f"{c}__std"),
-                    F.min(c).alias(f"{c}__min"),
-                    F.max(c).alias(f"{c}__max"),
-                ]
-            elif t == DATE:
-                aggs += [F.min(c).alias(f"{c}__min"), F.max(c).alias(f"{c}__max")]
-        row = df.agg(*aggs).collect()[0]
+        cols = df.columns
+        aggs = ["count(1) AS __rows"]
+        for c in cols:
+            x = q(c)
+            aggs.append(f"sum(CAST({x} IS NULL AS BIGINT)) AS {q(c + '__na')}")
+            for fn, key in _SUMMARY_AGGS.get(self.column_types.get(c), ()):
+                aggs.append(f"{fn}({x}) AS {q(f'{c}__{key}')}")
+        row = df.selectExpr(*aggs).collect()[0]
         n_after = row["__rows"]
         self._fill_observed_report(n_after=n_after)
         self.data_summary = {
             "total_rows": n_after,
-            "total_columns": len(df.columns),
+            "total_columns": len(cols),
             "column_types": dict(self.column_types),
-            "missing_values": {c: row[f"{c}__na"] for c in df.columns},
+            "missing_values": {c: row[f"{c}__na"] for c in cols},
             "numeric_columns": {
                 c: {
                     "mean": row[f"{c}__mean"],
@@ -662,12 +686,12 @@ class AutoETLPipeline:
                     "min": row[f"{c}__min"],
                     "max": row[f"{c}__max"],
                 }
-                for c in df.columns
+                for c in cols
                 if self.column_types.get(c) == NUMERIC
             },
             "date_columns": {
                 c: {"min": row[f"{c}__min"], "max": row[f"{c}__max"]}
-                for c in df.columns
+                for c in cols
                 if self.column_types.get(c) == DATE
             },
         }

@@ -75,8 +75,8 @@ def q_etl_clean_numeric(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
     )
-    val = clean_numeric(messy, compat=True)
-    return l.select(val.alias("val")).agg(
+    val = clean_numeric("messy", compat=True)
+    return l.select(messy.alias("messy")).select(val.alias("val")).agg(
         F.count("*").alias("n_rows"),
         F.count("val").alias("n_valid"),
         dsum("val", "sum_val"),
@@ -125,8 +125,8 @@ def q_etl_clean_date(spark: SparkSession, sf_dir: str) -> DataFrame:
         .when(F.col("l_linenumber") == 5, F.lit("not-a-date"))
         .otherwise(F.date_format(sd, "dd.MM.yyyy"))
     )
-    d = parse_date_multi(messy)
-    return l.select(d.alias("d")).agg(
+    d = parse_date_multi("messy")
+    return l.select(messy.alias("messy")).select(d.alias("d")).agg(
         F.count("*").alias("n_rows"),
         F.count("d").alias("n_parsed"),
         F.min("d").alias("min_date"),

@@ -15,7 +15,6 @@ from __future__ import annotations
 
 import os
 
-from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
@@ -121,8 +120,10 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Read one contract table as a lazy parquet scan (Q1: parquet source).
 
     Scans go through a per-session scan catalog (``_scan``). The first
-    load of a parquet file infers its schema (Spark's footer-read job) and
-    probes its partition count (``_maybe_widen``) as a plain
+    load of a parquet file reads its footer with pyarrow (metadata only),
+    then infers its schema (Spark's footer-read job) — or, for a file with
+    a TIMESTAMP(NANOS) column, takes the footer schema and runs no job —
+    and probes its partition count (``_maybe_widen``) as a plain
     ``spark.read.parquet`` would, and records both — the ``StructType``
     and the widen decision — under the file's identity: this
     SparkContext's applicationId, the real path, device, inode, size and
@@ -135,9 +136,9 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
     ``events.parquet``'s ``ts`` physical type has varied across testdata
     generations — parquet TIMESTAMP(NANOS) (which Spark's vectorized reader
-    rejects; readable only as raw longs, under the ``nanosAsLong`` that
-    ``get_spark`` sets or, on any other session, through the footer schema
-    ``_scan`` falls back to) and plain TIMESTAMP(MICROS) (read as
+    rejects; readable only as raw longs: ``get_spark`` sets
+    ``nanosAsLong``, and on any session ``_scan`` reads such a file with
+    its footer schema) and plain TIMESTAMP(MICROS) (read as
     TIMESTAMP_NTZ). Normalize either to a session-TZ TIMESTAMP so every
     downstream plan and oracle sees identical values: nanos truncate to
     micros with integer ``DIV`` (double division would lose precision
@@ -167,8 +168,10 @@ _SCAN_CATALOG: dict[tuple, tuple[StructType, bool]] = {}
 def _scan(spark: SparkSession, path: str) -> DataFrame:
     """``_maybe_widen(spark.read.parquet(path), path)``, with the schema
     and the widen decision taken from the scan catalog when this session
-    already loaded the same file. A path that is not a regular file
-    (a directory of parts, a missing path) bypasses the catalog."""
+    already loaded the same file. On a miss, a file with a TIMESTAMP(NANOS)
+    column is read with its footer schema (``_footer_schema``) instead of
+    Spark's inference. A path that is not a regular file (a directory of
+    parts, a missing path) bypasses the catalog and the footer read."""
     key = None
     if os.path.isfile(path):
         st = os.stat(path)
@@ -179,32 +182,32 @@ def _scan(spark: SparkSession, path: str) -> DataFrame:
         schema, widen = hit
         df = spark.read.schema(schema).parquet(path)
         return df.repartition(spark.sparkContext.defaultParallelism) if widen else df
-    try:
-        df = spark.read.parquet(path)
-    except AnalysisException as e:
-        if e.getCondition() != "PARQUET_TYPE_ILLEGAL":
-            raise
-        df = spark.read.schema(_footer_schema(path)).parquet(path)
+    footer = _footer_schema(path) if key is not None else None
+    reader = spark.read if footer is None else spark.read.schema(footer)
+    df = reader.parquet(path)
     out = _maybe_widen(df, path)
     if key is not None:
         _SCAN_CATALOG[key] = (df.schema, out is not df)
     return out
 
 
-def _footer_schema(path: str) -> StructType:
-    """The file's schema from its parquet footer (metadata only), with
-    TIMESTAMP(NANOS) columns as ``bigint`` raw nanos — the schema
-    ``nanosAsLong`` inference gives, for a session that lacks that conf
-    (Spark's own inference raises PARQUET_TYPE_ILLEGAL there)."""
+def _footer_schema(path: str) -> StructType | None:
+    """For a file with a TIMESTAMP(NANOS) column, its schema read from the
+    parquet footer (metadata only) with those columns as ``bigint`` raw
+    nanos and every column nullable — the schema ``nanosAsLong`` inference
+    gives; ``None`` for any other file. Reading with it skips Spark's inference job, which on a
+    session without that conf fails in its task (PARQUET_TYPE_ILLEGAL)."""
     import pyarrow as pa
     import pyarrow.parquet as pq
     from pyspark.sql.pandas.types import from_arrow_schema
 
     arrow = pq.read_schema(path)
+    nanos = [pa.types.is_timestamp(f.type) and f.type.unit == "ns" for f in arrow]
+    if not any(nanos):
+        return None
     arrow = pa.schema([
-        f.with_type(pa.int64())
-        if pa.types.is_timestamp(f.type) and f.type.unit == "ns" else f
-        for f in arrow
+        (f.with_type(pa.int64()) if n else f).with_nullable(True)
+        for f, n in zip(arrow, nanos)
     ])
     return from_arrow_schema(arrow, prefer_timestamp_ntz=True)
 

@@ -19,7 +19,6 @@ from __future__ import annotations
 import re
 from pathlib import Path
 
-from pyspark.sql import functions as F
 
 from mini_etl_project_spark.functions.cleaning import clean_numeric
 from mini_etl_project_spark.functions.dates import parse_date_multi
@@ -39,8 +38,8 @@ def test_r8_r9_null_on_malformed_under_ansi(spark):
             ["d", "x"],
         )
         rows = df.select(
-            parse_date_multi(F.col("d")).alias("d2"),
-            clean_numeric(F.col("x")).alias("x2"),
+            parse_date_multi("d").alias("d2"),
+            clean_numeric("x").alias("x2"),
         ).collect()
         assert rows[0]["d2"] is None
         assert rows[1]["d2"] is None

@@ -17,7 +17,7 @@ from mini_etl_project_spark.plans.profile import profile_frame_and_count
 
 def _eval_str(spark, expr_builder, values):
     df = spark.createDataFrame([(v,) for v in values], "v string")
-    return [r[0] for r in df.select(expr_builder(F.col("v"))).collect()]
+    return [r[0] for r in df.select(expr_builder("v")).collect()]
 
 
 # -- R9 numeric cleaner ----------------------------------------------------
@@ -107,7 +107,7 @@ def test_parse_date_roundtrip_all_16_formats(spark):
     ).select(F.col("d").cast("date").alias("d"))
     for fmt in DATE_FORMATS:
         out = df.select(
-            "d", parse_date_multi(F.date_format("d", fmt)).alias("p")
+            "d", parse_date_multi(f"date_format(d, '{fmt}')").alias("p")
         ).collect()
         for r in out:
             assert r["p"] is not None, fmt
@@ -250,3 +250,144 @@ def test_median_and_mode_fill(spark):
     assert sorted(r["inf"] for r in out.collect()) == [1.0, 2.0, 2.5, 3.0, 4.0]
     assert "filled missing values with median: 2.5" in pipe.cleaning_report["inf"]
     assert len(calls) == 2                            # fused stats + fallback
+
+
+# -- SQL-text construction: identifiers, literals, plan shape, cost ---------
+
+_EXTRACT_SCHEMA = "okey string, price string, ship string, flag string, note string"
+
+
+def _extract_rows(n):
+    """An all-string extract shaped like perfbench's ``autoetl`` input, plus
+    a free-text column: every cleaner, fill, rare merge and clamp fires."""
+    rows = []
+    for i in range(n):
+        price = f"{'$' if i % 20 == 1 else ''}{100 + (i * 37) % 900}.{i % 100:02d}"
+        price = "N/A" if i % 8 == 0 else ("99999999.00" if i == 7 else price)
+        ship = "N/A" if i % 50 == 3 else f"{1 + i % 28:02d}/{1 + i % 12:02d}/199{i % 10}"
+        flag = "N/A" if i % 40 == 5 else ("x" if i == 11 else "ANR"[i % 3])
+        note = None if i % 30 == 2 else f"note  number {i}   with   spaces"
+        rows.append((str(1000 + i), price, ship, flag, note))
+    return rows + rows[: n // 50]
+
+
+@pytest.mark.parametrize("k", [20, None])
+def test_autoetl_quotes_unusual_column_names(spark, k):
+    """Names with a dot, a space, a backtick and a quote clean exactly like
+    plain names: same rows, types, report and summary, renamed back."""
+    odd = ["okey", "unit.price", "ship date", "a`b", "it's"]
+    plain = spark.createDataFrame(_extract_rows(600), _EXTRACT_SCHEMA)
+    runs = []
+    for df in (plain, plain.toDF(*odd)):
+        pipe = AutoETLPipeline(profile_sample_mod=k)
+        out = pipe.transform(df)
+        runs.append((pipe, out.columns, sorted(out.collect(), key=repr)))
+        pipe.release()
+    (p_pipe, p_cols, p_rows), (o_pipe, o_cols, o_rows) = runs
+    name = dict(zip(plain.columns, odd))
+    assert o_cols == [name[c] for c in p_cols]
+    assert o_rows == p_rows
+    assert o_pipe.column_types == {name[c]: t for c, t in p_pipe.column_types.items()}
+    assert o_pipe.cleaning_report == {
+        name.get(c, c): v for c, v in p_pipe.cleaning_report.items()
+    }
+    summary = dict(p_pipe.data_summary)
+    for key in ("column_types", "missing_values", "numeric_columns", "date_columns"):
+        summary[key] = {name[c]: v for c, v in summary[key].items()}
+    # float sums over the shuffled dedup output depend on arrival order
+    num = summary.pop("numeric_columns")
+    got = dict(o_pipe.data_summary)
+    assert got.pop("numeric_columns") == {
+        c: pytest.approx(st, rel=1e-12) for c, st in num.items()
+    }
+    assert got == summary
+    assert any("clamped" in n for n in o_pipe.cleaning_report["unit.price"])
+    assert any("rare" in n for n in o_pipe.cleaning_report["a`b"])
+
+
+@pytest.mark.parametrize("escaped", ["false", "true"])
+def test_sql_literals_round_trip_under_both_parser_settings(spark, escaped):
+    """``sql_lit`` values parse back bit-exactly whatever
+    ``spark.sql.parser.escapedStringLiterals`` says, and so do the fills
+    the pipeline writes as literals (a median, a date, a quoted string)."""
+    import math
+    import struct
+
+    from mini_etl_project_spark.functions.sqltext import sql_lit
+
+    doubles = [-0.0, 5e-324, 0.1 + 0.2, 1e16, float("nan"), float("inf"), float("-inf")]
+    strings = ["it's", "a\\b", "a\nb", "a\tb", "naïve café ☃", ""]
+    bits = lambda x: struct.pack(">d", x)  # noqa: E731
+    key = "spark.sql.parser.escapedStringLiterals"
+    spark.conf.set(key, escaped)
+    try:
+        vals = doubles + strings
+        row = spark.range(1).selectExpr(
+            *[f"{sql_lit(v)} AS _{i}" for i, v in enumerate(vals)]
+        ).collect()[0]
+        for x, got in zip(doubles, row):
+            assert math.isnan(got) if math.isnan(x) else bits(got) == bits(x), x
+        assert list(row[len(doubles):]) == strings
+
+        df = spark.createDataFrame(
+            [
+                ("1", "0.30000000000000004", "2023-01-05", "it's a\\b"),
+                ("2", "0.30000000000000004", "2023-01-05", "it's a\\b"),
+                ("3", "0.30000000000000004", "2023-01-05", "it's a\\b"),
+                ("4", "5", "2023-02-01", "tab\there"),
+                ("5", "N/A", None, None),
+            ],
+            "k string, x string, d string, t string",
+        )
+        pipe = AutoETLPipeline(eager_summary=False)
+        filled = {r["k"]: r for r in pipe.transform(df).collect()}[5.0]
+        pipe.release()
+    finally:
+        spark.conf.unset(key)
+    assert pipe.column_types == {"k": "numeric", "x": "numeric", "d": "date", "t": "unknown"}
+    assert bits(filled["x"]) == bits(0.1 + 0.2)
+    assert filled["d"] == datetime.date(2023, 1, 5)
+    assert filled["t"] == "it's a\\b"
+
+
+def test_cleaned_base_trims_and_strips_each_input_once(spark, tmp_path):
+    """The persisted base is two projections: each input column's trim or
+    numeric strip appears once in its optimized plan, however many times
+    the guards, the date chain and initcap read the result."""
+    import re
+
+    path = str(tmp_path / "extract")
+    spark.createDataFrame(_extract_rows(600), _EXTRACT_SCHEMA).write.parquet(path)
+    df = spark.read.parquet(path)
+    pipe = AutoETLPipeline(eager_summary=False, assume_partitioned=True)
+    pipe.transform(df)
+    plan = pipe._cached_base._jdf.queryExecution().optimizedPlan().toString()
+    pipe.release()
+    assert set(pipe.column_types.values()) == {"numeric", "date", "categorical", "text"}
+    for c in df.columns:
+        reads = re.findall(rf"\b(?:trim|regexp_replace)\((?:coalesce\()?{c}#\d+", plan)
+        assert len(reads) == 1, (c, len(reads))
+
+
+def test_transform_construction_py4j_calls(spark, monkeypatch):
+    """Building a transform's plans is a bounded number of JVM round trips:
+    every expression is one SQL text entry, not a Column-API tree."""
+    df = spark.createDataFrame(_extract_rows(2000), _EXTRACT_SCHEMA).drop("note")
+    cfg = dict(compat=True, eager_summary=False, exact_stats=False, profile_sample_mod=20)
+    AutoETLPipeline(**cfg).transform(df)  # warm-up
+    client = spark.sparkContext._gateway._gateway_client
+    send, calls = client.send_command, []
+
+    def counting(*args, **kwargs):
+        calls.append(1)
+        return send(*args, **kwargs)
+
+    monkeypatch.setattr(client, "send_command", counting)
+    pipe = AutoETLPipeline(**cfg)
+    pipe.transform(df)
+    monkeypatch.undo()
+    pipe.release()
+    assert pipe.column_types == {
+        "okey": "numeric", "price": "numeric", "ship": "date", "flag": "categorical"
+    }
+    assert len(calls) <= 2000, len(calls)

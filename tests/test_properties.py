@@ -37,7 +37,7 @@ _SETTINGS = settings(
 
 def _col(spark, values, builder):
     df = spark.createDataFrame([(v,) for v in values], "v string")
-    return [r[0] for r in df.select(builder(F.col("v")).alias("o")).collect()]
+    return [r[0] for r in df.select(builder("v").alias("o")).collect()]
 
 
 @given(st.lists(messy, min_size=1, max_size=25))

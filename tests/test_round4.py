@@ -252,7 +252,7 @@ def test_fill_stats_skips_predicted_drop(spark, sf_dir, monkeypatch):
     assert len(calls) == 1
     aggs, stacked = calls[0]
     junk_aggs = [a for a in aggs if "junk" in a]
-    assert len(junk_aggs) == 1 and junk_aggs[0].endswith(" AS junk__null'>")
+    assert len(junk_aggs) == 1 and junk_aggs[0].endswith(" AS `junk__null`")
     assert "junk" not in stacked
 
 

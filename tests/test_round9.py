@@ -205,6 +205,17 @@ def test_cleaned_base_parses_only_typed_columns(spark, tmp_path):
     assert date_cols == {"when"}
     assert num_cols == {"id", "amount"}
 
+    # The base is two projections: the first computes each column's input
+    # (strip or trim) as an attribute, the second cleans that attribute.
+    # Follow each first-level attribute back to the input column it reads.
+    source = dict(
+        (attr, col)
+        for col, attr in re.findall(
+            r"(?:trim|regexp_replace)\((?:cast\(|coalesce\()?(\w+)#\d+L?"
+            r"[\s\S]*?\) AS (\w+#\d+)",
+            plan,
+        )
+    )
     strip = r"[^\d\.,\-+]"
     num_src = re.findall(
         r"regexp_replace\((?:cast\()?(\w+)#\d+L?(?: as string\))?, "
@@ -214,7 +225,9 @@ def test_cleaned_base_parses_only_typed_columns(spark, tmp_path):
     assert len(num_src) == plan.count(strip) > 0
     assert set(num_src) == num_cols
 
-    date_src = re.findall(r"gettimestamp\(trim\((\w+)#\d+L?,", plan)
+    date_src = [
+        source[a] for a in re.findall(r"gettimestamp\((\w+#\d+),", plan)
+    ]
     assert len(date_src) == plan.count("try_to_date") > 0
     assert set(date_src) == date_cols
 

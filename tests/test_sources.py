@@ -678,18 +678,26 @@ def test_load_table_writes_no_session_conf(spark, sf_dir, monkeypatch):
     assert spark.conf.getAll == before
 
 
-def test_load_table_reads_nanos_events(spark, sf_dir, tmp_path):
-    """The TIMESTAMP(NANOS) generation of events loads, cold and warm, to
-    the same rows as the TIMESTAMP(MICROS) fixture."""
+def _nanos_events(sf_dir, out_dir) -> str:
+    """Write ``sf_dir``'s events table to ``out_dir`` with ``ts`` as
+    parquet TIMESTAMP(NANOS); return the file's path."""
     import pyarrow as pa
     import pyarrow.parquet as pq
-
-    from mini_etl_project_spark.session import load_table
 
     table = pq.read_table(os.path.join(sf_dir, "events.parquet"))
     i = table.schema.get_field_index("ts")
     table = table.set_column(i, "ts", table.column("ts").cast(pa.timestamp("ns")))
-    pq.write_table(table, str(tmp_path / "events.parquet"), version="2.6")
+    path = os.path.join(str(out_dir), "events.parquet")
+    pq.write_table(table, path, version="2.6")
+    return path
+
+
+def test_load_table_reads_nanos_events(spark, sf_dir, tmp_path):
+    """The TIMESTAMP(NANOS) generation of events loads, cold and warm, to
+    the same rows as the TIMESTAMP(MICROS) fixture."""
+    from mini_etl_project_spark.session import load_table
+
+    _nanos_events(sf_dir, tmp_path)
     ref = sorted(load_table(spark, sf_dir, "events").collect())
     for _ in range(2):
         got = load_table(spark, str(tmp_path), "events")
@@ -701,16 +709,12 @@ def test_load_table_reads_nanos_events_on_plain_session(spark, tmp_path):
     """A TIMESTAMP(NANOS) events file loads on a session without
     ``nanosAsLong`` (Spark's inference raises PARQUET_TYPE_ILLEGAL there)
     and yields the same rows as the MICROS fixture."""
-    import pyarrow as pa
     import pyarrow.parquet as pq
 
     from mini_etl_project_spark.session import load_table
 
     src = "/root/testdata/sf0.001"
-    t = pq.read_table(f"{src}/events.parquet")
-    i = t.schema.get_field_index("ts")
-    t = t.set_column(i, "ts", t.column("ts").cast(pa.timestamp("ns")))
-    pq.write_table(t, str(tmp_path / "events.parquet"), version="2.6")
+    _nanos_events(src, tmp_path)
     assert pq.read_schema(str(tmp_path / "events.parquet")).field("ts").type.unit == "ns"
 
     plain = spark.newSession()
@@ -722,3 +726,34 @@ def test_load_table_reads_nanos_events_on_plain_session(spark, tmp_path):
     assert sorted(got.collect()) == sorted(want.collect())
     # no session conf was written to make it work
     assert plain.conf.get("spark.sql.legacy.parquet.nanosAsLong") == "false"
+
+
+def test_nanos_events_load_runs_no_failed_job_on_plain_session(
+    spark, sf_dir, tmp_path
+):
+    """On a session without ``nanosAsLong``, the first load of a
+    TIMESTAMP(NANOS) file reads its footer schema and starts no Spark
+    inference job, which would fail in its task there."""
+    from mini_etl_project_spark.session import load_table
+
+    _nanos_events(sf_dir, tmp_path)
+    plain = spark.newSession()
+    plain.conf.unset("spark.sql.legacy.parquet.nanosAsLong")
+    group = f"nanos-plain-{tmp_path.name}"
+    got, _ = _jobs_in_group(
+        plain, group, lambda: load_table(plain, str(tmp_path), "events")
+    )
+    tracker = plain.sparkContext.statusTracker()
+    statuses = [tracker.getJobInfo(j).status for j in tracker.getJobIdsForGroup(group)]
+    assert "FAILED" not in statuses
+    assert dict(got.dtypes)["ts"] == "timestamp"
+
+
+def test_footer_schema_equals_spark_inference(spark, sf_dir, tmp_path):
+    """On a ``get_spark`` session (``nanosAsLong`` set) the footer schema
+    ``_scan`` reads a TIMESTAMP(NANOS) file with is the schema Spark's own
+    inference gives it."""
+    from mini_etl_project_spark.session import _footer_schema
+
+    path = _nanos_events(sf_dir, tmp_path)
+    assert _footer_schema(path) == spark.read.parquet(path).schema
