@@ -68,10 +68,11 @@ about 6,200.
 
 Once the types are known, the cleaned base — one narrow column per input
 column, the parse work done once — is persisted (MEMORY_AND_DISK, so it
-degrades to spill rather than OOM) and every stats job reads it. It is
-tracked class-level: a new ``transform()`` releases the previous
-pipeline's cache, and ``release()`` frees it explicitly, so repeated runs
-never accumulate cached plans. The base is two projections: the first
+degrades to spill rather than OOM) and every stats job reads it. One
+class slot holds the latest base: a new ``transform()`` unpersists the
+previous run's base (unless its SparkContext was stopped, which freed
+it), and ``release()`` frees it explicitly, so repeated runs never
+accumulate cached plans. The base is two projections: the first
 holds each cleaner's input (the numeric strip, or the trimmed string), the
 second the cleaning over that attribute. ``CollapseProject`` keeps them
 apart because the second reads each non-cheap input many times (the date
@@ -85,7 +86,7 @@ from collections.abc import Callable
 from functools import partial
 from typing import Any
 
-from pyspark import StorageLevel
+from pyspark import SparkContext, StorageLevel
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructField
@@ -107,6 +108,14 @@ from mini_etl_project_spark.plans.profile import (
     NUMERIC,
     profile_frame_and_count,
 )
+from mini_etl_project_spark.session import ensure_parallelism
+
+#: A column whose cleaned values are more than this share null is dropped
+#: (reference R13, ETL_PROJECT.py:129-170).
+MISSING_THRESHOLD = 0.8
+#: A numeric value this many standard deviations from its column's mean
+#: is an outlier and is clamped (reference R16, ETL_PROJECT.py:172-201).
+OUTLIER_Z = 3.0
 
 _V = "__etl_value"
 _C = "__etl_column"
@@ -134,16 +143,11 @@ class AutoETLPipeline:
     def __init__(
         self,
         compat: bool = True,
-        missing_threshold: float = 0.8,
-        outlier_z: float = 3.0,
         exact_stats: bool = True,
         eager_summary: bool = True,
-        assume_partitioned: bool = False,
         profile_sample_mod: int | None = None,
     ) -> None:
         self.compat = compat
-        self.missing_threshold = missing_threshold
-        self.outlier_z = outlier_z
         self.exact_stats = exact_stats
         self.eager_summary = eager_summary
         # SURVEY §4.3 approx-profile switch, OFF by default (None/<=1 =
@@ -159,12 +163,6 @@ class AutoETLPipeline:
         # estimates. The 100x sweep measured the full-scan regex profile
         # at 136-213 s — this is the switch that cuts it.
         self.profile_sample_mod = profile_sample_mod
-        # The degenerate-partitioning probe (ensure_parallelism) physically
-        # plans the input frame (~0.8 s of driver time on expression-heavy
-        # projections). Callers whose input already went through
-        # session.load_table — which widens degenerate scans itself — can
-        # declare that and skip the re-probe.
-        self.assume_partitioned = assume_partitioned
         self.column_types: dict[str, str] = {}
         self.cleaning_report: dict[str, list[str]] = {"global": []}
         self.data_summary: dict[str, Any] = {}
@@ -186,22 +184,32 @@ class AutoETLPipeline:
                     return True
         return False
 
-    # Cached cleaned-base projections live here so sequential pipelines
-    # (bench loops, notebook re-runs) never accumulate cached plans: each
-    # transform() releases every earlier pipeline's cache. Two pipelines
+    # The latest transform's cleaned base, whichever pipeline ran it, so
+    # sequential pipelines (bench loops, notebook re-runs) never
+    # accumulate cached plans: each transform() unpersists it first. It is
+    # class-level because the q_etl_pipeline* queries return a lazy frame
+    # whose action runs after their pipeline object is gone; only a shared
+    # slot can evict that run's base before the next run. Two pipelines
     # running concurrently on one session therefore evict each other's
     # cache — a lost cache only recomputes the cleaning pass, so this
     # costs speed, never correctness.
-    _LIVE_CACHES: list[DataFrame] = []
+    _last_base: DataFrame | None = None
+
+    @staticmethod
+    def _unpersist(base: DataFrame, blocking: bool) -> None:
+        """Unpersist ``base`` unless its SparkContext has stopped: a stopped
+        context freed its blocks, and its block manager is gone."""
+        if base.sparkSession.sparkContext is SparkContext._active_spark_context:
+            base.unpersist(blocking=blocking)
 
     def release(self) -> None:
         """Unpersist the cleaned-base cache (call after the terminal
         action on the returned frame; the plan stays valid — downstream
         actions simply recompute the cleaning pass)."""
         if self._cached_base is not None:
-            self._cached_base.unpersist(blocking=False)
-            if self._cached_base in AutoETLPipeline._LIVE_CACHES:
-                AutoETLPipeline._LIVE_CACHES.remove(self._cached_base)
+            self._unpersist(self._cached_base, blocking=False)
+            if AutoETLPipeline._last_base is self._cached_base:
+                AutoETLPipeline._last_base = None
             self._cached_base = None
 
     # -- R1–R6 / R20–R24: E and L phases + the full pipeline ---------------
@@ -235,10 +243,7 @@ class AutoETLPipeline:
     def transform(self, df: DataFrame) -> DataFrame:
         # Regex-heavy profiling/cleaning must not run single-threaded just
         # because the input is one parquet row group (no-op at scale).
-        if not self.assume_partitioned:
-            from mini_etl_project_spark.session import ensure_parallelism
-
-            df = ensure_parallelism(df)
+        df = ensure_parallelism(df)
         fields = df.schema.fields
         cols = [f.name for f in fields]
         self.column_types = {}
@@ -303,12 +308,10 @@ class AutoETLPipeline:
         # run-to-run jitter at sf0.1 from the resulting GC churn;
         # blocking eviction holds a steady ~5 s. The wait itself is
         # block-drop bookkeeping, not I/O.
-        for cached in AutoETLPipeline._LIVE_CACHES:
-            cached.unpersist(blocking=True)
-        AutoETLPipeline._LIVE_CACHES.clear()
+        if AutoETLPipeline._last_base is not None:
+            self._unpersist(AutoETLPipeline._last_base, blocking=True)
         base_df = base_df.persist(StorageLevel.MEMORY_AND_DISK)
-        AutoETLPipeline._LIVE_CACHES.append(base_df)
-        self._cached_base = base_df
+        AutoETLPipeline._last_base = self._cached_base = base_df
 
         base = {c: q(c) for c in cols}
 
@@ -322,7 +325,7 @@ class AutoETLPipeline:
         # parse count estimates the compat strip. A text column is stacked
         # in the whitespace variant its profiled cleaned length predicts.
         # A non-categorical column whose profiled null share already exceeds
-        # ``missing_threshold`` is predicted dropped and gets no fill.
+        # ``MISSING_THRESHOLD`` is predicted dropped and gets no fill.
         cat_cols = [c for c in cols if self.column_types[c] == CATEGORICAL]
         text_cols = [
             c
@@ -342,7 +345,7 @@ class AutoETLPipeline:
             ok = {NUMERIC: p.numeric_ok, DATE: p.date_ok}.get(t, p.text_ok)
             if t == CATEGORICAL or ok >= sample_rows:
                 continue
-            if (sample_rows - ok) / sample_rows > self.missing_threshold:
+            if (sample_rows - ok) / sample_rows > MISSING_THRESHOLD:
                 continue
             if t == NUMERIC:
                 aggs.append(f"{self._median(base[c])} AS {q(c + '__med')}")
@@ -377,7 +380,7 @@ class AutoETLPipeline:
         med_needed: list[str] = []
         for c in cols:
             ratio = (null_count[c] / n_rows) if n_rows else 0.0
-            if ratio > self.missing_threshold:
+            if ratio > MISSING_THRESHOLD:
                 dropped.append(c)
             elif ratio > 0 and self.column_types[c] == NUMERIC:
                 med_needed.append(c)
@@ -512,7 +515,7 @@ class AutoETLPipeline:
                     x = imputed[c]
                     out = (
                         f"abs(({x} - {sql_lit(mu)}) / {sql_lit(sigma)}) "
-                        f"> {sql_lit(self.outlier_z)}"
+                        f"> {sql_lit(OUTLIER_Z)}"
                     )
                     imputed[c] = (
                         f"CASE WHEN {out} THEN least(greatest({x}, "
@@ -663,6 +666,10 @@ class AutoETLPipeline:
         The agg action also materializes the pre-dedup observation, which
         supplies the duplicate-removed and outlier-clamped report counts —
         no separate ``count()`` job.
+
+        Numeric ``mean``/``std`` are floating sums over the deduplicated
+        shuffle output, so their last bits depend on how the rows are
+        partitioned; the output rows themselves stay bit-identical.
         """
         cols = df.columns
         aggs = ["count(1) AS __rows"]

@@ -370,9 +370,7 @@ def q_etl_pipeline_full(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.date_format("l_shipdate", "dd/MM/yyyy").alias("ship"),
         F.col("l_returnflag").alias("flag"),
     )
-    pipe = AutoETLPipeline(
-        compat=True, eager_summary=False, assume_partitioned=True
-    )
+    pipe = AutoETLPipeline(compat=True, eager_summary=False)
     return pipe.transform(raw)
 
 
@@ -471,9 +469,7 @@ def q_etl_pipeline_events(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.when(F.col("event_id") % 10 == 0, F.col("event_id").cast("string"))
         .alias("junk"),
     )
-    pipe = AutoETLPipeline(
-        compat=True, eager_summary=False, assume_partitioned=True
-    )
+    pipe = AutoETLPipeline(compat=True, eager_summary=False)
     return pipe.transform(raw)
 
 
@@ -507,7 +503,6 @@ def q_etl_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         compat=True,
         eager_summary=False,
         exact_stats=False,
-        assume_partitioned=True,  # load_table already widened the scan
         # r12 optimization (guide §1.2 step 1 — don't compute what you
         # throw away): R7 type detection needs parse RATIOS vs a 0.7
         # threshold, not a full scan; the deterministic 1/20 content-hash

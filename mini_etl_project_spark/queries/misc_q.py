@@ -921,7 +921,9 @@ def q_layout_zorder(spark: SparkSession, sf_dir: str) -> DataFrame:
 # fixpoint and the surviving-order aggregate.  The oracle has no
 # procedural engine — it computes the same fixpoint DECLARATIVELY as the
 # minimal power of two satisfying the loop exit condition, proving the
-# imperative and declarative formulations agree.
+# imperative and declarative formulations agree.  Scripting is on by
+# default (``spark.sql.scripting.enabled`` = true since Spark 4.1), so the
+# query writes no session conf.
 
 _SCRIPTING_ORACLE = """
 WITH ms AS (SELECT UNNEST([1, 2, 4, 8, 16, 32, 64, 128, 256, 512, 1024])
@@ -945,7 +947,6 @@ def q_sql_scripting(spark: SparkSession, sf_dir: str) -> DataFrame:
     load_table(spark, sf_dir, "orders").createOrReplaceTempView(
         "script_orders"
     )
-    spark.conf.set("spark.sql.scripting.enabled", "true")
     return spark.sql(
         """
         BEGIN

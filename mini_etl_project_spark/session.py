@@ -232,7 +232,7 @@ def _maybe_widen(df: DataFrame, path: str) -> DataFrame:
     return ensure_parallelism(df)
 
 
-def ensure_parallelism(df: DataFrame, min_parts: int | None = None) -> DataFrame:
+def ensure_parallelism(df: DataFrame) -> DataFrame:
     """Repartition ONLY when the input's partitioning is degenerate.
 
     The guard counts the scan's PLANNED partitions — byte-range splits of
@@ -241,14 +241,15 @@ def ensure_parallelism(df: DataFrame, min_parts: int | None = None) -> DataFrame
     row group's start reads nothing: sf0.1 ``lineitem`` (one row group)
     plans 2 splits at ``local[2]``, one of them empty, so it is not
     widened and one task reads the whole table. A scan that plans fewer
-    splits than ``target`` is repartitioned, so expression-heavy operators
+    splits than the context's ``defaultParallelism`` is repartitioned to
+    it, so expression-heavy operators
     (regex profiling, shingling, vector math) do not run serially on
     small inputs. At scale this is a no-op: a 100 TB table scans as
     thousands of splits ≥ cores, so the guard never triggers and no
     shuffle is added. The repartition cost on the small
     side (where it does trigger) is bounded by the input being small.
     """
-    target = min_parts or df.sparkSession.sparkContext.defaultParallelism
+    target = df.sparkSession.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() < target:
         return df.repartition(target)
     return df

@@ -1,13 +1,14 @@
 """Load dispatch (reference R20–R23, ETL_PROJECT.py:304-324).
 
-Two modes per sink:
+The CSV and JSON sinks have two modes (Parquet, ORC and text always write
+a partitioned directory; Excel always goes through the shim):
 
-- **distributed** (default, the 100 TB path): ``df.write`` produces a
-  partitioned directory; CSV/JSON/Parquet all scale.
-- **compat single-file** (``single_file=True``): byte-shape parity with the
-  reference's one-file outputs via a guarded ``toPandas`` shim — refuses
-  above ``max_driver_rows`` so a 100 TB frame can never be collected by
-  accident.
+- **compat single-file** (``single_file=True``, the default): byte-shape
+  parity with the reference's one-file outputs via a guarded ``toPandas``
+  shim — refuses above ``max_driver_rows`` so a 100 TB frame can never be
+  collected by accident.
+- **distributed** (``single_file=False``, the 100 TB path): ``df.write``
+  produces a partitioned directory; CSV/JSON/Parquet all scale.
 
 SQLite (R23) is inherently a single-connection driver-side sink; the shim
 writes table ``cleaned_data`` with overwrite semantics like the reference.

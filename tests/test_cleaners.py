@@ -67,7 +67,7 @@ def test_clean_numeric_double_matches_pandas_repr_path(spark):
         errors="coerce",
     )
     df = spark.createDataFrame(pd.DataFrame({"i": range(len(xs)), "x": s}))
-    pipe = AutoETLPipeline(eager_summary=False, assume_partitioned=True)
+    pipe = AutoETLPipeline(eager_summary=False)
     pipe.transform(df)
     assert pipe.column_types["x"] == "numeric"
     got = {int(r["i"]): r["x"] for r in pipe._cached_base.collect()}
@@ -359,7 +359,7 @@ def test_cleaned_base_trims_and_strips_each_input_once(spark, tmp_path):
     path = str(tmp_path / "extract")
     spark.createDataFrame(_extract_rows(600), _EXTRACT_SCHEMA).write.parquet(path)
     df = spark.read.parquet(path)
-    pipe = AutoETLPipeline(eager_summary=False, assume_partitioned=True)
+    pipe = AutoETLPipeline(eager_summary=False)
     pipe.transform(df)
     plan = pipe._cached_base._jdf.queryExecution().optimizedPlan().toString()
     pipe.release()

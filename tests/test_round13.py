@@ -109,9 +109,7 @@ def test_sampled_profile_threshold_safety_band(spark):
     sample = df.filter(F.pmod(F.xxhash64(F.col("a")), F.lit(2)) == 0)
     sample_type = profile_frame_and_count(sample)[0]["a"].logical_type
     assert sample_type != full_type
-    pipe = AutoETLPipeline(
-        eager_summary=False, assume_partitioned=True, profile_sample_mod=2
-    )
+    pipe = AutoETLPipeline(eager_summary=False, profile_sample_mod=2)
     out = pipe.transform(df)
     assert pipe.column_types == {"a": full_type}
     out.write.format("noop").mode("overwrite").save()
@@ -150,11 +148,7 @@ def test_sampled_profile_caches_narrow_base(spark):
     df = spark.createDataFrame(rows, "a string, b string, d string")
     # sampled (k=2) and full-row (None) profiles share one persist path
     for sample_mod in (2, None):
-        pipe = AutoETLPipeline(
-            eager_summary=False,
-            assume_partitioned=True,
-            profile_sample_mod=sample_mod,
-        )
+        pipe = AutoETLPipeline(eager_summary=False, profile_sample_mod=sample_mod)
         out = pipe.transform(df)
         cached = pipe._cached_base
         assert cached is not None

@@ -195,7 +195,7 @@ def test_cleaned_base_parses_only_typed_columns(spark, tmp_path):
     # folded into it and leaves no expressions in the plan
     _typed_frame(spark).write.parquet(str(tmp_path / "typed"))
     df = spark.read.parquet(str(tmp_path / "typed"))
-    pipe = AutoETLPipeline(eager_summary=False, assume_partitioned=True)
+    pipe = AutoETLPipeline(eager_summary=False)
     pipe.transform(df)
     plan = pipe._cached_base._jdf.queryExecution().optimizedPlan().toString()
     pipe.release()
