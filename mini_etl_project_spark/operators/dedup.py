@@ -2,12 +2,14 @@
 
 Four tiers, cheapest first — the standard LLM-corpus dedup ladder:
 
-1. **Exact** — hash-groupBy on a normalization key (``dedup_exact``): one
+1. **Exact** — keep-first per md5 of the normalized text, one window
+   over the key (inline in the queries, e.g. ``q_dedup_exact``): one
    shuffle on the key; at 100 TB this is a plain aggregate.
 2. **Near-dup via MinHash + LSH banding** (``minhash_signatures``,
-   ``lsh_candidate_pairs``): shingle → k minhashes → b bands of r rows →
-   bucket-join. Only documents sharing a band bucket are compared, so the
-   candidate join is linear-ish in corpus size instead of O(n²).
+   ``banded_signatures``, ``lsh_candidate_pairs``): shingle → k
+   minhashes → b bands of r rows → bucket-join. Only documents sharing a
+   band bucket are compared, so the candidate join is linear-ish in
+   corpus size instead of O(n²).
 3. **SimHash** (``simhash``): 32-bit sign-aggregated token hashes; near
    dups are pairs within small Hamming distance (bit_count(xor)).
 4. **Exact n-gram Jaccard** (``jaccard_pairs``) — the expensive verifier
@@ -24,20 +26,6 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from mini_etl_project_spark.operators.textops import char_shingles, hash64
-
-
-def dedup_exact(
-    df: DataFrame, key, tiebreak, keep_cols: list[str] | None = None
-) -> DataFrame:
-    """X1: keep exactly one row per ``key``, deterministically — the row
-    minimizing ``tiebreak``. (``dropDuplicates`` picks an arbitrary row;
-    a window + rn=1 pins the choice, same single shuffle.)
-    """
-    keys = [key] if isinstance(key, str) else list(key)
-    order = [tiebreak] if not isinstance(tiebreak, list) else tiebreak
-    w = Window.partitionBy(*keys).orderBy(*order)
-    out = df.withColumn("__rn", F.row_number().over(w)).filter(F.col("__rn") == 1)
-    return out.select(*(keep_cols or df.columns))
 
 
 def shingle_rows(df: DataFrame, id_col: str, text_col: str, k: int = 5) -> DataFrame:
@@ -72,16 +60,14 @@ def minhash_signatures(
     )
 
 
-def lsh_candidate_pairs(
-    signatures: DataFrame, rows_per_band: int = 4
-) -> DataFrame:
-    """X2: band the signature and bucket-join — (id_a, id_b) candidate
-    pairs (a < b) sharing at least one band bucket.
+def banded_signatures(sigs: DataFrame, rows_per_band: int = 4) -> DataFrame:
+    """(id, band, band_key) rows from (id, minhashes) signatures.
 
-    Banding is a pure projection over the signature array (band key = md5
-    of the comma-joined band slice, array order = seed order), then one
-    explode to (id, band, band_key) rows. The self-join is on
-    (band, band_key) — tiny buckets, no O(n²) blowup.
+    Banding is a pure projection over the signature array: band ``b`` is
+    the slice of ``rows_per_band`` consecutive minhashes starting at
+    ``b * rows_per_band`` (array order = seed order), and its key is the
+    md5 of the comma-joined slice — bit-identical to the oracles'
+    ``string_agg``/md5 banding. One explode yields one row per band.
     """
     nb = (F.size("minhashes") / rows_per_band).cast("int")
     bands = F.transform(
@@ -101,15 +87,22 @@ def lsh_candidate_pairs(
             ).alias("band_key"),
         ),
     )
-    banded = signatures.select("id", F.explode(bands).alias("bk")).select(
+    return sigs.select("id", F.explode(bands).alias("bk")).select(
         "id", F.col("bk.band").alias("band"), F.col("bk.band_key").alias("band_key")
     )
-    a = banded.select(
-        F.col("band"), F.col("band_key"), F.col("id").alias("id_a")
-    )
-    b = banded.select(
-        F.col("band"), F.col("band_key"), F.col("id").alias("id_b")
-    )
+
+
+def lsh_candidate_pairs(
+    signatures: DataFrame, rows_per_band: int = 4
+) -> DataFrame:
+    """X2: band the signature and bucket-join — (id_a, id_b) candidate
+    pairs (a < b) sharing at least one band bucket.
+
+    The self-join is on (band, band_key) — tiny buckets, no O(n²) blowup.
+    """
+    banded = banded_signatures(signatures, rows_per_band)
+    a = banded.select("band", "band_key", F.col("id").alias("id_a"))
+    b = banded.select("band", "band_key", F.col("id").alias("id_b"))
     return (
         a.join(b, ["band", "band_key"])
         .filter(F.col("id_a") < F.col("id_b"))
@@ -242,10 +235,6 @@ def ml_minhash_lsh_pairs(
 def connected_components(
     pairs: DataFrame,
     max_iter: int = 20,
-    *,
-    group_min: bool = True,
-    compress: bool = True,
-    stats: dict | None = None,
 ) -> DataFrame:
     """Collapse near-dup pairs into clusters: (id, component) where
     component is the minimum id reachable through the pair graph.
@@ -273,12 +262,6 @@ def connected_components(
     change" job. ``localCheckpoint`` per round truncates the
     exponentially-growing lineage (standard for iterative Spark
     algorithms).
-
-    ``group_min=False`` / ``compress=False`` disable steps 2 / 3 —
-    instrumentation toggles for the round-count experiments in
-    SCALE_VALIDATION.md (chain vs clique topology decomposition);
-    production callers leave both on. ``stats`` (if given) receives
-    ``{"rounds": n}`` on return.
     """
     from pyspark.sql import Observation
 
@@ -298,9 +281,7 @@ def connected_components(
         .distinct()
         .withColumn("component", F.col("id"))
     )
-    rounds = 0
     for _ in range(max_iter):
-        rounds += 1
         neighbor_min = (
             edges.join(labels, edges["dst"] == labels["id"])
             .groupBy("src")
@@ -318,36 +299,28 @@ def connected_components(
                 ).alias("nmin"),
             )
         )
-        if group_min:
-            # Group-min broadcast: nodes sharing a pre-round label are
-            # already known to be in one component, so the best label any
-            # of them found this round is valid for all of them.
-            gmin = stepped.groupBy(F.col("old_component").alias("gc")).agg(
-                F.min("nmin").alias("gmin")
-            )
-            merged = stepped.join(
-                gmin, F.col("old_component") == F.col("gc")
-            ).select(
-                "id",
-                "old_component",
-                F.least("nmin", "gmin").alias("component"),
-            )
-        else:
-            merged = stepped.select(
-                "id", "old_component", F.col("nmin").alias("component")
-            )
-        if compress:
-            # Path compression: a component label is itself a node id, so
-            # jump to THAT node's (post-step) label. Inner join is safe —
-            # every label is present in `merged.id`.
-            comp_map = merged.select(
-                F.col("id").alias("cid"), F.col("component").alias("ccomp")
-            )
-            compressed = merged.join(
-                comp_map, F.col("component") == F.col("cid")
-            ).select("id", "old_component", F.col("ccomp").alias("component"))
-        else:
-            compressed = merged
+        # Group-min broadcast: nodes sharing a pre-round label are
+        # already known to be in one component, so the best label any
+        # of them found this round is valid for all of them.
+        gmin = stepped.groupBy(F.col("old_component").alias("gc")).agg(
+            F.min("nmin").alias("gmin")
+        )
+        merged = stepped.join(
+            gmin, F.col("old_component") == F.col("gc")
+        ).select(
+            "id",
+            "old_component",
+            F.least("nmin", "gmin").alias("component"),
+        )
+        # Path compression: a component label is itself a node id, so
+        # jump to THAT node's (post-step) label. Inner join is safe —
+        # every label is present in `merged.id`.
+        comp_map = merged.select(
+            F.col("id").alias("cid"), F.col("component").alias("ccomp")
+        )
+        compressed = merged.join(
+            comp_map, F.col("component") == F.col("cid")
+        ).select("id", "old_component", F.col("ccomp").alias("component"))
         obs = Observation()
         observed = compressed.observe(
             obs,
@@ -358,8 +331,6 @@ def connected_components(
         labels = observed.select("id", "component").localCheckpoint(eager=True)
         if not obs.get["changed"]:
             break
-    if stats is not None:
-        stats["rounds"] = rounds
     return labels
 
 

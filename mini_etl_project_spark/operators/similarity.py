@@ -4,9 +4,11 @@
   recall yardstick. Query set × corpus via broadcast join (queries are few;
   never materialize corpus×corpus), exact-decimal cosine, window top-k.
 - ``RandomHyperplaneLSH``: the scale path. Deterministic md5-derived
-  hyperplanes (no RNG state to ship), sign-bit bucket per table; top-k is
-  computed only within matching buckets across L tables. Sub-linear
-  candidate sets at 100 TB, tunable recall via (bits, tables).
+  hyperplanes (no RNG state to ship), one bucket per table from the signs
+  of exact-decimal dots, so any engine that follows the md5 derivation
+  re-derives every bucket; top-k is computed only within matching
+  buckets across L tables. Sub-linear candidate sets at 100 TB, tunable
+  recall via (bits, tables).
 - ``ml_brp_lsh``: the spark.ml BucketedRandomProjectionLSH equivalent
   (Euclidean), kept as the library-native alternative.
 """
@@ -30,37 +32,11 @@ def topk_exact(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     k: int = 5,
-    prefilter_margin: float | None = None,
 ) -> DataFrame:
     """Exact cosine top-k neighbors for each query vector (self excluded).
 
     Output: (query_id, neighbor_id, cosine, rank), rank 1..k,
     deterministic tie-break on neighbor id.
-
-    ``prefilter_margin`` (r12, guide §1.2 "per-task work"): the
-    exact-decimal dot product is ~10× a double fold per term (boxed
-    BigDecimal adds), and ranking needs it only near the cut. With a
-    margin set, a plain double-fold cosine ranks every pair cheaply
-    first and the exact-decimal rescore runs ONLY on pairs within
-    ``margin`` of the k-th approximate score. Lossless by the same
-    argument as ``dot_sign_nonneg_sql``: |exact − double| per pair is
-    bounded by the decimal quantization (64 · 5e-11 = 3.2e-9) over the
-    norm product plus ~1 ulp of double accumulation, so with margin ≫
-    2·bound no pair outside the margin can reach the exact top-k, and
-    every pair that could tie at the boundary is inside it
-    (strict-inequality argument — tie-breaks never cross the margin).
-    NULL-ness is identical on both paths (same norm-product
-    denominator), and if a query has fewer than k non-null approx
-    scores the filter keeps ALL its rows.
-
-    Default OFF after a measured A/B at sf0.1 (2 000 × 10 pairs,
-    OPTIMIZATION_r12.md): once the corpus scan is widened the decimal
-    scoring parallelizes across the pre-exchange map side and the
-    prefilter's two extra window passes cost more than they save
-    (0.56 s plain vs 0.92 s prefiltered). It becomes the right call when
-    per-query candidate counts grow so the decimal CPU dominates the
-    window bookkeeping — i.e. corpus ≫ cores × (window cost / decimal
-    saving), the 100 TB corpus-scan regime.
     """
     from mini_etl_project_spark.session import ensure_parallelism
 
@@ -83,39 +59,10 @@ def topk_exact(
         F.sqrt(sqnorm_exact(vec_col)).alias("c_norm"),
     )
     denom = F.col("q_norm") * F.col("c_norm")
-    pairs = c.join(F.broadcast(q)).filter(
-        F.col("query_id") != F.col("neighbor_id")
-    )
-    if prefilter_margin is not None:
-        dd = F.aggregate(
-            F.zip_with(
-                F.col("q_vec"),
-                F.col("c_vec"),
-                lambda x, y: x.cast("double") * y.cast("double"),
-            ),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-        wa = Window.partitionBy("query_id").orderBy(
-            F.desc_nulls_last("__approx"), "neighbor_id"
-        )
-        ranked = pairs.withColumn(
-            "__approx", F.when(denom != 0, dd / denom)
-        ).withColumn("__ar", F.row_number().over(wa))
-        kth = F.max(F.when(F.col("__ar") == k, F.col("__approx"))).over(
-            Window.partitionBy("query_id")
-        )
-        pairs = (
-            ranked.withColumn("__kth", kth)
-            .filter(
-                F.col("__kth").isNull()
-                | (F.col("__approx") >= F.col("__kth") - F.lit(prefilter_margin))
-            )
-            .drop("__approx", "__ar", "__kth")
-        )
-    scored = pairs.withColumn(
-        "cosine",
-        F.when(denom != 0, dot_exact("q_vec", "c_vec") / denom),
+    scored = (
+        c.join(F.broadcast(q))
+        .filter(F.col("query_id") != F.col("neighbor_id"))
+        .withColumn("cosine", F.when(denom != 0, dot_exact("q_vec", "c_vec") / denom))
     )
     w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), "neighbor_id")
     return (
@@ -147,21 +94,14 @@ class RandomHyperplaneLSH:
 
     P[bucket match per bit] = 1 − θ/π; with ``bits`` per table and
     ``tables`` independent tables, near neighbors collide w.h.p. while
-    the corpus shards into ~2^bits buckets per table.
+    the corpus shards into ~2^bits buckets per table. Each bit is the
+    sign of the exact-decimal dot (``dot_sign_nonneg_sql``), so a vector's
+    buckets do not depend on partitioning and a SQL oracle re-derives
+    them (``q_sim_lsh_topk``).
     """
 
-    def __init__(
-        self, dim: int, bits: int = 8, tables: int = 4, exact_sign: bool = False
-    ) -> None:
+    def __init__(self, dim: int, bits: int = 8, tables: int = 4) -> None:
         self.dim, self.bits, self.tables = dim, bits, tables
-        #: exact_sign=True routes the sign-bit dot product through the
-        #: order-independent decimal accumulator (functions/vectors.py)
-        #: instead of sequential double adds. Marginally slower, but the
-        #: bucket of a vector is then bit-reproducible by ANY engine that
-        #: follows the md5 derivation — which makes the whole ANN pipeline
-        #: oracle-checkable in SQL (q_sim_lsh_topk) and partitioning-proof
-        #: even for dots within one ulp of zero.
-        self.exact_sign = exact_sign
         # Each table's planes as ONE array(array(...)) of SQL literals
         # (bits × dim doubles, tiny), parsed with the rest of the bucket
         # expression; the optimizer folds it to a single array Literal.
@@ -181,21 +121,14 @@ class RandomHyperplaneLSH:
     def bucket(self, vec_col: str, table: int) -> str:
         """SQL for the bucket id (bigint) of a vector in one table: the
         packed sign bits, folded over (bit, plane) with ``zip_with``."""
-        if self.exact_sign:
-            # Sign-only decision: double fold with an exact-decimal
-            # fallback inside ±1e-6 of zero — bit-identical to the pure
-            # decimal fold (see dot_sign_nonneg_sql), ~10× cheaper on the
-            # bucketing hot path.
-            nonneg = dot_sign_nonneg_sql(vec_col, "_plane")
-        else:
-            nonneg = (
-                f"aggregate(zip_with({vec_col}, _plane, "
-                "(x, y) -> CAST(x AS DOUBLE) * y), 0.0D, (acc, x) -> acc + x) >= 0"
-            )
+        # Sign-only decision: double fold with an exact-decimal fallback
+        # inside ±1e-6 of zero — bit-identical to the pure decimal fold
+        # (see dot_sign_nonneg_sql), ~10× cheaper on the bucketing hot path.
         # The lambda variables must not shadow the column ``vec_col`` names.
         return (
             f"aggregate(zip_with(sequence(0, {self.bits - 1}), {self._planes[table]}, "
-            f"(_bit, _plane) -> IF({nonneg}, shiftleft(1L, _bit), 0L)), "
+            f"(_bit, _plane) -> IF({dot_sign_nonneg_sql(vec_col, '_plane')}, "
+            "shiftleft(1L, _bit), 0L)), "
             "0L, (acc, x) -> acc + x)"
         )
 

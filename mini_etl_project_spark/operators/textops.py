@@ -58,12 +58,6 @@ def hash64(col: str, seed: int = 0) -> Column:
     )
 
 
-def word_count(col: Column | str) -> Column:
-    """X9: whitespace token count (validates against documents.n_chars's
-    sibling golden checks)."""
-    return F.size(tokens(col))
-
-
 def quality_score(col: Column | str) -> Column:
     """X9: heuristic doc-quality score in [0, 1] from length, mean word
     length, and stopword ratio — pure arithmetic, portable to SQL.

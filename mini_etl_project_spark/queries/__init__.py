@@ -89,67 +89,18 @@ def _load_all() -> None:
 # re-sorts the rotation for the next one.
 
 #: Queries re-touched this round (fresh driver evidence wanted first).
-#: Round 13 (VERDICT r12 ask #3 — drain the driver-evidence debt): the
-#: three queries whose PLANS this optimization round reshaped (narrow
-#: ETL cache + outlier ride; ingest width pin; boxcox scan widening),
-#: two representatives of the 16 pln-memoization lanes (trees identical
-#: by construction, locally re-verified exact), then ALL 38 remaining
-#: ts-NULL-reshaped lanes whose latest driver evidence predates their
-#: r12 mid-build reshape (computed: ts-sweep-touched @query functions in
-#: 5f57768..f725d46 minus CORRECTNESS_r12.json greens).
+#: The similarity and dedup operators now have one code path each:
+#: q_sim_ann_lsh's buckets take the exact sign and it gained an oracle;
+#: the others run a trimmed operator and their latest CORRECTNESS rows are
+#: r3 (the first four) and r9 (the last two).
 _RECHECK: list[str] = [
-    "q_etl_pipeline",
-    "q_corpus_incremental_ingest",
-    "q_ml_boxcox_grid",
-    "q_text_zipf_fit",
-    "q_stream_entropy_windowed",
-    # -- ts-NULL sweep lanes, local-only evidence until now --
-    "q_join_asof_forward",
-    "q_join_asof_nearest",
-    "q_join_asof_nullpayload",
-    "q_join_asof_tolerance",
-    "q_ml_psm_match",
-    "q_sql_named_window",
-    "q_stream_funnel",
-    "q_stream_ohlc",
-    "q_stream_sliding",
-    "q_ts_anomaly",
-    "q_ts_autocorr",
-    "q_ts_binary_seg",
-    "q_ts_bollinger",
-    "q_ts_cumsum_reset",
-    "q_ts_cusum",
-    "q_ts_dickey_fuller",
-    "q_ts_ema",
-    "q_ts_ema_crossover",
-    "q_ts_forecast_eval",
-    "q_ts_markov_transitions",
-    "q_ts_ohlc",
-    "q_ts_paths",
-    "q_ts_pattern_vshape",
-    "q_ts_peaks",
-    "q_ts_rebase_index",
-    "q_ts_rescaled_range",
-    "q_ts_runs_test",
-    "q_ts_sax",
-    "q_ts_seasonal_decompose",
-    "q_ts_session_gap",
-    "q_ts_transition_matrix",
-    "q_ts_xmr_control",
-    "q_window_count_distinct",
-    "q_window_ignore_nulls",
-    "q_window_rolling_regression",
-    "q_window_session_dynamic_gap",
-    "q_window_session_native",
-    "q_window_sliding",
+    "q_sim_ann_lsh",
+    "q_sim_lsh_topk",
+    "q_sim_topk_exact",
+    "q_dedup_minhash_lsh",
+    "q_graph_connected_components",
+    "q_dedup_semantic",
 ]
-
-#: Round-12's deferral of X520-X524 EXPIRES this round (VERDICT r12:
-#: "their deferral expires next round and they must rotate into the r13
-#: sample"): empty deferral drops them into the never-sampled bucket,
-#: which sorts immediately after _RECHECK — 43 + 4 = 47 of the ~50
-#: budget, leaving the tail to the stalest sampled queries.
-_DEFER_NEW: list[str] = []
 
 
 def _driver_evidence() -> dict[str, int]:
@@ -180,14 +131,12 @@ def _rotation_order(names: list[str]) -> list[str]:
     pos = {n: i for i, n in enumerate(names)}
     recheck = [n for n in _RECHECK if n in pos]
     rest = [n for n in names if n not in set(recheck)]
-    defer = set(_DEFER_NEW)
-    never = [n for n in rest if n not in evidence and n not in defer]
-    deferred = [n for n in rest if n not in evidence and n in defer]
+    never = [n for n in rest if n not in evidence]
     sampled = sorted(
         (n for n in rest if n in evidence),
         key=lambda n: (evidence[n], pos[n]),
     )
-    return recheck + never + deferred + sampled
+    return recheck + never + sampled
 
 
 def _reorder() -> None:

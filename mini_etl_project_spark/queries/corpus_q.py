@@ -1757,11 +1757,11 @@ def q_corpus_incremental_ingest(
     sweep at bound=3000)."""
     from mini_etl_project_spark.functions.vectors import dot_exact, sqnorm_exact
     from mini_etl_project_spark.operators.dedup import (
+        banded_signatures,
         minhash_signatures,
         shingle_rows,
     )
     from mini_etl_project_spark.operators.similarity import RandomHyperplaneLSH
-    from mini_etl_project_spark.queries.dedup_q import banded_signatures
 
     # Barrier budget (VERDICT r11 ask #4): FOUR eager checkpoints —
     # base, surv, vecs, hits — down from round-11's seven. The cuts:
@@ -1930,7 +1930,7 @@ def q_corpus_incremental_ingest(
         surv.select(F.col("id").alias("vec_id")), "vec_id"
     )
     v_ex = vecs.filter(F.col("vec_id") % 3 != 0)
-    lsh = RandomHyperplaneLSH(dim=64, bits=4, tables=4, exact_sign=True)
+    lsh = RandomHyperplaneLSH(dim=64, bits=4, tables=4)
     b_inc = lsh.add_buckets(v_inc, "embedding").select(
         "table", "bucket", F.col("vec_id").alias("inc_id")
     )

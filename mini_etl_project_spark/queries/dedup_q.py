@@ -18,6 +18,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from mini_etl_project_spark.operators.dedup import (
+    banded_signatures,
     jaccard_pairs,
     lsh_candidate_pairs,
     minhash_signatures,
@@ -698,41 +699,8 @@ SELECT CAST((SELECT COUNT(*) FROM incoming) AS BIGINT) AS n_incoming,
 """
 
 
-def banded_signatures(sigs: DataFrame) -> DataFrame:
-    """(id, band, band_key) rows from (id, minhashes) signatures: rows of
-    4 consecutive minhashes per band, md5 over the joined band values —
-    bit-identical to the oracle's string_agg/md5 banding. Shared by X227
-    and the X517 ingestion composition (corpus_q)."""
-    nb = (F.size("minhashes") / 4).cast("int")
-    bands = F.transform(
-        F.sequence(F.lit(0), nb - 1),
-        lambda b: F.struct(
-            b.alias("band"),
-            F.md5(
-                F.array_join(
-                    F.transform(
-                        F.slice(F.col("minhashes"), b * 4 + 1, 4),
-                        lambda m: m.cast("string"),
-                    ),
-                    ",",
-                )
-            ).alias("band_key"),
-        ),
-    )
-    return sigs.select("id", F.explode(bands).alias("bk")).select(
-        "id",
-        F.col("bk.band").alias("band"),
-        F.col("bk.band_key").alias("band_key"),
-    )
-
-
 @query("q_dedup_incremental", _INCR_DEDUP_ORACLE)
 def q_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from mini_etl_project_spark.operators.dedup import (
-        minhash_signatures,
-        shingle_rows,
-    )
-
     # NULL-text docs are excluded from dedup accounting on BOTH engines:
     # they have no key and no shingles, and the oracle's `k NOT IN (ek)`
     # goes three-valued-NULL on a NULL key (emptying surv) while Spark's
@@ -763,14 +731,12 @@ def q_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact_dup = ik.join(ek, "k", "left_semi")
     surv = ik.join(ek, "k", "left_anti").select("id", "text")
 
-    banded = banded_signatures
-
     sh_e = shingle_rows(existing, "id", "text")
     sh_s = shingle_rows(surv, "id", "text")
-    band_e = banded(minhash_signatures(sh_e)).select(
+    band_e = banded_signatures(minhash_signatures(sh_e)).select(
         "band", "band_key", F.col("id").alias("ex_id")
     )
-    band_s = banded(minhash_signatures(sh_s)).select(
+    band_s = banded_signatures(minhash_signatures(sh_s)).select(
         "band", "band_key", F.col("id").alias("inc_id")
     )
     cand = (

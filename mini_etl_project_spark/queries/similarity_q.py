@@ -3,13 +3,12 @@
 The exact top-k is fully oracle-checked: both engines compute cosine from
 exact-decimal dot products and squared norms, so scores AND rankings are
 bit-identical. The LSH ANN path is ALSO hash-checked end-to-end
-(``q_sim_lsh_topk``: md5 hyperplanes + candidate sets re-derived in SQL
-under exact-sign bucketing). The remaining ANN variants (double-
-accumulation LSH, IVF, PQ, spark.ml BRP-LSH) are rows-only for the
-driver; their recall against the exact top-k is asserted in
-tests/test_extensions.py (test_ann_recall_vs_exact,
-test_ivf_recall_vs_exact) and PQ's full-rerank degenerate case is
-oracle-exact (``q_sim_topk_pq_rerank``).
+(``q_sim_ann_lsh``, ``q_sim_lsh_topk``: md5 hyperplanes + exact-sign
+candidate sets re-derived in SQL). The remaining ANN variants (IVF, PQ,
+spark.ml BRP-LSH) are rows-only (no oracle); their recall against the
+exact top-k is asserted in tests/test_extensions.py
+(test_ann_recall_vs_exact, test_ivf_recall_vs_exact) and PQ's
+full-rerank degenerate case is oracle-exact (``q_sim_topk_pq_rerank``).
 """
 
 from __future__ import annotations
@@ -67,37 +66,28 @@ def q_sim_topk_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     return topk_exact(e, queries, k=_K)
 
 
-@query("q_sim_ann_lsh")
-def q_sim_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X4: deterministic random-hyperplane LSH ANN top-k (rows-only;
-    recall vs exact asserted in tests). Production variant with plain
-    double sign-dots; the hash-checked sibling is q_sim_lsh_topk."""
-    e = load_table(spark, sf_dir, "embeddings")
-    queries = e.filter(F.col("vec_id") < _NQ)
-    lsh = RandomHyperplaneLSH(dim=_DIM, bits=3, tables=8)
-    return lsh.topk(e, queries, k=_K)
-
-
 # -- X4 LSH, fully oracle-checked ------------------------------------------
 # The hyperplanes are md5-derived (operators/similarity.py::_hyperplane),
 # so DuckDB can re-derive every plane component bit-for-bit: first 8 md5
 # bytes as UBIGINT → /2^63 − 1 (integer→double rounding is IEEE
 # round-half-even in both engines, and /2^63 only scales the exponent).
-# With exact_sign=True the sign-bit dots go through the same decimal
-# accumulation both sides, so bucket ids — and therefore the CANDIDATE
-# SETS — are reproducible, not just the scoring. This converts the LSH
-# path from rows-only to hash-checked end-to-end.
+# The sign-bit dots go through the same decimal accumulation both sides,
+# so bucket ids — and therefore the CANDIDATE SETS — are reproducible,
+# not just the scoring: the LSH path is hash-checked end-to-end.
 
 _LSH_BITS, _LSH_TABLES = 3, 4
 
-_LSH_TOPK_ORACLE = f"""
+
+def _lsh_topk_oracle(bits: int, tables: int) -> str:
+    """DuckDB twin of ``RandomHyperplaneLSH(_DIM, bits, tables).topk``."""
+    return f"""
 WITH planes AS (
   SELECT t.t AS tbl, b.b AS bit, d.d AS dim,
          (('0x' || substr(md5('rhp:' || t.t || ':' || b.b || ':' || d.d),
                           1, 16))::UBIGINT::DOUBLE
           / 9223372036854775808.0 - 1.0) AS w
-  FROM unnest(generate_series(0, {_LSH_TABLES - 1})) t(t),
-       unnest(generate_series(0, {_LSH_BITS - 1})) b(b),
+  FROM unnest(generate_series(0, {tables - 1})) t(t),
+       unnest(generate_series(0, {bits - 1})) b(b),
        unnest(generate_series(0, {_DIM - 1})) d(d)),
 bitdots AS (
   SELECT e.vec_id, p.tbl, p.bit,
@@ -144,15 +134,24 @@ SELECT query_id, neighbor_id, cosine, rank FROM ranked WHERE rank <= {_K}
 """
 
 
-@query("q_sim_lsh_topk", _LSH_TOPK_ORACLE)
-def q_sim_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X4 hash-checked: LSH ANN top-k with exact-sign bucketing — the
-    oracle re-derives the md5 hyperplanes and the candidate sets in SQL."""
+@query("q_sim_ann_lsh", _lsh_topk_oracle(bits=3, tables=8))
+def q_sim_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """X4: deterministic random-hyperplane LSH ANN top-k, 3 bits × 8
+    tables (recall vs exact asserted in tests); q_sim_lsh_topk is the
+    3 × 4 sibling."""
     e = load_table(spark, sf_dir, "embeddings")
     queries = e.filter(F.col("vec_id") < _NQ)
-    lsh = RandomHyperplaneLSH(
-        dim=_DIM, bits=_LSH_BITS, tables=_LSH_TABLES, exact_sign=True
-    )
+    lsh = RandomHyperplaneLSH(dim=_DIM, bits=3, tables=8)
+    return lsh.topk(e, queries, k=_K)
+
+
+@query("q_sim_lsh_topk", _lsh_topk_oracle(_LSH_BITS, _LSH_TABLES))
+def q_sim_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """X4 hash-checked: LSH ANN top-k, 3 bits × 4 tables — the oracle
+    re-derives the md5 hyperplanes and the candidate sets in SQL."""
+    e = load_table(spark, sf_dir, "embeddings")
+    queries = e.filter(F.col("vec_id") < _NQ)
+    lsh = RandomHyperplaneLSH(dim=_DIM, bits=_LSH_BITS, tables=_LSH_TABLES)
     return lsh.topk(e, queries, k=_K)
 
 
@@ -630,7 +629,7 @@ def q_sim_mmr_select(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # -- X321: ANN quality accounting, fully oracle-checked --------------------
-# VERDICT r5 #8: the production ANN variants (q_sim_ann_lsh/ivf/ml_brp/pq)
+# VERDICT r5 #8: the production ANN variants (q_sim_ann_ivf/ml_brp/pq)
 # are rows-only by design (their scoring floats ride implementation-
 # defined float accumulation). This query gives the ANN path a REAL
 # correctness row: per probe query it emits the LSH candidate-set size
@@ -738,9 +737,7 @@ def q_sim_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     and recall@k hits vs the exact twin, as oracle-hashable integers."""
     e = load_table(spark, sf_dir, "embeddings")
     queries = e.filter(F.col("vec_id") < _NQ)
-    lsh = RandomHyperplaneLSH(
-        dim=_DIM, bits=_LSH_BITS, tables=_LSH_TABLES, exact_sign=True
-    )
+    lsh = RandomHyperplaneLSH(dim=_DIM, bits=_LSH_BITS, tables=_LSH_TABLES)
     cb = lsh.add_buckets(
         e.select(F.col("vec_id").alias("neighbor_id"),
                  F.col("embedding").alias("c_vec")),
@@ -854,9 +851,7 @@ def q_sim_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     e = load_table(spark, sf_dir, "embeddings")
     queries = e.filter(F.col("vec_id") < _NQ)
-    lsh = RandomHyperplaneLSH(
-        dim=_DIM, bits=_LSH_BITS, tables=_LSH_TABLES, exact_sign=True
-    )
+    lsh = RandomHyperplaneLSH(dim=_DIM, bits=_LSH_BITS, tables=_LSH_TABLES)
     cb = lsh.add_buckets(
         e.select(F.col("vec_id").alias("neighbor_id"),
                  F.col("embedding").alias("c_vec")),
@@ -1038,9 +1033,7 @@ def _semdedup_edges_and_roots(spark: SparkSession, sf_dir: str):
     e = load_table(spark, sf_dir, "embeddings")
     # adaptive bucket width (see header): one 1-row count action
     bits = _semdedup_bits(e.count())
-    lsh = RandomHyperplaneLSH(
-        dim=_DIM, bits=bits, tables=_LSH_TABLES, exact_sign=True
-    )
+    lsh = RandomHyperplaneLSH(dim=_DIM, bits=bits, tables=_LSH_TABLES)
     b = lsh.add_buckets(
         e.select("vec_id", "embedding"), "embedding"
     ).select("table", "bucket", "vec_id")

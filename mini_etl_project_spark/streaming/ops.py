@@ -379,16 +379,6 @@ def tumbling_agg(stream: DataFrame, width: str = "1 hour") -> DataFrame:
     )
 
 
-def sliding_agg(stream: DataFrame) -> DataFrame:
-    """Q31: sliding window (1 hour wide, 30 min slide)."""
-    return (
-        stream.withWatermark("ts", "10 minutes")
-        .groupBy(F.window("ts", "1 hour", "30 minutes").alias("w"))
-        .agg(F.count("*").alias("n_events"))
-        .select(F.col("w.start").alias("window_start"), "n_events")
-    )
-
-
 def session_agg(stream: DataFrame, gap: str = "30 minutes") -> DataFrame:
     """Q32/X10: session windows per user (gap-merged).
 

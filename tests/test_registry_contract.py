@@ -142,37 +142,6 @@ def test_oracle_names_subset_and_unique():
     assert not orphans, f"oracle SQL with no registered query: {orphans}"
 
 
-def test_rotation_defers_new_queries_behind_drain():
-    """Round-10 rotation contract: names in _DEFER_NEW sit AFTER every
-    non-deferred never-sampled name, so the driver's ~50/round budget
-    drains the old evidence gap before sampling this round's additions
-    (VERDICT r9 ask #1)."""
-    import glob
-    import json
-    import os
-    import re
-
-    from mini_etl_project_spark.queries import _DEFER_NEW
-
-    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    sampled: set[str] = set()
-    for f in glob.glob(os.path.join(root, "CORRECTNESS_r*.json")):
-        if re.search(r"_r(\d+)", os.path.basename(f)):
-            try:
-                sampled.update(json.load(open(f)))
-            except (OSError, ValueError):
-                continue
-    order = list(QUERIES)
-    pos = {n: i for i, n in enumerate(order)}
-    never = [n for n in order if n not in sampled and n not in set(_DEFER_NEW)]
-    if not never:  # fully drained: deferral is moot
-        return
-    last_never = max(pos[n] for n in never)
-    for n in _DEFER_NEW:
-        if n in pos and n not in sampled:
-            assert pos[n] > last_never, (n, pos[n], last_never)
-
-
 def test_coverage_doc_names_resolve():
     """Every `q_*` name cited in COVERAGE.md resolves to a registered
     query — a doc/registry drift (rename, removal) can't sit silently

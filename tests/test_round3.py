@@ -128,12 +128,13 @@ def test_asof_no_match_vs_null_payload(spark):
 
 
 def test_lsh_exact_sign_buckets_partitioning_invariant(spark):
-    """exact_sign bucketing must not depend on partition layout."""
+    """LSH bucketing (exact-decimal sign) must not depend on partition
+    layout."""
     from mini_etl_project_spark.operators.similarity import RandomHyperplaneLSH
     from mini_etl_project_spark.session import load_table
 
     e = load_table(spark, "/root/testdata/sf0.001", "embeddings").limit(50)
-    lsh = RandomHyperplaneLSH(dim=64, bits=3, tables=2, exact_sign=True)
+    lsh = RandomHyperplaneLSH(dim=64, bits=3, tables=2)
     a = lsh.add_buckets(
         e.repartition(1).select(F.col("vec_id").alias("id"), F.col("embedding").alias("v")), "v"
     )

@@ -134,10 +134,41 @@ def test_add_buckets_match_numpy_signs(spark):
             assert vid < 0 or all(abs(d) > 1e-9 for d in dots)
             want[(vid, t)] = sum(1 << b for b, d in enumerate(dots) if d >= 0)
     assert want[(-1, 0)] == (1 << bits) - 1  # zero vector: every dot is 0 >= 0
-    for exact in (False, True):
-        lsh = RandomHyperplaneLSH(dim=dim, bits=bits, tables=tables, exact_sign=exact)
-        got = {
-            (r.vec_id, r.table): r.bucket
-            for r in lsh.add_buckets(vecs, "embedding").collect()
-        }
-        assert got == want, exact
+    lsh = RandomHyperplaneLSH(dim=dim, bits=bits, tables=tables)
+    got = {
+        (r.vec_id, r.table): r.bucket
+        for r in lsh.add_buckets(vecs, "embedding").collect()
+    }
+    assert got == want
+
+
+def test_bucket_sign_is_the_decimal_dot_sign(spark):
+    """A dot whose per-term products all round to 0 at DECIMAL scale 10
+    is 0 for the exact-decimal sign (bit set, as the DuckDB oracles
+    decide it) even though its double fold is negative."""
+    from mini_etl_project_spark.operators.similarity import (
+        RandomHyperplaneLSH,
+        _hyperplane,
+    )
+
+    dim, bits, tables = 64, 3, 2
+    plane = _hyperplane(dim, 0, 0)
+    vec = [-1e-12 if p >= 0 else 1e-12 for p in plane]
+    double_fold = 0.0
+    for x, p in zip(vec, plane):
+        double_fold += x * p
+    assert double_fold < 0
+    assert sum(_dec_term(x * p) for x, p in zip(vec, plane)) == 0
+    want = {
+        t: sum(
+            1 << b
+            for b in range(bits)
+            if sum(_dec_term(x * p) for x, p in zip(vec, _hyperplane(dim, t, b))) >= 0
+        )
+        for t in range(tables)
+    }
+    assert want[0] & 1
+    df = spark.createDataFrame([(1, vec)], "vec_id long, embedding array<double>")
+    lsh = RandomHyperplaneLSH(dim=dim, bits=bits, tables=tables)
+    got = {r.table: r.bucket for r in lsh.add_buckets(df, "embedding").collect()}
+    assert got == want
