@@ -89,6 +89,39 @@ def _hyperplane(dim: int, table: int, bit: int) -> list[float]:
     return out
 
 
+def hyperplane_sigs_sql(
+    bits: int | str, tables: int, dim: int, sources: dict[str, str]
+) -> str:
+    """DuckDB twin of ``RandomHyperplaneLSH(dim, bits, tables).add_buckets``
+    for oracle SQL: the text of a ``planes`` CTE (``_hyperplane`` in SQL)
+    and, per ``name: relation`` in *sources*, a CTE ``name(vec_id, tbl,
+    bucket)`` of that relation's ``embedding`` signatures. *bits* is a SQL
+    expression (a literal, or a scalar subquery over an earlier CTE). The
+    caller writes the ``WITH`` and any CTEs around it."""
+    planes = f"""planes AS (
+  SELECT t.t AS tbl, b.b AS bit, d.d AS dim,
+         (('0x' || substr(md5('rhp:' || t.t || ':' || b.b || ':' || d.d),
+                          1, 16))::UBIGINT::DOUBLE
+          / 9223372036854775808.0 - 1.0) AS w
+  FROM (SELECT {bits} AS n) k,
+       unnest(generate_series(0, {tables - 1})) t(t),
+       unnest(generate_series(0, k.n - 1)) b(b),
+       unnest(generate_series(0, {dim - 1})) d(d))"""
+    sigs = [
+        f"""{name} AS (
+  SELECT vec_id, tbl,
+         SUM(CASE WHEN dot >= 0 THEN (1::BIGINT << bit) ELSE 0 END) AS bucket
+  FROM (SELECT e.vec_id, p.tbl, p.bit,
+               SUM(CAST(CAST(e.embedding[p.dim + 1] AS DOUBLE) * p.w
+                        AS DECIMAL(38,10))) AS dot
+        FROM {rel} e, planes p
+        GROUP BY e.vec_id, p.tbl, p.bit)
+  GROUP BY vec_id, tbl)"""
+        for name, rel in sources.items()
+    ]
+    return ",\n".join([planes, *sigs])
+
+
 class RandomHyperplaneLSH:
     """Sign-random-projection LSH for cosine similarity (X4).
 

@@ -18,7 +18,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from mini_etl_project_spark.queries import query
-from mini_etl_project_spark.queries.helpers import davg, dsum, sql_davg, sql_dsum
+from mini_etl_project_spark.queries.helpers import (
+    davg,
+    dsum,
+    exact_sum,
+    sql_davg,
+    sql_dsum,
+)
 from mini_etl_project_spark.session import load_table
 
 # --------------------------------------------------------------------------
@@ -172,8 +178,8 @@ def q14_promo_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     return j.agg(
         (
             F.lit(100.00)
-            * F.sum(promo.cast("decimal(38,6)")).cast("double")
-            / F.sum(disc.cast("decimal(38,6)")).cast("double")
+            * exact_sum(promo)
+            / exact_sum(disc)
         ).alias("promo_revenue_pct"),
         F.count("*").alias("n_rows"),
     )

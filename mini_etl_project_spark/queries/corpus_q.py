@@ -26,9 +26,10 @@ from mini_etl_project_spark.operators.dedup import (
     minhash_signatures,
     shingle_rows,
 )
+from mini_etl_project_spark.operators.similarity import hyperplane_sigs_sql
 from mini_etl_project_spark.operators.textops import quality_score, tokens
 from mini_etl_project_spark.queries import query
-from mini_etl_project_spark.queries.helpers import sql_davg
+from mini_etl_project_spark.queries.helpers import davg, sql_davg
 from mini_etl_project_spark.session import load_table
 
 # Portable 60-bit hash (see operators/textops.py::hash64).
@@ -166,10 +167,7 @@ def q_corpus_pretrain(spark: SparkSession, sf_dir: str) -> DataFrame:
     return final.groupBy("lang", "source").agg(
         F.count(F.lit(1)).alias("n_docs"),
         F.sum("n_tok").cast("bigint").alias("sum_tokens"),
-        (
-            F.sum(F.col("quality").cast("decimal(38,6)")).cast("double")
-            / F.count(F.col("quality"))
-        ).alias("mean_quality"),
+        davg("quality", "mean_quality"),
     )
 
 
@@ -1586,6 +1584,7 @@ def q_corpus_margin_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
 # tests/test_round11b.py::test_ingest_exactly_once_two_batches.
 
 _INGEST_TAU = 0.35
+_INGEST_SIGS = hyperplane_sigs_sql(4, 4, 64, {"sig_vi": "v_inc", "sig_ve": "v_ex"})
 
 _INGEST_ORACLE = f"""
 WITH base AS (
@@ -1672,34 +1671,7 @@ v_inc AS (
   SELECT vec_id, embedding FROM vecs WHERE vec_id IN (SELECT id FROM surv2)),
 v_ex AS (
   SELECT vec_id, embedding FROM vecs WHERE vec_id % 3 <> 0),
-planes AS (
-  SELECT t.t AS tbl, b.b AS bit, d.d AS dim,
-         (('0x' || substr(md5('rhp:' || t.t || ':' || b.b || ':' || d.d),
-                          1, 16))::UBIGINT::DOUBLE
-          / 9223372036854775808.0 - 1.0) AS w
-  FROM unnest(generate_series(0, 3)) t(t),
-       unnest(generate_series(0, 3)) b(b),
-       unnest(generate_series(0, 63)) d(d)),
-sig_vi AS (
-  SELECT vec_id, tbl,
-         SUM(CASE WHEN dot >= 0 THEN (1::BIGINT << bit) ELSE 0 END)
-           AS bucket
-  FROM (SELECT e.vec_id, p.tbl, p.bit,
-               SUM(CAST(CAST(e.embedding[p.dim + 1] AS DOUBLE) * p.w
-                        AS DECIMAL(38,10))) AS dot
-        FROM v_inc e, planes p
-        GROUP BY e.vec_id, p.tbl, p.bit)
-  GROUP BY vec_id, tbl),
-sig_ve AS (
-  SELECT vec_id, tbl,
-         SUM(CASE WHEN dot >= 0 THEN (1::BIGINT << bit) ELSE 0 END)
-           AS bucket
-  FROM (SELECT e.vec_id, p.tbl, p.bit,
-               SUM(CAST(CAST(e.embedding[p.dim + 1] AS DOUBLE) * p.w
-                        AS DECIMAL(38,10))) AS dot
-        FROM v_ex e, planes p
-        GROUP BY e.vec_id, p.tbl, p.bit)
-  GROUP BY vec_id, tbl),
+{_INGEST_SIGS},
 scand AS (
   SELECT DISTINCT a.vec_id AS inc_id, b.vec_id AS ex_id
   FROM sig_vi a JOIN sig_ve b ON a.tbl = b.tbl AND a.bucket = b.bucket),

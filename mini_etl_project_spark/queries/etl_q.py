@@ -278,8 +278,8 @@ def q_etl_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     q = F.col("l_quantity")
     s = l.agg(
         F.count("*").alias("n"),
-        F.sum(q.cast("decimal(38,6)")).cast("double").alias("s_qty"),
-        F.sum((q * q).cast("decimal(38,6)")).cast("double").alias("ss_qty"),
+        dsum(q, "s_qty"),
+        dsum(q * q, "ss_qty"),
         F.min(q).alias("min_qty"),
         F.max(q).alias("max_qty"),
         F.min("l_shipdate").alias("min_ship"),
@@ -629,9 +629,7 @@ def q_etl_winsorize(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(out).cast("bigint").alias("n_clamped"),
         F.first("lo").alias("lo"),
         F.first("hi").alias("hi"),
-        F.sum(clamped.cast("decimal(38,6)"))
-        .cast("double")
-        .alias("winsorized_sum"),
+        dsum(clamped, "winsorized_sum"),
     )
 
 

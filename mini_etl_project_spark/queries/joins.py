@@ -474,9 +474,7 @@ def q_join_nullsafe(spark: SparkSession, sf_dir: str) -> DataFrame:
     joined = left.join(right, F.col("lk").eqNullSafe(F.col("rk")))
     return joined.groupBy(F.col("lk").alias("k")).agg(
         F.count("*").alias("n"),
-        F.sum(F.col("o_totalprice").cast("decimal(38,6)"))
-        .cast("double")
-        .alias("price_sum"),
+        dsum("o_totalprice", "price_sum"),
     )
 
 
@@ -578,8 +576,8 @@ def q_join_temporal(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return matched.groupBy("version").agg(
         F.count("*").alias("n_events"),
-        F.sum(F.col("value").cast("decimal(38,6)")).cast("double").alias("value_sum"),
-        F.sum(F.col("bal").cast("decimal(38,6)")).cast("double").alias("bal_sum"),
+        dsum("value", "value_sum"),
+        dsum("bal", "bal_sum"),
     )
 
 

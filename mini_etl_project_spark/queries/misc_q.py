@@ -219,7 +219,7 @@ def q_window_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
         e.groupBy(F.window("ts", "1 hour", "30 minutes").alias("w"))
         .agg(
             F.count("*").alias("n_events"),
-            F.sum(F.col("value").cast("decimal(38,6)")).cast("double").alias("sum_value"),
+            dsum("value", "sum_value"),
         )
         .select(F.col("w.start").alias("window_start"), "n_events", "sum_value")
     )

@@ -16,7 +16,7 @@ from pyspark.sql import functions as F
 from mini_etl_project_spark.operators.kmeans import lloyd_fixed_point
 from mini_etl_project_spark.operators.rank import global_rank
 from mini_etl_project_spark.queries import query
-from mini_etl_project_spark.queries.helpers import DEC
+from mini_etl_project_spark.queries.helpers import dsum
 from mini_etl_project_spark.queries.helpers import (
     sql_dec_to_double as _sql_dec_to_double,
 )
@@ -3286,16 +3286,8 @@ def q_ml_stratified_ate(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count("*").cast("bigint").alias("n_s"),
         F.sum("t").cast("bigint").alias("c1"),
         F.sum(1 - F.col("t")).cast("bigint").alias("c0"),
-        F.sum(
-            F.when(F.col("t") == 1, F.col("y")).otherwise(0).cast(DEC)
-        )
-        .cast("double")
-        .alias("sy1"),
-        F.sum(
-            F.when(F.col("t") == 0, F.col("y")).otherwise(0).cast(DEC)
-        )
-        .cast("double")
-        .alias("sy0"),
+        dsum(F.when(F.col("t") == 1, F.col("y")).otherwise(0), "sy1"),
+        dsum(F.when(F.col("t") == 0, F.col("y")).otherwise(0), "sy0"),
     )
     n_total = strata.agg(F.sum("n_s").cast("bigint").alias("n_total"))
     terms = strata.filter((F.col("c1") > 0) & (F.col("c0") > 0)).select(

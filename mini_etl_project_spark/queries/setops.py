@@ -274,9 +274,7 @@ def q_setop_union_reconcile(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count("*").alias("n"),
         F.count("bal").alias("n_bal"),
         F.count("price").alias("n_price"),
-        F.sum(F.coalesce("bal", "price").cast("decimal(38,6)"))
-        .cast("double")
-        .alias("amount_sum"),
+        dsum(F.coalesce("bal", "price"), "amount_sum"),
     )
 
 

@@ -18,6 +18,7 @@ from pyspark.sql import functions as F
 
 from mini_etl_project_spark.operators.similarity import (
     RandomHyperplaneLSH,
+    hyperplane_sigs_sql,
     topk_exact,
 )
 from mini_etl_project_spark.queries import query
@@ -76,29 +77,14 @@ def q_sim_topk_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 # not just the scoring: the LSH path is hash-checked end-to-end.
 
 _LSH_BITS, _LSH_TABLES = 3, 4
+_LSH_SIGS = hyperplane_sigs_sql(_LSH_BITS, _LSH_TABLES, _DIM, {"sigs": "embeddings"})
 
 
 def _lsh_topk_oracle(bits: int, tables: int) -> str:
     """DuckDB twin of ``RandomHyperplaneLSH(_DIM, bits, tables).topk``."""
+    sigs = hyperplane_sigs_sql(bits, tables, _DIM, {"sigs": "embeddings"})
     return f"""
-WITH planes AS (
-  SELECT t.t AS tbl, b.b AS bit, d.d AS dim,
-         (('0x' || substr(md5('rhp:' || t.t || ':' || b.b || ':' || d.d),
-                          1, 16))::UBIGINT::DOUBLE
-          / 9223372036854775808.0 - 1.0) AS w
-  FROM unnest(generate_series(0, {tables - 1})) t(t),
-       unnest(generate_series(0, {bits - 1})) b(b),
-       unnest(generate_series(0, {_DIM - 1})) d(d)),
-bitdots AS (
-  SELECT e.vec_id, p.tbl, p.bit,
-         SUM(CAST(CAST(e.embedding[p.dim + 1] AS DOUBLE) * p.w
-                  AS DECIMAL(38,10))) AS dot
-  FROM embeddings e, planes p
-  GROUP BY e.vec_id, p.tbl, p.bit),
-sigs AS (
-  SELECT vec_id, tbl,
-         SUM(CASE WHEN dot >= 0 THEN (1::BIGINT << bit) ELSE 0 END) AS bucket
-  FROM bitdots GROUP BY vec_id, tbl),
+WITH {sigs},
 cand AS (
   SELECT DISTINCT q.vec_id AS query_id, c.vec_id AS neighbor_id
   FROM sigs q JOIN sigs c ON q.tbl = c.tbl AND q.bucket = c.bucket
@@ -641,24 +627,7 @@ def q_sim_mmr_select(spark: SparkSession, sf_dir: str) -> DataFrame:
 # is proven end-to-end, not just row-counted.
 
 _ANN_RECALL_ORACLE = f"""
-WITH planes AS (
-  SELECT t.t AS tbl, b.b AS bit, d.d AS dim,
-         (('0x' || substr(md5('rhp:' || t.t || ':' || b.b || ':' || d.d),
-                          1, 16))::UBIGINT::DOUBLE
-          / 9223372036854775808.0 - 1.0) AS w
-  FROM unnest(generate_series(0, {_LSH_TABLES - 1})) t(t),
-       unnest(generate_series(0, {_LSH_BITS - 1})) b(b),
-       unnest(generate_series(0, {_DIM - 1})) d(d)),
-bitdots AS (
-  SELECT e.vec_id, p.tbl, p.bit,
-         SUM(CAST(CAST(e.embedding[p.dim + 1] AS DOUBLE) * p.w
-                  AS DECIMAL(38,10))) AS dot
-  FROM embeddings e, planes p
-  GROUP BY e.vec_id, p.tbl, p.bit),
-sigs AS (
-  SELECT vec_id, tbl,
-         SUM(CASE WHEN dot >= 0 THEN (1::BIGINT << bit) ELSE 0 END) AS bucket
-  FROM bitdots GROUP BY vec_id, tbl),
+WITH {_LSH_SIGS},
 cand AS (
   SELECT DISTINCT q.vec_id AS query_id, c.vec_id AS neighbor_id
   FROM sigs q JOIN sigs c ON q.tbl = c.tbl AND q.bucket = c.bucket
@@ -790,24 +759,7 @@ def q_sim_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
 _HARDNEG_THRESHOLD = 0.5
 
 _HARDNEG_ORACLE = f"""
-WITH planes AS (
-  SELECT t.t AS tbl, b.b AS bit, d.d AS dim,
-         (('0x' || substr(md5('rhp:' || t.t || ':' || b.b || ':' || d.d),
-                          1, 16))::UBIGINT::DOUBLE
-          / 9223372036854775808.0 - 1.0) AS w
-  FROM unnest(generate_series(0, {_LSH_TABLES - 1})) t(t),
-       unnest(generate_series(0, {_LSH_BITS - 1})) b(b),
-       unnest(generate_series(0, {_DIM - 1})) d(d)),
-bitdots AS (
-  SELECT e.vec_id, p.tbl, p.bit,
-         SUM(CAST(CAST(e.embedding[p.dim + 1] AS DOUBLE) * p.w
-                  AS DECIMAL(38,10))) AS dot
-  FROM embeddings e, planes p
-  GROUP BY e.vec_id, p.tbl, p.bit),
-sigs AS (
-  SELECT vec_id, tbl,
-         SUM(CASE WHEN dot >= 0 THEN (1::BIGINT << bit) ELSE 0 END) AS bucket
-  FROM bitdots GROUP BY vec_id, tbl),
+WITH {_LSH_SIGS},
 cand AS (
   SELECT DISTINCT q.vec_id AS query_id, c.vec_id AS neighbor_id
   FROM sigs q JOIN sigs c ON q.tbl = c.tbl AND q.bucket = c.bucket
@@ -939,29 +891,15 @@ def _semdedup_bits(n: int) -> int:
     return max(len(bin(max(n // 64, 1))) - 2, 3)
 
 
+_SEMDEDUP_SIGS = hyperplane_sigs_sql(
+    "(SELECT bits FROM params)", _LSH_TABLES, _DIM, {"sigs": "embeddings"}
+)
+
 _SEMDEDUP_ORACLE = f"""
 WITH params AS (
   SELECT GREATEST(LENGTH(BIN(GREATEST(COUNT(*) // 64, 1))), 3) AS bits
   FROM embeddings),
-planes AS (
-  SELECT t.t AS tbl, b.b AS bit, d.d AS dim,
-         (('0x' || substr(md5('rhp:' || t.t || ':' || b.b || ':' || d.d),
-                          1, 16))::UBIGINT::DOUBLE
-          / 9223372036854775808.0 - 1.0) AS w
-  FROM params,
-       unnest(generate_series(0, {_LSH_TABLES - 1})) t(t),
-       unnest(generate_series(0, params.bits - 1)) b(b),
-       unnest(generate_series(0, {_DIM - 1})) d(d)),
-bitdots AS (
-  SELECT e.vec_id, p.tbl, p.bit,
-         SUM(CAST(CAST(e.embedding[p.dim + 1] AS DOUBLE) * p.w
-                  AS DECIMAL(38,10))) AS dot
-  FROM embeddings e, planes p
-  GROUP BY e.vec_id, p.tbl, p.bit),
-sigs AS (
-  SELECT vec_id, tbl,
-         SUM(CASE WHEN dot >= 0 THEN (1::BIGINT << bit) ELSE 0 END) AS bucket
-  FROM bitdots GROUP BY vec_id, tbl),
+{_SEMDEDUP_SIGS},
 cand AS (
   SELECT DISTINCT a.vec_id AS id_a, b.vec_id AS id_b
   FROM sigs a JOIN sigs b ON a.tbl = b.tbl AND a.bucket = b.bucket

@@ -19,7 +19,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from mini_etl_project_spark.queries import query
-from mini_etl_project_spark.queries.helpers import dsum, sql_dsum
+from mini_etl_project_spark.queries.helpers import dsum, exact_sum, sql_dsum
 from mini_etl_project_spark.session import load_table
 
 # -- OHLC downsampling (open/high/low/close per series per bucket) ---------
@@ -2694,10 +2694,7 @@ def q_ts_rescaled_range(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type", F.col("sz").cast("bigint").alias("chunk_size")
     ).agg(
         F.count("*").cast("bigint").alias("n_blocks"),
-        (
-            F.sum(F.col("rs").cast("decimal(38,6)")).cast("double")
-            / F.count("*")
-        ).alias("mean_rs"),
+        (exact_sum("rs") / F.count("*")).alias("mean_rs"),
     )
 
 
@@ -4875,7 +4872,7 @@ FROM terms
 
 @query("q_ts_ljung_box", _ljung_oracle())
 def q_ts_ljung_box(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from mini_etl_project_spark.queries.helpers import DEC, dec_to_double
+    from mini_etl_project_spark.queries.helpers import dec_to_double
 
     d = _daily_cents(spark, sf_dir)
     s = d.agg(
@@ -4925,7 +4922,7 @@ def q_ts_ljung_box(spark: SparkSession, sf_dir: str) -> DataFrame:
         (
             F.min("n").cast("double")
             * (F.min("n") + 2)
-            * F.sum(F.col("term").cast(DEC)).cast("double")
+            * exact_sum("term")
         ).alias("q_stat"),
     )
 

@@ -10,7 +10,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from mini_etl_project_spark.queries import query
-from mini_etl_project_spark.queries.helpers import dsum, sql_dsum
+from mini_etl_project_spark.queries.helpers import davg, dsum, sql_dsum
 from mini_etl_project_spark.session import load_table
 
 # -- Q18 shape: large-volume customers (HAVING + IN aggregate subquery) ----
@@ -148,12 +148,7 @@ def q22_idle_balances(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load_table(spark, sf_dir, "orders").filter(
         F.col("o_orderdate") >= F.lit("1999-01-01").cast("timestamp")
     )
-    avg_bal = c.filter(F.col("c_acctbal") > 0).agg(
-        (
-            F.sum(F.col("c_acctbal").cast("decimal(38,6)")).cast("double")
-            / F.count("c_acctbal")
-        ).alias("m")
-    )
+    avg_bal = c.filter(F.col("c_acctbal") > 0).agg(davg("c_acctbal", "m"))
     eligible = (
         c.crossJoin(F.broadcast(avg_bal))
         .filter(F.col("c_acctbal") > F.col("m"))
@@ -163,6 +158,6 @@ def q22_idle_balances(spark: SparkSession, sf_dir: str) -> DataFrame:
         eligible.groupBy((F.col("c_custkey") % 7).alias("bucket"))
         .agg(
             F.count("*").alias("n_cust"),
-            F.sum(F.col("c_acctbal").cast("decimal(38,6)")).cast("double").alias("total_bal"),
+            dsum("c_acctbal", "total_bal"),
         )
     )

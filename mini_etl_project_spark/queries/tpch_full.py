@@ -25,7 +25,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from mini_etl_project_spark.queries import query
-from mini_etl_project_spark.queries.helpers import DEC, dsum, sql_dsum
+from mini_etl_project_spark.queries.helpers import DEC, dsum, exact_sum, sql_dsum
 from mini_etl_project_spark.session import load_table
 
 
@@ -197,8 +197,7 @@ def q08_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("o_year")
         .agg(
             (
-                F.sum(F.col("picked").cast(DEC)).cast("double")
-                / F.sum(F.col("volume").cast(DEC)).cast("double")
+                exact_sum("picked") / exact_sum("volume")
             ).alias("mkt_share")
         )
     )
@@ -280,9 +279,7 @@ def q11_important_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(dsum(F.col("l_extendedprice") * F.col("l_quantity"), "value"))
     )
     total = val.agg(
-        (F.sum(F.col("value").cast(DEC)).cast("double") * F.lit(0.001)).alias(
-            "__threshold"
-        )
+        (exact_sum("value") * F.lit(0.001)).alias("__threshold")
     )
     return (
         val.join(F.broadcast(total))
@@ -387,8 +384,7 @@ def q17_small_quantity(spark: SparkSession, sf_dir: str) -> DataFrame:
         j.withColumn("__thr", threshold)
         .filter(F.col("l_quantity") < F.col("__thr"))
         .agg(
-            (F.sum(F.col("l_extendedprice").cast(DEC)).cast("double") / F.lit(7.0))
-            .alias("avg_yearly")
+            (exact_sum("l_extendedprice") / F.lit(7.0)).alias("avg_yearly")
         )
     )
 

@@ -14,7 +14,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from mini_etl_project_spark.queries import query
-from mini_etl_project_spark.queries.helpers import DEC
+from mini_etl_project_spark.queries.helpers import DEC, dsum
 from mini_etl_project_spark.session import load_table
 
 # -- Q14 ranking family ----------------------------------------------------
@@ -167,7 +167,7 @@ def q_window_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     daily = (
         o.groupBy(F.col("o_orderdate").cast("date").alias("order_day"))
         .agg(
-            F.sum(F.col("o_totalprice").cast(DEC)).cast("double").alias("day_rev"),
+            dsum("o_totalprice", "day_rev"),
             F.count("*").alias("n"),
         )
     )
